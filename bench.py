@@ -234,8 +234,9 @@ def tail_line(base: dict, budget: int = TAIL_BUDGET, pin: tuple | list = ()) -> 
     """The single stdout JSON line, guaranteed ≤ ``budget`` chars.
 
     Per-family subtotals and the headline total always fit; per-query
-    entries are added until the budget is reached (the full per-query
-    dict is in bench_full.json, referenced by ``queries_full``).
+    entries are added in order, each one that would overflow the budget
+    skipped (the full per-query dict is in bench_full.json, referenced
+    by ``queries_full``).
 
     Entry order (r16, VERDICT r15 item 3): the ``pin`` names — the
     queries the PREVIOUS round's driver-parsed tail reported — are
@@ -272,7 +273,7 @@ def tail_line(base: dict, budget: int = TAIL_BUDGET, pin: tuple | list = ()) -> 
         trial["queries_omitted"] = len(times) - len(trial["queries"])
         t_line = json.dumps(trial, separators=(",", ":"))
         if len(t_line) > budget:
-            break
+            continue  # a shorter entry later in the order may still fit
         slim, line = trial, t_line
     return line
 

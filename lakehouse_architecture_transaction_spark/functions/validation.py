@@ -59,9 +59,20 @@ class FkCheck:
 
 @dataclass
 class ValidationResult:
-    valid: DataFrame
-    rejected: DataFrame
+    #: Every input row with its first failure in ``error_col`` (null =
+    #: valid); ``valid`` and ``rejected`` are the two filters over it,
+    #: so a caller that persists it runs the scan, rules and FK joins
+    #: once for both sides.
+    flagged: DataFrame
     error_col: str = "validation_errors"
+
+    @property
+    def valid(self) -> DataFrame:
+        return self.flagged.filter(F.col(self.error_col).isNull()).drop(self.error_col)
+
+    @property
+    def rejected(self) -> DataFrame:
+        return self.flagged.filter(F.col(self.error_col).isNotNull())
 
     def rejected_with_meta(self, source: str) -> DataFrame:
         """Rejected rows enriched like the reference's rejected zone
@@ -82,7 +93,8 @@ def validate(
 ) -> ValidationResult:
     """Apply rules in order (first failure wins, matching the
     reference's chained ``when`` — scripts/glue/script.py:102-109),
-    then FK checks, then split valid/rejected.
+    then FK checks, then split valid/rejected (two filters over the
+    returned ``flagged`` frame).
 
     One narrow projection + at most one join per FK check; the whole
     thing stays inside whole-stage codegen except the joins.
@@ -107,9 +119,7 @@ def validate(
         err = F.when(pred, F.lit(msg)).otherwise(err)
 
     flagged = out.withColumn(error_col, err).drop(*[f for f, _ in join_flags])
-    valid = flagged.filter(F.col(error_col).isNull()).drop(error_col)
-    rejected = flagged.filter(F.col(error_col).isNotNull())
-    return ValidationResult(valid=valid, rejected=rejected, error_col=error_col)
+    return ValidationResult(flagged, error_col)
 
 
 def enforce_schema(df: DataFrame, schema) -> DataFrame:

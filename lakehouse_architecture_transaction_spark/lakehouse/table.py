@@ -45,18 +45,53 @@ except ImportError:
     _HAVE_DELTA = False
 
 
+def _hidden(name: str) -> bool:
+    """Names Spark's file listing skips: ``.``-prefixed entries
+    (checksums, staging dirs) and ``_``-prefixed ones (``_temporary``,
+    ``_SUCCESS``, ``_versions``) unless they are ``col=value``
+    partition directories."""
+    return name.startswith(".") or (name.startswith("_") and "=" not in name)
+
+
+def _data_files(target: str) -> list[str]:
+    """The parquet files a Spark read of ``target`` sees, in walk order
+    (files sorted within each directory). A crashed writer's
+    ``_temporary/`` or a hidden staging dir under ``target`` is not
+    part of the table."""
+    out = []
+    for root, dirs, files in os.walk(target):
+        dirs[:] = [d for d in dirs if not _hidden(d)]
+        out += [os.path.join(root, f) for f in sorted(files) if f.endswith(".parquet") and not _hidden(f)]
+    return out
+
+
 def _parquet_footer_rows(target: str) -> int:
     """Row count from parquet footers only — no Spark job, no data
     read. Used for commit-log metadata so a commit doesn't pay a
     second full-table scan."""
     import pyarrow.parquet as pq
 
-    total = 0
-    for root, _dirs, files in os.walk(target):
-        for f in files:
-            if f.endswith(".parquet"):
-                total += pq.ParquetFile(os.path.join(root, f)).metadata.num_rows
-    return total
+    return sum(pq.ParquetFile(f).metadata.num_rows for f in _data_files(target))
+
+
+def _read_snapshot(spark: SparkSession, target: str) -> DataFrame:
+    """Read a snapshot directory; prefer the schema sidecar.
+
+    The sidecar (written by ``LakeTable._write``) makes two things work
+    that bare inference cannot: an EMPTY PARTITIONED snapshot (the
+    partitioned writer emits no data files for an empty frame, so
+    there is no footer to infer from — r9 degenerate-sweep finding),
+    and at scale it skips the footer-sampling schema inference
+    entirely. Snapshots written before the sidecar existed fall back
+    to inference unchanged."""
+    sidecar = os.path.join(target, "_schema.json")
+    if os.path.exists(sidecar):
+        from pyspark.sql.types import StructType
+
+        with open(sidecar) as f:
+            schema = StructType.fromJson(json.load(f))
+        return spark.read.schema(schema).parquet(target)
+    return spark.read.parquet(target)
 
 
 class LakeTable:
@@ -206,36 +241,29 @@ class LakeTable:
             return self.latest_version() is not None
         return os.path.isdir(self.path) and bool(os.listdir(self.path))
 
-    def read(self, version: int | None = None) -> DataFrame:
+    def _snapshot_dir(self, version: int | None = None) -> str:
+        """Directory of the current (or time-traveled) snapshot."""
         if self.versioned:
             v = self.latest_version() if version is None else version
             if v is None:
                 raise FileNotFoundError(f"no committed version at {self.path}")
-            return self._read_parquet(self._version_dir(v))
+            return self._version_dir(v)
         if version is not None:
             raise ValueError("time travel requires versioned=True")
-        if _HAVE_DELTA:
-            return self.spark.read.format("delta").load(self.path)
-        return self._read_parquet(self.path)
+        return self.path
 
-    def _read_parquet(self, target: str) -> DataFrame:
-        """Read a snapshot directory; prefer the schema sidecar.
+    def num_rows(self) -> int:
+        """Row count of the current snapshot from the parquet footers —
+        no Spark job (a Delta table counts through ``read()``)."""
+        if _HAVE_DELTA and not self.versioned:  # pragma: no cover - delta not in test image
+            return self.read().count()
+        return _parquet_footer_rows(self._snapshot_dir())
 
-        The sidecar (written by ``_write``) makes two things work that
-        bare inference cannot: an EMPTY PARTITIONED snapshot (the
-        partitioned writer emits no data files for an empty frame, so
-        there is no footer to infer from — r9 degenerate-sweep
-        finding), and at scale it skips the footer-sampling schema
-        inference entirely. Snapshots written before the sidecar
-        existed fall back to inference unchanged."""
-        sidecar = os.path.join(target, "_schema.json")
-        if os.path.exists(sidecar):
-            from pyspark.sql.types import StructType
-
-            with open(sidecar) as f:
-                schema = StructType.fromJson(json.load(f))
-            return self.spark.read.schema(schema).parquet(target)
-        return self.spark.read.parquet(target)
+    def read(self, version: int | None = None) -> DataFrame:
+        target = self._snapshot_dir(version)
+        if _HAVE_DELTA and not self.versioned:
+            return self.spark.read.format("delta").load(target)
+        return _read_snapshot(self.spark, target)
 
     # -- writes --------------------------------------------------------
 
@@ -360,9 +388,7 @@ class LakeTable:
             os.rename(staging, self.path)
             shutil.rmtree(tmp, ignore_errors=True)
             target = self.path
-        return sum(
-            1 for root, _dirs, files in os.walk(target) for f in files if f.endswith(".parquet")
-        )
+        return len(_data_files(target))
 
     def diff(self, from_version: int, to_version: int | None = None) -> DataFrame:
         """Change-data-capture between two committed snapshots (Delta's
@@ -414,16 +440,7 @@ class LakeTable:
         manifest-pruning behavior, served from parquet footer stats
         (see :func:`pruned_read`). Pair with a ``zorder_write``-style
         clustered layout for tight per-file ranges."""
-        if self.versioned:
-            v = self.latest_version() if version is None else version
-            if v is None:
-                raise FileNotFoundError(f"no committed version at {self.path}")
-            target = self._version_dir(v)
-        else:
-            if version is not None:
-                raise ValueError("time travel requires versioned=True")
-            target = self.path
-        return pruned_read(self.spark, target, where)
+        return pruned_read(self.spark, self._snapshot_dir(version), where)
 
     def register_scan(
         self, name: str, where: list[Predicate], version: int | None = None
@@ -566,32 +583,28 @@ def _file_column_ranges(target: str, cols: set[str]) -> list[tuple[str, dict[str
     import pyarrow.parquet as pq
 
     out: list[tuple[str, dict[str, tuple]]] = []
-    for root, _dirs, files in os.walk(target):
-        for fname in sorted(files):
-            if not fname.endswith(".parquet"):
-                continue
-            fpath = os.path.join(root, fname)
-            md = pq.ParquetFile(fpath).metadata
-            ranges: dict[str, tuple] = {}
-            ok: set[str] = set(cols)
-            for rg in range(md.num_row_groups):
-                row_group = md.row_group(rg)
-                for ci in range(row_group.num_columns):
-                    col = row_group.column(ci)
-                    name = col.path_in_schema
-                    if name not in ok:
-                        continue
-                    st = col.statistics
-                    if st is None or not st.has_min_max:
-                        ok.discard(name)
-                        ranges.pop(name, None)
-                        continue
-                    lo, hi = st.min, st.max
-                    if name in ranges:
-                        plo, phi = ranges[name]
-                        lo, hi = min(plo, lo), max(phi, hi)
-                    ranges[name] = (lo, hi)
-            out.append((fpath, ranges))
+    for fpath in _data_files(target):
+        md = pq.ParquetFile(fpath).metadata
+        ranges: dict[str, tuple] = {}
+        ok: set[str] = set(cols)
+        for rg in range(md.num_row_groups):
+            row_group = md.row_group(rg)
+            for ci in range(row_group.num_columns):
+                col = row_group.column(ci)
+                name = col.path_in_schema
+                if name not in ok:
+                    continue
+                st = col.statistics
+                if st is None or not st.has_min_max:
+                    ok.discard(name)
+                    ranges.pop(name, None)
+                    continue
+                lo, hi = st.min, st.max
+                if name in ranges:
+                    plo, phi = ranges[name]
+                    lo, hi = min(plo, lo), max(phi, hi)
+                ranges[name] = (lo, hi)
+        out.append((fpath, ranges))
     return out
 
 
@@ -647,11 +660,7 @@ def pruned_read(
         "files_read": len(keep),
         "files_skipped": len(stats) - len(keep),
     }
-    base = (
-        spark.read.parquet(*keep)
-        if keep
-        else spark.read.parquet(path).limit(0)
-    )
+    base = spark.read.parquet(*keep) if keep else _read_snapshot(spark, path).limit(0)
     import datetime as _dt
     import operator as _op
 

@@ -18,6 +18,12 @@ all inside the DataFrame plans; this file only sequences them and
 returns counts. Retries/alerting/event triggers (the reference's
 Lambda + Step Functions plumbing, scripts/lambda/*.py) are deployment
 concerns outside engine scope.
+
+Each stage reads and validates its batch once: the validated frame is
+cached for the stage, so the rejected count, the merge, the reject
+append and the valid count share one scan of the input and one run of
+the FK joins, and the curated row count comes from parquet footers
+rather than from a rescan of the table.
 """
 
 from __future__ import annotations
@@ -25,6 +31,7 @@ from __future__ import annotations
 import os
 from dataclasses import dataclass, field
 
+from pyspark import StorageLevel
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
@@ -62,37 +69,50 @@ def process_dataset(
     """Run one dataset through validate → dedup → merge → rejected
     append. Returns the stage summary and the CURATED dataframe (read
     back from the lake so downstream FK checks see exactly what was
-    committed, as the reference's sequential job does)."""
+    committed, as the reference's sequential job does).
+
+    The batch is validated once: the flagged frame (every input row
+    with its first failure, if any) is persisted, and the rejected
+    count fills the cache before anything commits. The dedup, the
+    upsert, the reject append and the valid count then read the cache
+    instead of re-running the landing scan, the rules and the FK
+    joins. ``table_rows`` comes from the curated table's parquet
+    footers (:meth:`LakeTable.num_rows`), not from a scan. The cache is
+    released when the stage ends, whether it succeeded or raised."""
     res = validate(df, rules=spec.rules, fk_checks=spec.fk_checks)
-    valid = dedup_exact(res.valid, keys=spec.keys)
+    res.flagged.persist(StorageLevel.MEMORY_AND_DISK)
+    try:
+        rejected = res.rejected_with_meta(source=spec.name)
+        n_rejected = rejected.count()
+        valid = dedup_exact(res.valid, keys=spec.keys)
 
-    table = LakeTable(
-        spark,
-        os.path.join(lake_root, "curated", spec.name),
-        keys=spec.keys,
-        partition_by=spec.partition_by,
-    )
-    table.upsert(valid)
+        table = LakeTable(
+            spark,
+            os.path.join(lake_root, "curated", spec.name),
+            keys=spec.keys,
+            partition_by=spec.partition_by,
+        )
+        table.upsert(valid)
 
-    rejected = res.rejected_with_meta(source=spec.name)
-    rejected_zone = LakeTable(
-        spark,
-        os.path.join(lake_root, "rejected", spec.name),
-        keys=spec.keys,
-    )
-    n_rejected = rejected.count()
-    if n_rejected:
-        rejected_zone.append(rejected)
+        if n_rejected:
+            rejected_zone = LakeTable(
+                spark,
+                os.path.join(lake_root, "rejected", spec.name),
+                keys=spec.keys,
+            )
+            rejected_zone.append(rejected)
+        n_valid = valid.count()
+    finally:
+        res.flagged.unpersist()
 
-    curated = table.read()
     return (
         StageResult(
             name=spec.name,
-            valid_rows=valid.count(),
+            valid_rows=n_valid,
             rejected_rows=n_rejected,
-            table_rows=curated.count(),
+            table_rows=table.num_rows(),
         ),
-        curated,
+        table.read(),
     )
 
 

@@ -117,6 +117,21 @@ def test_tail_line_pins_previous_round_entries_first(tmp_path):
     assert "ghost_query" not in parsed["queries"]
 
 
+def test_tail_line_long_pinned_name_does_not_hide_later_pins():
+    # An entry that would overflow the budget is skipped, not the end
+    # of packing: the shorter pinned names after it still get in.
+    times = {f"q{i:02d}": float(i) for i in range(20)}
+    long_name = "x" * 400
+    times[long_name] = 100.0
+    base = _base(times)
+    fitted = len(tail_line(base, budget=10**6, pin=list(times)))
+    budget = fitted - len(long_name) - 8  # room for everything but the long entry
+    parsed = json.loads(tail_line(base, budget=budget, pin=[long_name, "q00", "q01"]))
+    assert long_name not in parsed["queries"]
+    assert {"q00", "q01"} <= set(parsed["queries"])
+    assert parsed["queries_omitted"] == 1
+
+
 def test_prev_round_tail_names_reads_highest_round(tmp_path):
     from bench import prev_round_tail_names
 

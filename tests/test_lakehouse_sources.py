@@ -27,6 +27,45 @@ def test_laketable_create_upsert_roundtrip(spark, tmp_path):
     assert out == {1: "a", 2: "B", 3: "c"}
 
 
+def test_num_rows_ignores_files_spark_does_not_read(spark, tmp_path):
+    # A crashed append leaves part files under _temporary/, and hidden
+    # staging dirs or files can sit in a table directory too; Spark's
+    # reader skips them, so the footer count and pruned scans must too.
+    import shutil
+
+    def plant(target: str, sample: str) -> None:
+        for rel in ("_temporary/0/part-00000.parquet", ".staging/part-00000.parquet", "_stray.parquet", ".part.parquet"):
+            os.makedirs(os.path.dirname(os.path.join(target, rel)), exist_ok=True)
+            shutil.copy(sample, os.path.join(target, rel))
+
+    rows = spark.createDataFrame([(1, "a", "x"), (2, "b", "y"), (3, "c", "x")], "k int, v string, p string")
+    rows.coalesce(1).write.parquet(str(tmp_path / "sample"))
+    sample = next(str(f) for f in (tmp_path / "sample").iterdir() if f.name.endswith(".parquet"))
+    plain = LakeTable(spark, str(tmp_path / "plain"), keys=["k"])
+    plain.create(rows)
+    parted = LakeTable(spark, str(tmp_path / "parted"), keys=["k"], partition_by="p")
+    parted.create(rows)
+    versioned = LakeTable(spark, str(tmp_path / "versioned"), keys=["k"], versioned=True)
+    versioned.create(rows)
+    versioned.upsert(spark.createDataFrame([(4, "d", "y")], "k int, v string, p string"))
+    empty = LakeTable(spark, str(tmp_path / "empty"), keys=["k"], partition_by="p")
+    empty.create(rows.limit(0))
+
+    for t, target in (
+        (plain, plain.path),
+        (parted, os.path.join(parted.path, "p=x")),
+        (versioned, versioned._version_dir(versioned.latest_version())),
+        (empty, empty.path),
+    ):
+        plant(t.path, sample)
+        plant(target, sample)
+        n = t.read().count()
+        assert t.num_rows() == n, t.path
+        scanned, report = t.scan([("k", ">=", 0)])
+        assert scanned.count() == n and report["files_total"] == report["files_read"]
+    assert [plain.num_rows(), parted.num_rows(), versioned.num_rows(), empty.num_rows()] == [3, 3, 4, 0]
+
+
 def test_laketable_append(spark, tmp_path):
     path = str(tmp_path / "rejected_zone")
     t = LakeTable(spark, path, keys=["k"])

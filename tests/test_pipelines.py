@@ -6,6 +6,8 @@ valid/rejected splits and RI enforcement)."""
 from __future__ import annotations
 
 import pyspark.sql.functions as F
+import pytest
+from pyspark import StorageLevel
 
 from lakehouse_architecture_transaction_spark.catalog import load_table
 from lakehouse_architecture_transaction_spark.pipelines import run_reference_pipeline, summary_df
@@ -219,3 +221,131 @@ def test_stale_ingested_sidecar_never_suppresses_new_drop(spark, sf_dir, tmp_pat
     curated = LakeTable(spark, str(lake / "curated" / "products"), keys=["p_partkey"])
     assert curated.read().count() > 0  # the new file WAS ingested
     assert not os.path.exists(str(landing / "products_x.parquet.ingested"))
+
+
+# ------------------------------------------------ one validation per stage
+
+ITEMS_SCHEMA = "l_orderkey long, l_linenumber int, l_partkey long, l_shipdate string"
+#: A first batch: 6 rows pass the checks (two of them repeat a key, so
+#: 4 survive the dedup), 2 fail a rule and 2 carry an orphan FK.
+ITEMS_BATCH = [
+    (1, 1, 10, "d1"),
+    (1, 2, 11, "d1"),
+    (2, 1, 12, "d1"),
+    (3, 1, 10, "d1"),
+    (1, 1, 10, "d1"),  # exact duplicate
+    (2, 1, 11, "d2"),  # same key, other values
+    (None, 1, 10, "d1"),  # null key
+    (4, 1, 10, None),  # null ship date
+    (9, 1, 10, "d1"),  # orphan order
+    (5, 1, 99, "d1"),  # orphan product
+]
+#: A second batch merged over the first: one update, one insert and its
+#: duplicate, one orphan order and one null ship date.
+ITEMS_REMERGE = [
+    (3, 1, 11, "d3"),
+    (5, 1, 12, "d3"),
+    (5, 1, 12, "d3"),
+    (7, 1, 10, "d3"),
+    (2, 2, 10, None),
+]
+
+#: Spark jobs one order_items-shaped re-merge stage may launch: the
+#: rejected count (which fills the validation cache, with the two FK
+#: broadcasts), the merge rewrite, the reject append and the valid
+#: count. A new eager action inside process_dataset has to raise this
+#: on purpose.
+ITEMS_STAGE_JOB_BUDGET = 15
+
+
+def _items_stage(spark, tmp_path):
+    """Curated orders (keys 1..5) and products (10..12), and the
+    order_items spec that FK-checks against both."""
+    from lakehouse_architecture_transaction_spark.functions.validation import FkCheck, not_null
+    from lakehouse_architecture_transaction_spark.lakehouse.table import LakeTable
+    from lakehouse_architecture_transaction_spark.pipelines import DatasetSpec
+
+    lake = str(tmp_path / "lake")
+    orders = LakeTable(spark, f"{lake}/curated/orders", keys=["o_orderkey"])
+    orders.create(spark.createDataFrame([(k,) for k in range(1, 6)], "o_orderkey long"))
+    products = LakeTable(spark, f"{lake}/curated/products", keys=["p_partkey"])
+    products.create(spark.createDataFrame([(k,) for k in (10, 11, 12)], "p_partkey long"))
+    spec = DatasetSpec(
+        name="order_items",
+        keys=["l_orderkey", "l_linenumber"],
+        rules=[not_null("l_orderkey"), not_null("l_linenumber"), not_null("l_shipdate", "Invalid timestamp")],
+        fk_checks=[
+            FkCheck("l_orderkey", orders.read(), "o_orderkey", "Invalid order reference"),
+            FkCheck("l_partkey", products.read(), "p_partkey", "Invalid product reference"),
+        ],
+    )
+    return lake, spec
+
+
+def test_stage_counts_match_the_lake(spark, tmp_path):
+    # valid_rows, rejected_rows and table_rows come from the cached
+    # validation and the parquet footers; each must equal what a
+    # direct read of the lake shows, on the first load and a re-merge.
+    from lakehouse_architecture_transaction_spark.lakehouse.table import LakeTable
+    from lakehouse_architecture_transaction_spark.pipelines import process_dataset
+
+    lake, spec = _items_stage(spark, tmp_path)
+    curated = LakeTable(spark, f"{lake}/curated/order_items", keys=spec.keys)
+    rejected = LakeTable(spark, f"{lake}/rejected/order_items", keys=spec.keys)
+    expected = [(4, 4, 4), (2, 2, 5)]  # (valid, rejected, table) per batch
+    for rows, (n_valid, n_rejected, n_table) in zip((ITEMS_BATCH, ITEMS_REMERGE), expected):
+        batch = spark.createDataFrame(rows, ITEMS_SCHEMA)
+        deduped_valid = {
+            (r[0], r[1]) for r in rows if None not in r and r[0] <= 5 and r[2] in (10, 11, 12)
+        }
+        before = rejected.read().count() if rejected.exists() else 0
+        res, curated_df = process_dataset(spark, batch, spec, lake)
+        assert res.valid_rows == len(deduped_valid) == n_valid
+        assert res.rejected_rows == rejected.read().count() - before == n_rejected
+        assert res.table_rows == curated.read().count() == curated_df.count() == n_table
+        assert res.table_rows == curated.num_rows()
+    out = {(r.l_orderkey, r.l_linenumber): (r.l_partkey, r.l_shipdate) for r in curated.read().collect()}
+    assert out[(3, 1)] == (11, "d3") and out[(5, 1)] == (12, "d3")
+
+
+def test_stage_job_budget(spark, tmp_path):
+    # One validation per stage: the landing scan, rules and FK joins
+    # run once into a cache and every later action reads it. Pinned so
+    # a new eager action in a stage is a reviewed change.
+    from lakehouse_architecture_transaction_spark.pipelines import process_dataset
+
+    lake, spec = _items_stage(spark, tmp_path)
+    process_dataset(spark, spark.createDataFrame(ITEMS_BATCH, ITEMS_SCHEMA), spec, lake)
+    batch = spark.createDataFrame(ITEMS_REMERGE, ITEMS_SCHEMA)
+    sc, group = spark.sparkContext, f"stage-budget-{tmp_path.name}"
+    sc.setJobGroup(group, group)
+    try:
+        process_dataset(spark, batch, spec, lake)
+    finally:
+        sc.setLocalProperty("spark.jobGroup.id", None)
+    assert 0 < len(sc.statusTracker().getJobIdsForGroup(group)) <= ITEMS_STAGE_JOB_BUDGET
+
+
+def test_stage_releases_its_cache(spark, tmp_path):
+    # The stage's validation cache is gone when the stage returns, and
+    # also when it raises part-way (here: a batch whose columns no
+    # longer match the curated table fails in the merge, after the
+    # cache was filled).
+    from lakehouse_architecture_transaction_spark.functions.validation import validate
+    from lakehouse_architecture_transaction_spark.pipelines import process_dataset
+
+    jsc = spark.sparkContext._jsc
+    lake, spec = _items_stage(spark, tmp_path)
+    good = spark.createDataFrame(ITEMS_BATCH, ITEMS_SCHEMA)
+    bad = good.withColumn("l_comment", F.lit("x"))
+    for batch, raises in ((good, False), (good, False), (bad, True)):
+        held = jsc.getPersistentRDDs().size()
+        if raises:
+            with pytest.raises(ValueError, match="column mismatch"):
+                process_dataset(spark, batch, spec, lake)
+        else:
+            process_dataset(spark, batch, spec, lake)
+        assert jsc.getPersistentRDDs().size() == held
+        # no cached plan left that a fresh validation would hit
+        flagged = validate(batch, rules=spec.rules, fk_checks=spec.fk_checks).flagged
+        assert flagged.storageLevel == StorageLevel.NONE
