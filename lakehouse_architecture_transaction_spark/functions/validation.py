@@ -10,17 +10,19 @@ dropped) and a rejected set (column kept, plus ``rejection_time`` /
 Scale-critical difference from the reference: referential-integrity
 checks there collect() the reference keys to the driver and use
 ``isin`` (tests/functions.py:29-30) — that dies on a 100 TB fact
-table. Here RI is a broadcast (or shuffle) LEFT JOIN against the
-distinct key set: fully distributed, no driver materialization, and
-Catalyst picks broadcast vs shuffle-hash by size/AQE.
+table. Here RI is a broadcast LEFT JOIN against the distinct key set:
+fully distributed, and the keys are never collected to one process.
 """
 
 from __future__ import annotations
 
-from dataclasses import dataclass, field
+from dataclasses import dataclass
 
 from pyspark.sql import Column, DataFrame
 from pyspark.sql import functions as F
+
+#: The column carrying each row's first failure (null = valid).
+_ERR = "validation_errors"
 
 
 @dataclass(frozen=True)
@@ -51,7 +53,6 @@ class FkCheck:
     ref: DataFrame
     ref_col: str
     error: str = ""
-    broadcast: bool = True
 
     def message(self) -> str:
         return self.error or f"Invalid {self.fk_col} reference"
@@ -59,20 +60,19 @@ class FkCheck:
 
 @dataclass
 class ValidationResult:
-    #: Every input row with its first failure in ``error_col`` (null =
-    #: valid); ``valid`` and ``rejected`` are the two filters over it,
-    #: so a caller that persists it runs the scan, rules and FK joins
-    #: once for both sides.
+    #: Every input row with its first failure in ``validation_errors``
+    #: (null = valid); ``valid`` and ``rejected`` are the two filters
+    #: over it, so a caller that persists it runs the scan, rules and
+    #: FK joins once for both sides.
     flagged: DataFrame
-    error_col: str = "validation_errors"
 
     @property
     def valid(self) -> DataFrame:
-        return self.flagged.filter(F.col(self.error_col).isNull()).drop(self.error_col)
+        return self.flagged.filter(F.col(_ERR).isNull()).drop(_ERR)
 
     @property
     def rejected(self) -> DataFrame:
-        return self.flagged.filter(F.col(self.error_col).isNotNull())
+        return self.flagged.filter(F.col(_ERR).isNotNull())
 
     def rejected_with_meta(self, source: str) -> DataFrame:
         """Rejected rows enriched like the reference's rejected zone
@@ -82,15 +82,7 @@ class ValidationResult:
         )
 
 
-_ERR = "validation_errors"
-
-
-def validate(
-    df: DataFrame,
-    rules: list[Rule] = (),
-    fk_checks: list[FkCheck] = (),
-    error_col: str = _ERR,
-) -> ValidationResult:
+def validate(df: DataFrame, rules: list[Rule] = (), fk_checks: list[FkCheck] = ()) -> ValidationResult:
     """Apply rules in order (first failure wins, matching the
     reference's chained ``when`` — scripts/glue/script.py:102-109),
     then FK checks, then split valid/rejected (two filters over the
@@ -104,8 +96,7 @@ def validate(
     for i, fk in enumerate(fk_checks):
         flag = f"__fk_ok_{i}"
         keys = fk.ref.select(F.col(fk.ref_col).alias(fk.fk_col)).distinct().withColumn(flag, F.lit(True))
-        keys = F.broadcast(keys) if fk.broadcast else keys
-        out = out.join(keys, on=fk.fk_col, how="left")
+        out = out.join(F.broadcast(keys), on=fk.fk_col, how="left")
         join_flags.append((flag, fk.message()))
 
     err: Column = F.lit(None).cast("string")
@@ -118,8 +109,7 @@ def validate(
     for pred, msg in reversed(conds):
         err = F.when(pred, F.lit(msg)).otherwise(err)
 
-    flagged = out.withColumn(error_col, err).drop(*[f for f, _ in join_flags])
-    return ValidationResult(flagged, error_col)
+    return ValidationResult(out.withColumn(_ERR, err).drop(*[f for f, _ in join_flags]))
 
 
 def enforce_schema(df: DataFrame, schema) -> DataFrame:

@@ -11,12 +11,25 @@ importable the same API routes to a real DeltaTable merge (transaction
 log, file-level pruning). The merge itself is the join-based operator
 in operators/merge.py — identical logical plan either way.
 
-``versioned=True`` switches to copy-on-write snapshots: every commit
-writes a fresh ``_versions/v%08d`` directory and atomically advances
-the ``_LATEST`` pointer — giving Delta's two user-visible transaction
-behaviors (time travel via ``read(version=)``, and readers never
-seeing a half-written table because old snapshot files are immutable)
-without the Delta log format. ``vacuum()`` is the retention knob.
+One commit rule serves every write that replaces the table's
+contents (``create``, ``overwrite``, the parquet ``upsert``,
+``compact`` and the versioned ``append``), in ``LakeTable._replace``:
+
+- ``versioned=True``: copy-on-write snapshots. The commit writes a
+  fresh ``_versions/v%08d`` directory and then atomically advances the
+  ``_LATEST`` pointer — Delta's two user-visible transaction behaviors
+  (time travel via ``read(version=)``, and readers never seeing a
+  half-written table because old snapshot files are immutable) without
+  the Delta log format. ``vacuum()`` is the retention knob.
+- a plain table that does not exist yet is written in place;
+- any other plain table is materialized in a hidden sibling staging
+  directory and swapped in with two renames. The new contents may be a
+  lazy plan over the files being replaced (a merge or compaction reads
+  the table it rewrites), so an in-place overwrite would corrupt the
+  plan's own source mid-read.
+
+The plain ``append`` adds files to the table directory and writes no
+schema sidecar.
 
 Scale notes: a full-outer-join merge rewrites the table — that is
 what Delta does logically too (copy-on-write); Delta wins at scale by
@@ -152,7 +165,7 @@ class LakeTable:
                 out.append(int(d[1:]))
         return out
 
-    def _commit(self, df: DataFrame, operation: str = "write") -> int:
+    def _commit(self, df: DataFrame, operation: str) -> int:
         """Write the next snapshot and atomically advance the pointer.
         The write happens BEFORE the pointer moves, so a crashed commit
         leaves an orphan directory, never a visible broken table; the
@@ -160,9 +173,11 @@ class LakeTable:
         never describes a version that was never visible (a crash
         between advance and append loses only the log line, and
         ``describe_history`` tolerates that by keying on versions)."""
-        next_v = (self.latest_version() or 0) + 1 if self.latest_version() is not None else 0
-        self._write(df, self._version_dir(next_v))
-        n_rows = _parquet_footer_rows(self._version_dir(next_v))
+        latest = self.latest_version()
+        next_v = 0 if latest is None else latest + 1
+        target = self._version_dir(next_v)
+        self._write(df, target)
+        n_rows = _parquet_footer_rows(target)
         tmp = self._pointer_path() + ".tmp"
         with open(tmp, "w") as f:
             f.write(str(next_v))
@@ -267,14 +282,16 @@ class LakeTable:
 
     # -- writes --------------------------------------------------------
 
-    def _write(self, df: DataFrame, target: str) -> None:
-        writer = df.write.mode("overwrite")
+    def _writer(self, df: DataFrame):
+        """A writer for ``df`` in the table's partitioning and format."""
+        writer = df.write
         if self.partition_by and self.partition_by in df.columns:
             writer = writer.partitionBy(self.partition_by)
-        if _HAVE_DELTA:
-            writer.format("delta").save(target)
-        else:
-            writer.parquet(target)
+        return writer.format("delta" if _HAVE_DELTA else "parquet")
+
+    def _write(self, df: DataFrame, target: str) -> None:
+        self._writer(df).mode("overwrite").save(target)
+        if not _HAVE_DELTA:
             # after the data write: overwrite mode has already cleared
             # the directory, so the sidecar always describes THIS
             # snapshot (partition column included — the explicit-schema
@@ -283,13 +300,26 @@ class LakeTable:
             with open(os.path.join(target, "_schema.json"), "w") as f:
                 f.write(df.schema.json())
 
+    def _replace(self, df: DataFrame, operation: str) -> int:
+        """Make ``df`` the table's contents under the module's commit
+        rule. Returns the committed version (0 on a plain table)."""
+        if self.versioned:
+            return self._commit(df, operation=operation)
+        if not self.exists():
+            self._write(df, self.path)
+            return 0
+        tmp = tempfile.mkdtemp(prefix=".replace-", dir=os.path.dirname(os.path.abspath(self.path)))
+        staging = os.path.join(tmp, "data")
+        self._write(df, staging)
+        os.rename(self.path, os.path.join(tmp, "old"))
+        os.rename(staging, self.path)
+        shutil.rmtree(tmp, ignore_errors=True)
+        return 0
+
     def create(self, df: DataFrame) -> None:
         """Initial load (reference scripts/glue/script.py:219-227)."""
         self._check_constraints(df)
-        if self.versioned:
-            self._commit(df, operation="create")
-            return
-        self._write(df, self.path)
+        self._replace(df, "create")
 
     def overwrite(self, df: DataFrame, operation: str = "overwrite") -> int:
         """Full-replace commit: the whole table becomes ``df`` as a
@@ -298,28 +328,9 @@ class LakeTable:
         refresh primitive for derived tables (e.g. the persisted ANN
         index, lakehouse/ann_index.py) where merge-on-key semantics
         would never delete rows that fell out of the new build.
-
-        Safe for read-then-overwrite: on a non-versioned table,
-        ``df`` may lazily derive from reading this very table, so the
-        replacement is staged to a sibling temp dir and atomically
-        swapped in (same discipline as the non-versioned upsert) —
-        never an in-place truncating write that would corrupt the
-        plan's own source mid-read."""
+        ``df`` may derive from reading this very table."""
         self._check_constraints(df)
-        if self.versioned:
-            return self._commit(df, operation=operation)
-        if not self.exists():
-            self._write(df, self.path)
-            return 0
-        parent = os.path.dirname(os.path.abspath(self.path))
-        tmp = tempfile.mkdtemp(prefix=".overwrite-", dir=parent)
-        staging = os.path.join(tmp, "data")
-        self._write(df, staging)
-        old = os.path.join(tmp, "old")
-        os.rename(self.path, old)
-        os.rename(staging, self.path)
-        shutil.rmtree(tmp, ignore_errors=True)
-        return 0
+        return self._replace(df, operation)
 
     def upsert(self, source: DataFrame, evolve_schema: bool = False) -> None:
         """MERGE ``source`` on the key columns; creates on first call
@@ -332,16 +343,7 @@ class LakeTable:
             self.create(source)
             return
         self._check_constraints(source)
-        if self.versioned:
-            # Copy-on-write: read the current snapshot, merge, commit a
-            # new immutable snapshot — no swap needed, old versions
-            # remain readable (time travel).
-            self._commit(
-                merge_upsert(self.read(), source, keys=self.keys, evolve_schema=evolve_schema),
-                operation="merge",
-            )
-            return
-        if _HAVE_DELTA:  # pragma: no cover - delta not in test image
+        if _HAVE_DELTA and not self.versioned:  # pragma: no cover - delta not in test image
             dt = DeltaTable.forPath(self.spark, self.path)
             cond = " AND ".join(f"existing.{k} = updates.{k}" for k in self.keys)
             (
@@ -352,18 +354,7 @@ class LakeTable:
                 .execute()
             )
             return
-        merged = merge_upsert(self.read(), source, keys=self.keys, evolve_schema=evolve_schema)
-        # Materialize next to the table, then atomically swap: the
-        # source plan reads the files being replaced, so an in-place
-        # overwrite would corrupt mid-read.
-        parent = os.path.dirname(os.path.abspath(self.path))
-        tmp = tempfile.mkdtemp(prefix=".merge-", dir=parent)
-        staging = os.path.join(tmp, "data")
-        self._write(merged, staging)
-        old = os.path.join(tmp, "old")
-        os.rename(self.path, old)
-        os.rename(staging, self.path)
-        shutil.rmtree(tmp, ignore_errors=True)
+        self._replace(merge_upsert(self.read(), source, keys=self.keys, evolve_schema=evolve_schema), "merge")
 
     def compact(self, target_files: int = 8) -> int:
         """Small-file compaction (Delta OPTIMIZE / bin-packing): the
@@ -371,24 +362,9 @@ class LakeTable:
         add files, and at scale the file count — not the byte count —
         becomes the scan bottleneck (driver listing, task scheduling,
         footer reads). Rewrites the current contents into
-        ``target_files`` coalesced files; with ``versioned=True`` the
-        rewrite is a new snapshot (old files untouched), else an
-        atomic directory swap. Returns the new file count."""
-        df = self.read().coalesce(target_files)
-        if self.versioned:
-            self._commit(df, operation="compact")
-            target = self._version_dir(self.latest_version())
-        else:
-            parent = os.path.dirname(os.path.abspath(self.path))
-            tmp = tempfile.mkdtemp(prefix=".compact-", dir=parent)
-            staging = os.path.join(tmp, "data")
-            self._write(df, staging)
-            old = os.path.join(tmp, "old")
-            os.rename(self.path, old)
-            os.rename(staging, self.path)
-            shutil.rmtree(tmp, ignore_errors=True)
-            target = self.path
-        return len(_data_files(target))
+        ``target_files`` coalesced files. Returns the new file count."""
+        self._replace(self.read().coalesce(target_files), "compact")
+        return len(_data_files(self._snapshot_dir()))
 
     def diff(self, from_version: int, to_version: int | None = None) -> DataFrame:
         """Change-data-capture between two committed snapshots (Delta's
@@ -469,18 +445,9 @@ class LakeTable:
         to versioned ``read()`` and would litter the snapshot area."""
         self._check_constraints(df)
         if self.versioned:
-            if not self.exists():
-                self._commit(df, operation="append")
-            else:
-                self._commit(self.read().unionByName(df), operation="append")
+            self._replace(self.read().unionByName(df) if self.exists() else df, "append")
             return
-        writer = df.write.mode("append")
-        if self.partition_by and self.partition_by in df.columns:
-            writer = writer.partitionBy(self.partition_by)
-        if _HAVE_DELTA:
-            writer.format("delta").save(self.path)
-        else:
-            writer.parquet(self.path)
+        self._writer(df).mode("append").save(self.path)
 
 
 def _interleave_bits(scaled, bits: int):

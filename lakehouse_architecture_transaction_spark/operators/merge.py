@@ -21,6 +21,36 @@ from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 
 
+def _source_wins(target: DataFrame, source: DataFrame, keys: list[str], delete=None) -> DataFrame:
+    """Null-safe full-outer join on ``keys`` in which a present source
+    row wins every column it carries; target columns the source lacks
+    keep their target values. ``delete``, a predicate over the
+    source's columns, removes the matched rows it holds for."""
+    source_cols = set(source.columns)
+    t = target.alias("t")
+    # Literal presence flag: key-nullability is NOT a reliable match
+    # signal (the join is eqNullSafe, so a legitimately-null key
+    # component would mis-classify a matched source row).
+    s = source.withColumn("__src", F.lit(True)).alias("s")
+    cond = [F.col(f"t.{k}").eqNullSafe(F.col(f"s.{k}")) for k in keys]
+    joined = t.join(s, on=cond, how="full_outer")
+    matched = F.col("s.__src").isNotNull()
+    if delete is not None:
+        joined = joined.filter(~(matched & delete))
+    # A source row with a null non-key value must still win over the
+    # matched target value (update-all semantics), so pick by the
+    # source-presence flag rather than coalesce of the value columns.
+    picked = [
+        (
+            F.when(matched, F.col(f"s.{c}")).otherwise(F.col(f"t.{c}")).alias(c)
+            if c in source_cols
+            else F.col(f"t.{c}").alias(c)
+        )
+        for c in target.columns
+    ]
+    return joined.select(*picked)
+
+
 def merge_upsert(
     target: DataFrame, source: DataFrame, keys: list[str], evolve_schema: bool = False
 ) -> DataFrame:
@@ -32,36 +62,13 @@ def merge_upsert(
     columns the source doesn't carry KEEP their target values on
     matched rows rather than being nulled.
     """
-    source_cols = set(source.columns)
     if evolve_schema:
         for f in source.schema.fields:
             if f.name not in target.columns:
                 target = target.withColumn(f.name, F.lit(None).cast(f.dataType))
-        for f in target.schema.fields:
-            if f.name not in source.columns:
-                source = source.withColumn(f.name, F.lit(None).cast(f.dataType))
-    elif set(target.columns) != source_cols:
+    elif set(target.columns) != set(source.columns):
         raise ValueError(f"column mismatch: {target.columns} vs {source.columns}")
-    t = target.alias("t")
-    # Literal presence flag: key-nullability is NOT a reliable match
-    # signal (the join is eqNullSafe, so a legitimately-null key
-    # component would mis-classify a matched source row).
-    s = source.withColumn("__src", F.lit(True)).alias("s")
-    cond = [F.col(f"t.{k}").eqNullSafe(F.col(f"s.{k}")) for k in keys]
-    joined = t.join(s, on=cond, how="full_outer")
-    # A source row with a null non-key value must still win over the
-    # matched target value (update-all semantics), so pick by the
-    # source-presence flag rather than coalesce of the value columns.
-    matched = F.col("s.__src").isNotNull()
-    picked = [
-        (
-            F.when(matched, F.col(f"s.{c}")).otherwise(F.col(f"t.{c}")).alias(c)
-            if c in source_cols
-            else F.col(f"t.{c}").alias(c)  # source doesn't carry it: preserve
-        )
-        for c in target.columns
-    ]
-    return joined.select(*picked)
+    return _source_wins(target, source, keys)
 
 
 def apply_changes(
@@ -85,14 +92,4 @@ def apply_changes(
     value_cols = [c for c in source.columns if c != op_col]
     if set(value_cols) != set(target.columns):
         raise ValueError(f"column mismatch: {target.columns} vs {value_cols}")
-    t = target.alias("t")
-    s = source.withColumn("__src", F.lit(True)).alias("s")
-    cond = [F.col(f"t.{k}").eqNullSafe(F.col(f"s.{k}")) for k in keys]
-    joined = t.join(s, on=cond, how="full_outer")
-    matched = F.col("s.__src").isNotNull()
-    is_delete = matched & (F.col(f"s.{op_col}") == delete_op)
-    picked = [
-        F.when(matched, F.col(f"s.{c}")).otherwise(F.col(f"t.{c}")).alias(c)
-        for c in target.columns
-    ]
-    return joined.filter(~is_delete).select(*picked)
+    return _source_wins(target, source, keys, delete=F.col(f"s.{op_col}") == delete_op)

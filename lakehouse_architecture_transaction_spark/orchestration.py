@@ -25,19 +25,20 @@ from __future__ import annotations
 
 import os
 import shutil
+import time
 import traceback
 from dataclasses import dataclass
 
 from pyspark.sql import SparkSession
 
-from lakehouse_architecture_transaction_spark.functions.validation import FkCheck, not_null, positive
-from lakehouse_architecture_transaction_spark.lakehouse.table import LakeTable
-from lakehouse_architecture_transaction_spark.pipelines import DatasetSpec, process_dataset
+from lakehouse_architecture_transaction_spark.pipelines import DATASET_ORDER, process_dataset, spec_for
 
-#: Processing order: order_items validates against curated dims, so
-#: dims must land first within a cycle (reference
-#: code/step_function_code.json runs the three Glue jobs in sequence).
-DATASET_ORDER = ("products", "orders", "order_items")
+#: The reference "Archive Files" retry policy (code/
+#: step_function_code.json: MaxAttempts 3, BackoffRate 2): these errors
+#: are retried with exponential backoff, anything else propagates.
+MAX_ATTEMPTS = 3
+BACKOFF_RATE = 2.0
+TRANSIENT_ERRORS = (OSError,)
 
 #: Sidecar suffix marking a landing file whose data is already committed
 #: to the lake but whose archive move failed — next cycle retries the
@@ -73,7 +74,7 @@ def _ingested_mark_valid(path: str) -> bool:
 class TriggerResult:
     file: str
     dataset: str
-    status: str  # "archived" | "quarantined" | "ingested_archive_failed" | "skipped"
+    status: str  # "archived" | "quarantined" | "ingested_archive_failed"
     detail: str = ""
     attempts: int = 1
 
@@ -87,59 +88,10 @@ def _dataset_of(filename: str) -> str | None:
     return None
 
 
-def _spec_for(spark: SparkSession, dataset: str, lake_root: str) -> DatasetSpec:
-    if dataset == "products":
-        return DatasetSpec(
-            name="products",
-            keys=["p_partkey"],
-            rules=[not_null("p_partkey"), not_null("p_name", "Null product_name")],
-        )
-    if dataset == "orders":
-        return DatasetSpec(
-            name="orders",
-            keys=["o_orderkey"],
-            rules=[
-                not_null("o_orderkey"),
-                not_null("o_orderdate", "Invalid timestamp"),
-                positive("o_totalprice"),
-            ],
-        )
-    if dataset == "order_items":
-        fk_checks = []
-        for dim, fk_col, ref_col, err in (
-            ("orders", "l_orderkey", "o_orderkey", "Invalid order reference"),
-            ("products", "l_partkey", "p_partkey", "Invalid product reference"),
-        ):
-            dim_table = LakeTable(spark, os.path.join(lake_root, "curated", dim), keys=[ref_col])
-            if not dim_table.exists():
-                raise RuntimeError(
-                    f"order_items requires curated {dim!r} before it can FK-validate "
-                    "(Step Function sequencing)"
-                )
-            fk_checks.append(
-                FkCheck(fk_col=fk_col, ref=dim_table.read(), ref_col=ref_col, error=err)
-            )
-        return DatasetSpec(
-            name="order_items",
-            keys=["l_orderkey", "l_linenumber"],
-            rules=[
-                not_null("l_orderkey"),
-                not_null("l_linenumber"),
-                not_null("l_shipdate", "Invalid timestamp"),
-            ],
-            fk_checks=fk_checks,
-        )
-    raise KeyError(dataset)
-
-
-def _retrying(fn, max_attempts: int, interval_s: float, backoff_rate: float, transient):
-    """Reference "Archive Files" retry policy (code/
-    step_function_code.json: IntervalSeconds 1, MaxAttempts 3,
-    BackoffRate 2): retry ``transient`` errors with exponential
-    backoff; anything else — and the last attempt — propagates.
-    Returns (result, attempts)."""
-    import time
-
+def _retrying(fn, interval_s: float):
+    """Run ``fn`` under the "Archive Files" retry policy, the first
+    retry after ``interval_s`` (the reference's IntervalSeconds 1);
+    the last attempt's error propagates. Returns (result, attempts)."""
     attempt = 1
     while True:
         try:
@@ -148,11 +100,26 @@ def _retrying(fn, max_attempts: int, interval_s: float, backoff_rate: float, tra
             # annotate how far we actually got — a non-transient error on
             # attempt 1 must not be reported as a full retry schedule
             exc._attempts = attempt  # type: ignore[attr-defined]
-            if not isinstance(exc, transient) or attempt >= max_attempts:
+            if not isinstance(exc, TRANSIENT_ERRORS) or attempt >= MAX_ATTEMPTS:
                 raise
             if interval_s:
-                time.sleep(interval_s * (backoff_rate ** (attempt - 1)))
+                time.sleep(interval_s * (BACKOFF_RATE ** (attempt - 1)))
             attempt += 1
+
+
+def _move_into(path: str, zone: str) -> str:
+    """Move a landing file (or parquet directory) into the archive or
+    quarantine ``zone`` and return where it landed: under its own name
+    when that is free, else under the first free ``<stem>.<n><ext>``.
+    A re-dropped name never nests inside, nor overwrites, an earlier
+    drop of the same name."""
+    stem, ext = os.path.splitext(os.path.basename(path))
+    dest, n = os.path.join(zone, stem + ext), 0
+    while os.path.lexists(dest):
+        n += 1
+        dest = os.path.join(zone, f"{stem}.{n}{ext}")
+    shutil.move(path, dest)
+    return dest
 
 
 def process_landing(
@@ -161,10 +128,7 @@ def process_landing(
     archive_root: str,
     error_root: str,
     lake_root: str,
-    max_attempts: int = 3,
     retry_interval_s: float = 1.0,
-    backoff_rate: float = 2.0,
-    transient_exceptions: tuple[type, ...] = (OSError,),
 ) -> list[TriggerResult]:
     """One watcher cycle: pick up every recognized file in the landing
     zone (dependency order), run the per-dataset pipeline, then move
@@ -196,23 +160,15 @@ def process_landing(
 
     results: list[TriggerResult] = []
     for ds, path in drops:
-        attempts = 1
-        already_ingested = _ingested_mark_valid(path)
-        if not already_ingested:
+        if not _ingested_mark_valid(path):
             try:
                 df = spark.read.parquet(path)
-                spec = _spec_for(spark, ds, lake_root)
-                process_dataset(spark, df, spec, lake_root)
+                process_dataset(spark, df, spec_for(spark, ds, lake_root), lake_root)
             except Exception:  # noqa: BLE001 - quarantine ANY pipeline failure, keep the cycle alive
-                dest = os.path.join(error_root, os.path.basename(path))
-                shutil.move(path, dest)
+                _move_into(path, error_root)
                 results.append(
                     TriggerResult(
-                        file=path,
-                        dataset=ds,
-                        status="quarantined",
-                        detail=traceback.format_exc(limit=1),
-                        attempts=attempts,
+                        file=path, dataset=ds, status="quarantined", detail=traceback.format_exc(limit=1)
                     )
                 )
                 continue
@@ -228,14 +184,7 @@ def process_landing(
             # retries the move only; if the move landed, the data file
             # is gone and the orphan cleanup removes the marker
             _write_ingested_mark(path)
-            dest = os.path.join(archive_root, os.path.basename(path))
-            _, attempts = _retrying(
-                lambda: shutil.move(path, dest),
-                max_attempts=max_attempts,
-                interval_s=retry_interval_s,
-                backoff_rate=backoff_rate,
-                transient=transient_exceptions,
-            )
+            dest, attempts = _retrying(lambda: _move_into(path, archive_root), retry_interval_s)
         except Exception as exc:  # noqa: BLE001 - post-ingest: keep in landing, marker => move-only retry
             results.append(
                 TriggerResult(
@@ -243,7 +192,7 @@ def process_landing(
                     dataset=ds,
                     status="ingested_archive_failed",
                     detail=traceback.format_exc(limit=1),
-                    attempts=getattr(exc, "_attempts", attempts),
+                    attempts=getattr(exc, "_attempts", 1),
                 )
             )
             continue
@@ -260,26 +209,3 @@ def process_landing(
         )
     return results
 
-
-def watch(
-    spark: SparkSession,
-    landing_root: str,
-    archive_root: str,
-    error_root: str,
-    lake_root: str,
-    cycles: int = 1,
-    poll_seconds: float = 0.0,
-) -> list[TriggerResult]:
-    """Poll the landing zone for ``cycles`` rounds (the S3-event loop,
-    minus the cloud: moved files never reprocess because the landing
-    zone is drained each cycle)."""
-    import time
-
-    all_results: list[TriggerResult] = []
-    for i in range(cycles):
-        all_results.extend(
-            process_landing(spark, landing_root, archive_root, error_root, lake_root)
-        )
-        if poll_seconds and i + 1 < cycles:
-            time.sleep(poll_seconds)
-    return all_results

@@ -11,7 +11,13 @@ runs the same stage chain the Glue job runs per dataset
     enforce schema → validate (rules + FK checks) → dedup by PK
     → MERGE into the curated lakehouse table
     → append rejected rows (+ rejection_time / source metadata)
-      to the rejected zone, partitioned like the reference's.
+      to the rejected zone, one unpartitioned table per dataset.
+
+Each dataset's contract (keys, rules, FK checks and their error
+strings) is stated once, in :func:`spec_for` — the reference's
+per-dataset config dict (scripts/glue/script.py:100-132). Both entry
+points use it: :func:`run_reference_pipeline` on in-memory frames and
+``orchestration.process_landing`` on landing-zone drops.
 
 Orchestration is deliberately dumb Python: the distributed work is
 all inside the DataFrame plans; this file only sequences them and
@@ -35,7 +41,7 @@ from pyspark import StorageLevel
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
-from lakehouse_architecture_transaction_spark.functions.validation import FkCheck, Rule, validate
+from lakehouse_architecture_transaction_spark.functions.validation import FkCheck, Rule, not_null, positive, validate
 from lakehouse_architecture_transaction_spark.lakehouse.table import LakeTable
 from lakehouse_architecture_transaction_spark.operators.dedup import dedup_exact
 
@@ -49,7 +55,59 @@ class DatasetSpec:
     keys: list[str]
     rules: list[Rule] = field(default_factory=list)
     fk_checks: list[FkCheck] = field(default_factory=list)
-    partition_by: str | None = None
+
+
+#: Processing order: order_items validates against curated dims, so
+#: dims must land first (reference code/step_function_code.json runs
+#: the three Glue jobs in sequence).
+DATASET_ORDER = ("products", "orders", "order_items")
+
+
+def spec_for(spark: SparkSession, dataset: str, lake_root: str) -> DatasetSpec:
+    """The contract of ``dataset``. order_items FK-checks against the
+    CURATED products and orders under ``lake_root`` (the reference
+    validates order_items against the processed dims —
+    scripts/glue/script.py:252-258), so those must exist."""
+    if dataset == "products":
+        return DatasetSpec(
+            name="products",
+            keys=["p_partkey"],
+            rules=[not_null("p_partkey"), not_null("p_name", "Null product_name")],
+        )
+    if dataset == "orders":
+        return DatasetSpec(
+            name="orders",
+            keys=["o_orderkey"],
+            rules=[
+                not_null("o_orderkey"),
+                not_null("o_orderdate", "Invalid timestamp"),
+                positive("o_totalprice"),
+            ],
+        )
+    if dataset != "order_items":
+        raise KeyError(dataset)
+    fk_checks = []
+    for dim, fk_col, ref_col, err in (
+        ("orders", "l_orderkey", "o_orderkey", "Invalid order reference"),
+        ("products", "l_partkey", "p_partkey", "Invalid product reference"),
+    ):
+        dim_table = LakeTable(spark, os.path.join(lake_root, "curated", dim), keys=[ref_col])
+        if not dim_table.exists():
+            raise RuntimeError(
+                f"order_items requires curated {dim!r} before it can FK-validate "
+                "(Step Function sequencing)"
+            )
+        fk_checks.append(FkCheck(fk_col=fk_col, ref=dim_table.read(), ref_col=ref_col, error=err))
+    return DatasetSpec(
+        name="order_items",
+        keys=["l_orderkey", "l_linenumber"],
+        rules=[
+            not_null("l_orderkey"),
+            not_null("l_linenumber"),
+            not_null("l_shipdate", "Invalid timestamp"),
+        ],
+        fk_checks=fk_checks,
+    )
 
 
 @dataclass
@@ -90,7 +148,6 @@ def process_dataset(
             spark,
             os.path.join(lake_root, "curated", spec.name),
             keys=spec.keys,
-            partition_by=spec.partition_by,
         )
         table.upsert(valid)
 
@@ -122,64 +179,17 @@ def run_reference_pipeline(
     orders: DataFrame,
     order_items: DataFrame,
     lake_root: str,
-    product_key: str = "p_partkey",
-    order_key: str = "o_orderkey",
-    item_keys: tuple[str, str] = ("l_orderkey", "l_linenumber"),
 ) -> list[StageResult]:
-    """The reference's three-dataset flow on arbitrary input frames.
-
-    products and orders are curated first; order_items then FK-checks
-    against the CURATED dims (the reference validates order_items
-    against the processed products/orders — scripts/glue/script.py:
-    252-258). Dims are broadcast in the FK anti-joins; at fact-sized
-    reference sets FkCheck(broadcast=False) shuffles instead.
-    """
-    from lakehouse_architecture_transaction_spark.functions.validation import not_null, positive
-
-    results: list[StageResult] = []
-
-    prod_spec = DatasetSpec(
-        name="products",
-        keys=[product_key],
-        rules=[not_null(product_key), not_null("p_name", "Null product_name")],
-    )
-    r, curated_products = process_dataset(spark, products, prod_spec, lake_root)
-    results.append(r)
-
-    order_spec = DatasetSpec(
-        name="orders",
-        keys=[order_key],
-        rules=[
-            not_null(order_key),
-            not_null("o_orderdate", "Invalid timestamp"),
-            positive("o_totalprice"),
-        ],
-    )
-    r, curated_orders = process_dataset(spark, orders, order_spec, lake_root)
-    results.append(r)
-
-    item_spec = DatasetSpec(
-        name="order_items",
-        keys=list(item_keys),
-        rules=[not_null(k) for k in item_keys] + [not_null("l_shipdate", "Invalid timestamp")],
-        fk_checks=[
-            FkCheck(
-                fk_col="l_orderkey",
-                ref=curated_orders,
-                ref_col=order_key,
-                error="Invalid order reference",
-            ),
-            FkCheck(
-                fk_col="l_partkey",
-                ref=curated_products,
-                ref_col=product_key,
-                error="Invalid product reference",
-            ),
-        ],
-    )
-    r, _ = process_dataset(spark, order_items, item_spec, lake_root)
-    results.append(r)
-    return results
+    """The reference's three-dataset flow on arbitrary input frames:
+    each dataset in :data:`DATASET_ORDER` runs through
+    :func:`process_dataset` under its :func:`spec_for` contract, so
+    order_items FK-checks against the dims curated just before it
+    (broadcast in the FK joins)."""
+    frames = {"products": products, "orders": orders, "order_items": order_items}
+    return [
+        process_dataset(spark, frames[ds], spec_for(spark, ds, lake_root), lake_root)[0]
+        for ds in DATASET_ORDER
+    ]
 
 
 def summary_df(spark: SparkSession, results: list[StageResult]) -> DataFrame:

@@ -14,17 +14,43 @@ from lakehouse_architecture_transaction_spark.sources.append import append_datas
 from lakehouse_architecture_transaction_spark.sources.csv import read_csv_enforced
 
 
-def test_laketable_create_upsert_roundtrip(spark, tmp_path):
+@pytest.mark.parametrize(
+    "partition_by,versioned",
+    [(None, False), ("p", False), (None, True), ("p", True)],
+    ids=["plain", "partitioned", "plain-versioned", "partitioned-versioned"],
+)
+def test_laketable_create_upsert_roundtrip(spark, tmp_path, partition_by, versioned):
+    # Every write on every table layout, each read back against the
+    # rows it should leave; no staging directory is left beside the table.
     path = str(tmp_path / "orders_table")
-    t = LakeTable(spark, path, keys=["k"], partition_by="p")
-    t.upsert(spark.createDataFrame([(1, "a", "x"), (2, "b", "y")], "k int, v string, p string"))
-    assert t.exists()
-    # partitioned layout on disk
-    assert any(d.startswith("p=") for d in os.listdir(path))
+    t = LakeTable(spark, path, keys=["k"], partition_by=partition_by, versioned=versioned)
+    schema = "k int, v string, p string"
 
-    t.upsert(spark.createDataFrame([(2, "B", "y"), (3, "c", "x")], "k int, v string, p string"))
-    out = {r["k"]: r["v"] for r in t.read().collect()}
-    assert out == {1: "a", 2: "B", 3: "c"}
+    def rows() -> dict:
+        return {r["k"]: (r["v"], r["p"]) for r in t.read().collect()}
+
+    t.create(spark.createDataFrame([(1, "a", "x"), (2, "b", "y")], schema))
+    assert t.exists()
+    assert rows() == {1: ("a", "x"), 2: ("b", "y")}
+    assert any(d.startswith("p=") for d in os.listdir(t._snapshot_dir())) == bool(partition_by)
+
+    t.upsert(spark.createDataFrame([(2, "B", "y"), (3, "c", "x")], schema))
+    assert rows() == {1: ("a", "x"), 2: ("B", "y"), 3: ("c", "x")}
+
+    t.append(spark.createDataFrame([(4, "d", "y")], schema))
+    expected = {1: ("a", "x"), 2: ("B", "y"), 3: ("c", "x"), 4: ("d", "y")}
+    assert rows() == expected
+
+    # one coalesced file, split once more per partition value
+    assert t.compact(target_files=1) == (2 if partition_by else 1)
+    assert rows() == expected
+
+    t.overwrite(spark.createDataFrame([(5, "e", "x")], schema))
+    assert rows() == {5: ("e", "x")}
+    assert os.listdir(tmp_path) == ["orders_table"]
+    if versioned:
+        ops = [e["operation"] for e in t.describe_history()]
+        assert ops == ["overwrite", "compact", "append", "merge", "create"]
 
 
 def test_num_rows_ignores_files_spark_does_not_read(spark, tmp_path):

@@ -223,6 +223,89 @@ def test_stale_ingested_sidecar_never_suppresses_new_drop(spark, sf_dir, tmp_pat
     assert not os.path.exists(str(landing / "products_x.parquet.ingested"))
 
 
+def test_redropped_names_never_nest_or_overwrite(spark, tmp_path):
+    # The same good name dropped in three cycles and the same corrupt
+    # name in two: each drop lands beside the earlier ones in its zone
+    # (first under its own name, then suffixed), never inside or over them.
+    import os
+
+    from lakehouse_architecture_transaction_spark import orchestration as orch
+    from lakehouse_architecture_transaction_spark.lakehouse.table import LakeTable
+
+    landing, archive, errors, lake = (
+        tmp_path / "landing", tmp_path / "archive", tmp_path / "errors", tmp_path / "lake"
+    )
+    landing.mkdir()
+    for cycle in range(3):
+        batch = [(cycle * 10 + i, f"part{cycle}-{i}") for i in range(4)]
+        spark.createDataFrame(batch, "p_partkey long, p_name string").write.parquet(
+            str(landing / "products_daily.parquet")
+        )
+        if cycle < 2:
+            (landing / "orders_bad.parquet").write_text(f"not parquet, cycle {cycle}")
+        results = orch.process_landing(
+            spark, str(landing), str(archive), str(errors), str(lake), retry_interval_s=0.0
+        )
+        got = sorted((os.path.basename(r.file), r.status) for r in results)
+        want = [("products_daily.parquet", "archived")]
+        if cycle < 2:
+            want.insert(0, ("orders_bad.parquet", "quarantined"))
+        assert got == want
+        assert os.listdir(landing) == []
+
+    archived = ["products_daily.1.parquet", "products_daily.2.parquet", "products_daily.parquet"]
+    assert sorted(os.listdir(archive)) == archived
+    for name in archived:
+        assert all((archive / name / f).is_file() for f in os.listdir(archive / name))
+        assert spark.read.parquet(str(archive / name)).count() == 4
+    assert sorted(os.listdir(errors)) == ["orders_bad.1.parquet", "orders_bad.parquet"]
+    assert (errors / "orders_bad.parquet").read_text() == "not parquet, cycle 0"
+    assert (errors / "orders_bad.1.parquet").read_text() == "not parquet, cycle 1"
+    assert LakeTable(spark, str(lake / "curated" / "products"), keys=["p_partkey"]).num_rows() == 12
+
+
+def test_both_entry_points_leave_the_same_lake(spark, tmp_path):
+    # run_reference_pipeline on frames and process_landing on the same
+    # rows dropped as files share one dataset contract, so they leave
+    # the same curated tables and the same rejected rows.
+    import os
+
+    from lakehouse_architecture_transaction_spark.lakehouse.table import LakeTable
+    from lakehouse_architecture_transaction_spark.orchestration import process_landing
+
+    inputs = {
+        "products": spark.createDataFrame(
+            [(10, "bolt"), (11, "nut"), (12, None), (13, "gear"), (13, "gear")],
+            "p_partkey long, p_name string",
+        ),
+        "orders": spark.createDataFrame(
+            [(1, "2024-01-01", 5.0), (2, "2024-01-02", -1.0), (3, None, 2.0), (4, "2024-01-04", None)],
+            "o_orderkey long, o_orderdate string, o_totalprice double",
+        ),
+        "order_items": spark.createDataFrame(ITEMS_BATCH, ITEMS_SCHEMA),
+    }
+    direct = tmp_path / "direct"
+    run_reference_pipeline(spark, *inputs.values(), lake_root=str(direct))
+
+    landing, landed = tmp_path / "landing", tmp_path / "landed"
+    for ds, df in inputs.items():
+        df.write.parquet(str(landing / f"{ds}_batch.parquet"))
+    results = process_landing(
+        spark, str(landing), str(tmp_path / "archive"), str(tmp_path / "errors"), str(landed)
+    )
+    assert [r.status for r in results] == ["archived"] * 3
+
+    def rows(df) -> list:
+        return sorted((tuple(r) for r in df.collect()), key=repr)
+
+    for ds in inputs:
+        curated = [rows(LakeTable(spark, str(root / "curated" / ds), keys=[]).read()) for root in (direct, landed)]
+        assert curated[0] == curated[1] and curated[0]
+        rejected = [rows(spark.read.parquet(str(root / "rejected" / ds)).drop("rejection_time")) for root in (direct, landed)]
+        assert rejected[0] == rejected[1] and rejected[0]
+    assert os.listdir(landing) == []
+
+
 # ------------------------------------------------ one validation per stage
 
 ITEMS_SCHEMA = "l_orderkey long, l_linenumber int, l_partkey long, l_shipdate string"
