@@ -35,193 +35,10 @@ from lakehouse_architecture_transaction_spark.plans import REGISTRY
 from lakehouse_architecture_transaction_spark.session import get_spark
 from lakehouse_architecture_transaction_spark.measure import force_full_result
 
-#: The headline set, each query tagged with its operator family so the
-#: bench JSON carries per-family subtotals (regressions attributable at
-#: a glance — VERDICT r4 item 8). Weighted toward the shapes that
-#: dominate at scale (scan-agg, fact joins, windows, shingle explosion,
-#: vector search).
-HEADLINE_FAMILIES: dict[str, str] = {
-    "q1_pricing_summary": "tpch",
-    "q3_shipping_priority": "tpch",
-    "q5_local_supplier_volume": "tpch",
-    "q6_revenue_delta": "tpch",
-    "q10_returned_items": "tpch",
-    "top_parts_by_revenue": "tpch",
-    "rollup_revenue": "tpch",
-    "q8_market_share": "tpch",
-    "q13_order_count_distribution": "tpch",
-    "q18_large_volume_customers": "tpch",
-    "q21_sole_late_supplier": "tpch",
-    # window / ranking / customer-value analytics
-    "top3_orders_per_customer": "window",
-    "customer_interpurchase_gaps": "window",
-    "customer_cohort_ltv": "window",
-    "supplier_revenue_pareto": "window",
-    "customer_rfm_segments": "window",
-    "customer_order_span": "window",
-    "orders_pctrank_in_segment": "window",
-    "orders_gap_islands": "window",
-    # event/time-series analytics
-    "sessionize_events": "events",
-    "events_hourly": "events",
-    "events_asof_orders": "events",
-    "events_value_percentiles": "events",
-    "events_retention_cohorts": "events",
-    "events_rolling_distinct_users": "events",
-    "events_daily_anomalies": "events",
-    "events_interarrival_by_type": "events",
-    "events_peak_hour_per_day": "events",
-    "events_session_window": "events",
-    "events_dau_mau_stickiness": "events",
-    # behavioral / sequence mining
-    "events_user_transitions": "behavior",
-    "events_top_paths": "behavior",
-    "orders_market_basket": "behavior",
-    "events_bot_users": "behavior",
-    "nation_yoy_growth": "behavior",
-    # part_pagerank intentionally NOT in the headline: 10 fixed rounds =
-    # 20 sequential stage barriers, which at bench scale is ~10s of pure
-    # scheduler constant (the iterative-op tax emb_kmeans already
-    # represents); the gate still checks it for correctness
-    # ETL parity (validation, merge, SCD2, lakehouse scan)
-    "dedup_pk_lineitem": "etl",
-    "merge_upsert_orders": "etl",
-    "process_order_items_valid": "etl",
-    "scd2_customer_history": "etl",
-    "merge_delete_orders": "etl",
-    "orders_pruned_scan_sql": "etl",
-    "orders_salted_segment_revenue": "etl",
-    "orders_lineitem_bucketed_join": "etl",
-    # document dedup family
-    "docs_minhash_lsh_pairs": "dedup",
-    "docs_simhash": "dedup",
-    "docs_boilerplate": "dedup",
-    "docs_dup_clusters": "dedup",
-    "docs_chunk_dup_docs": "dedup",
-    "docs_dup_cluster_sizes": "dedup",
-    "docs_minhash_jaccard_est": "dedup",
-    "docs_shingle_novelty": "dedup",
-    "emb_semantic_dedup": "dedup",
-    "docs_lsh_precision": "dedup",
-    "docs_lsh_recall": "dedup",
-    "emb_cosine_dup_pairs": "dedup",
-    # text analysis
-    "docs_token_stats": "text",
-    "docs_rolling_hash": "text",
-    "docs_tfidf_top_terms": "text",
-    "docs_vocabulary": "text",
-    "docs_lm_familiarity": "text",
-    "docs_winnowing": "text",
-    "docs_char_chunks": "text",
-    "docs_sentence_chunks": "text",
-    "docs_rare_shingle_score": "text",
-    "docs_top_quality_per_source": "text",
-    "docs_hash_embed": "text",
-    "docs_gopher_quality": "text",
-    # sampling / sharding
-    "docs_shuffled_batches": "sampling",
-    "docs_source_mixture_sample": "sampling",
-    "docs_priority_sample": "sampling",
-    # similarity search
-    "emb_knn_bruteforce": "ann",
-    "emb_ann_lsh": "ann",
-    "emb_ann_ivf": "ann",
-    "emb_ann_sq8": "ann",
-    "emb_product_quantize": "ann",
-    "emb_ann_pq_adc": "ann",
-    "emb_ann_ivfpq": "ann",
-    # embedding QA / linear algebra
-    "emb_kmeans": "emb",
-    "emb_dim_stats": "emb",
-    "emb_pca_project": "emb",
-    "emb_norm_outliers": "emb",
-    "emb_nearest_centroid_confusion": "emb",
-    # multimodal plumbing
-    "mm_features": "mm",
-    # round-7 additions: curation composition, robust stats, graph
-    # similarity/triangles (the wedge join is the one deliberately
-    # data-proportional heavy shape in the headline), PQ audit
-    "docs_curation_pipeline": "text",
-    "docs_char_diversity": "text",
-    "docs_temperature_mixture": "sampling",
-    "events_mad_anomalies": "events",
-    "customer_mktseg_gini": "window",
-    "orders_compacted_scan": "etl",
-    "part_copurchase_jaccard": "graph",
-    "part_copurchase_triangles": "graph",
-    "emb_pq_reconstruction_error": "emb",
-    # round-8 additions: containment dedup, drift/backlog time series,
-    # concentration audits, the full trade matrix, and the STREAMING
-    # pipelines as bounded availableNow runs (their first bench rows)
-    "docs_ngram_containment": "dedup",
-    "events_cusum_drift": "events",
-    "part_supplier_hhi": "tpch",
-    "emb_ivf_cell_balance": "ann",
-    "orders_backlog_daily": "window",
-    "nation_flow_matrix": "tpch",
-    "events_stream_hourly": "streaming",
-    "events_stream_trending": "streaming",
-    "events_stream_sessions": "streaming",
-    "events_stream_dedup": "streaming",
-    # round-9 additions: the final ETL-parity companions (versioned
-    # snapshots/time travel, CSV ingest with corrupt routing, CHECK
-    # constraints, three-dataset pipeline, orchestration, RESTORE/CLONE
-    # — each builds its scenario in a memoized temp zone, so the bench
-    # row prices the full write+read round trip) and the last three
-    # streaming pipelines as bounded availableNow runs
-    "orders_restore_clone_audit": "etl",
-    "orders_snapshot_timetravel_stats": "etl",
-    "orders_constraint_audit": "etl",
-    "orders_csv_roundtrip_stats": "etl",
-    "pipeline_three_dataset_summary": "etl",
-    "orchestration_landing_audit": "etl",
-    "events_stream_clicks": "streaming",
-    "events_stream_enriched": "streaming",
-    "orders_stream_upsert_cdc": "streaming",
-    # round-10 additions: the r10 registration batch — duplicate-span
-    # coverage (hashed-key shuffle), split-leakage + FK-discovery
-    # audits, the two time-series diagnostics, the two vocabulary
-    # reports, and the house stateful sessionizer as a bounded
-    # availableNow run
-    "docs_dup_spans": "dedup",
-    "docs_split_leakage": "dedup",
-    "catalog_inclusion_profile": "etl",
-    "events_seasonal_decompose": "events",
-    "orders_revenue_autocorr": "events",
-    "docs_vocab_growth": "text",
-    "docs_source_distinctive_terms": "text",
-    "events_stream_sessions_stateful": "streaming",
-    # round-11 additions: the r11 registration batch — fulfilment-drift
-    # OLS trend, the survival curve (month-histogram build side),
-    # first/last-touch attribution, the langid confusion matrix, the
-    # LSH pair-similarity QA histogram, the GDPR erasure lifecycle, the
-    # Benford first-digit audit, and the BPE merge table (rows-only)
-    "lineitem_shipdelay_trend": "tpch",
-    "customer_survival_curve": "window",
-    "events_touch_attribution": "behavior",
-    "docs_langid_confusion": "text",
-    "emb_pair_sim_histogram": "dedup",
-    "orders_gdpr_erasure_audit": "etl",
-    "orders_benford_audit": "etl",
-    "docs_bpe_merges": "text",
-    # round-12 additions: the drained r12+r13 queues — order-size and
-    # discount-band profiles, supply-graph degrees, spend-consistency
-    # CV, trade balance, robust price dispersion, audience overlap,
-    # growth accounting, hourly concentration — plus the BPE invariant
-    # companion (shares the trainer memo with docs_bpe_merges)
-    "orders_order_size_histogram": "tpch",
-    "supplier_part_degree_profile": "etl",
-    "customer_order_value_cv": "window",
-    "nation_trade_balance": "tpch",
-    "part_price_dispersion_by_type": "tpch",
-    "events_usertype_overlap": "events",
-    "lineitem_discount_profile": "tpch",
-    "events_growth_accounting": "events",
-    "events_hourly_concentration": "events",
-    "docs_bpe_invariants": "text",
-}
-
-HEADLINE = list(HEADLINE_FAMILIES)
+#: The headline set: every query registered with ``headline=True``, in
+#: registry order. Its family (the plan module that defines it) keys the
+#: per-family subtotals, so regressions are attributable at a glance.
+HEADLINE = [name for name, spec in REGISTRY.items() if spec.headline]
 
 #: The driver's harness keeps only the LAST 2000 chars of bench stdout
 #: (BENCH_r04.json: tail_len 2000, parsed null — round 4's 78-query
@@ -453,11 +270,17 @@ def anchor_drift(prev: dict | None, anchor_mc_s: float) -> tuple[float | None, b
     return ratio, ratio > ANCHOR_DRIFT_MAX or ratio < 1.0 / ANCHOR_DRIFT_MAX
 
 
-def _committed_capture(repo_dir: str) -> dict | None:
+def _committed_capture(repo_dir: str, cpus: int) -> dict | None:
     """The last COMMITTED bench_full.json (git HEAD), falling back to
-    the on-disk file (pre-overwrite) outside a usable git context."""
+    the on-disk file (pre-overwrite) outside a usable git context.
+
+    A capture taken on a different number of CPUs is treated as absent:
+    its anchors and per-query times are not comparable with this run, so
+    the drift, regime-split and geomean fields read None/False instead
+    of comparing across core counts."""
     import subprocess
 
+    prev = None
     try:
         out = subprocess.run(
             ["git", "-C", repo_dir, "show", "HEAD:bench_full.json"],
@@ -466,14 +289,16 @@ def _committed_capture(repo_dir: str) -> dict | None:
             timeout=10,
         )
         if out.returncode == 0 and out.stdout.strip():
-            return json.loads(out.stdout)
+            prev = json.loads(out.stdout)
     except (OSError, ValueError, subprocess.SubprocessError):
         pass
-    try:
-        with open(os.path.join(repo_dir, "bench_full.json")) as f:
-            return json.load(f)
-    except (OSError, ValueError):
-        return None
+    if prev is None:
+        try:
+            with open(os.path.join(repo_dir, "bench_full.json")) as f:
+                prev = json.load(f)
+        except (OSError, ValueError):
+            return None
+    return prev if prev.get("cpus") == cpus else None
 
 
 #: Sub-second queries run min-of-(runs+4) — min-of-7 at the default
@@ -613,7 +438,7 @@ def main() -> None:
 
     families: dict[str, float] = {}
     for name, t in times.items():
-        fam = HEADLINE_FAMILIES[name]
+        fam = REGISTRY[name].family
         families[fam] = round(families.get(fam, 0.0) + t, 4)
 
     sf = os.path.basename(sf_dir.rstrip("/")).replace("sf", "")
@@ -657,7 +482,7 @@ def main() -> None:
     # the capture when the machine was in a different regime — deltas
     # should then come from same-anchor captures (README recipe).
     repo_dir = os.path.dirname(os.path.abspath(__file__))
-    prev_capture = _committed_capture(repo_dir)
+    prev_capture = _committed_capture(repo_dir, cpus)
     drift_ratio, drift_suspect = anchor_drift(prev_capture, anchor_mc_s)
     base["anchor_drift_vs_committed"] = drift_ratio
     base["anchor_drift_suspect"] = drift_suspect

@@ -5,7 +5,7 @@ versioned LakeTables.
 At 100 TB a vector index is not a session artifact — training the
 coarse quantizer and PQ codebooks is iters × corpus-scans plus
 k·dim-cardinality shuffles, so every new session rebuilding it from
-scratch (the session-memo pattern in plans/pipeline_ops.py) pays the
+scratch (the session-memo pattern in plans/ann.py) pays the
 build again. This module makes the index a table with its own
 lifecycle:
 
@@ -38,7 +38,7 @@ freshly-trained one: doubles round-trip parquet exactly, packing
 deterministic sorts, and every downstream fold is order-independent.
 
 The query plans opt in via ``$SPARK_GRAFT_ANN_INDEX_DIR``: when set
-and a store exists for the sf_dir, plans/pipeline_ops.py loads
+and a store exists for the sf_dir, plans/ann.py loads
 instead of training (see default_store / build_store)."""
 
 from __future__ import annotations

@@ -14,7 +14,7 @@ row.
 At equal timestamps the right row sorts first, so the match is
 inclusive (left.ts >= right.ts), matching DuckDB's ASOF semantics.
 The right side must be unique per (key, ts) — dedup upstream with an
-explicit tiebreaker (see plans/analytics.py events_asof_orders).
+explicit tiebreaker (see plans/events.py events_asof_orders).
 """
 
 from __future__ import annotations

@@ -88,7 +88,7 @@ def exact_text_dedup(df: DataFrame, text_col: str, id_col: str) -> DataFrame:
 #
 # Shared expression builders. These return Spark Column expressions via
 # F.expr so the SAME semantic definition is mirrored in the DuckDB
-# oracle strings (plans/pipeline_ops.py) — whitespace tokens, unicode
+# oracle strings (plans/text.py) — whitespace tokens, unicode
 # preserved, empties dropped.
 
 

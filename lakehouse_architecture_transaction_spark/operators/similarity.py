@@ -957,7 +957,7 @@ def sq8_topk(
 
 #: HALF_UP 1e6 quantization of a double inside a SQL lambda — the
 #: int64-exact-numerator discipline of emb_label_covariance (see
-#: plans/pipeline_ops.py _V6_HALF_UP for why sums must stay in BIGINT:
+#: plans/ann.py _V6_HALF_UP for why sums must stay in BIGINT:
 #: DuckDB's int128→double conversion is not correctly rounded).
 _Q6_LAMBDA = (
     "CAST(CAST(CAST({x} AS DECIMAL(18,6)) * CAST(1000000 AS DECIMAL(7,0)) "

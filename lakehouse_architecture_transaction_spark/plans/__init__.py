@@ -1,28 +1,25 @@
-"""Query plan library.
+"""Query plan library, one module per query family.
 
 Importing this package registers every query into
-``lakehouse_architecture_transaction_spark.plans.registry.REGISTRY``; ``__spark_entry__``
-exposes the registry to the driver.
+``lakehouse_architecture_transaction_spark.plans.registry.REGISTRY``; a
+query's family is the name of the module that defines it.
+``__spark_entry__`` exposes the registry through ``queries()`` and
+``oracle_sql()``.
 """
 
 from lakehouse_architecture_transaction_spark.plans import (  # noqa: F401
-    analytics,
-    analytics3,
-    analytics_tpch2,
-    behavior,
-    customer_value,
+    tpch,
+    window,
+    events,
     etl,
-    lakehouse_queries,
-    pipeline_ops,
-    pipeline_ops2,
-    pipeline_ops3,
-    pipeline_ops4,
-    queued_r8,
-    queued_r9,
-    queued_r10,
-    queued_r11,
-    queued_r12,
-    queued_r13,
-    queued_r14,
+    ann,
+    text,
+    dedup,
+    emb,
+    streaming,
+    graph,
+    behavior,
+    sampling,
+    mm,
 )
 from lakehouse_architecture_transaction_spark.plans.registry import REGISTRY, QuerySpec  # noqa: F401

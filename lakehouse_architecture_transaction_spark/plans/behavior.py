@@ -1,11 +1,11 @@
-"""Behavioral / sequence analytics: event-type transitions, top
-session paths, and market-basket co-occurrence.
+"""Behavioral sequence analytics: event-type transitions, top
+session paths, market-basket co-occurrence, bot users, year-over-year
+nation growth and first/last-touch attribution.
 
-The sequence-mining tier of the extension surface (the reference's
-events flow stops at hourly rollups — reference scripts/glue/script.py
-processes batch tables only). Each query follows the registry's
-determinism discipline: exact integer counts, ONE double division per
-ratio, unique-tiebreaker ordering on every top-k.
+The sequence-mining tier beyond the reference's hourly rollups
+(reference scripts/glue/script.py processes batch tables only). Exact
+integer counts, ONE double division per ratio, unique-tiebreaker
+ordering on every top-k.
 """
 
 from __future__ import annotations
@@ -14,8 +14,9 @@ from pyspark.sql import DataFrame, SparkSession, Window
 from pyspark.sql import functions as F
 
 from lakehouse_architecture_transaction_spark.catalog import load_table
+from lakehouse_architecture_transaction_spark.plans.graph import _copurchase_pairs
 from lakehouse_architecture_transaction_spark.plans.registry import register
-
+from lakehouse_architecture_transaction_spark.plans.tpch import _REV, _SUM_REV
 
 @register(
     "events_user_transitions",
@@ -36,6 +37,7 @@ from lakehouse_architecture_transaction_spark.plans.registry import register
     FROM c
     ORDER BY prev_type ASC, next_type ASC
     """,
+    headline=True,
 )
 def events_user_transitions(spark: SparkSession, sf_dir: str) -> DataFrame:
     """First-order Markov transition matrix over per-user event
@@ -80,6 +82,7 @@ _TOP_PATHS = 20
     ORDER BY n_user_days DESC, path ASC
     LIMIT {_TOP_PATHS}
     """,
+    headline=True,
 )
 def events_top_paths(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Top-20 user-day paths: the first 5 event types of each
@@ -138,6 +141,7 @@ _TOP_PAIRS = 20
     ORDER BY n_orders DESC, part_a ASC, part_b ASC
     LIMIT {_TOP_PAIRS}
     """,
+    headline=True,
 )
 def orders_market_basket(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Market-basket pair mining: the top part pairs co-occurring in
@@ -157,69 +161,6 @@ def orders_market_basket(spark: SparkSession, sf_dir: str) -> DataFrame:
         .orderBy(F.col("n_orders").desc(), F.col("part_a").asc(), F.col("part_b").asc())
         .limit(_TOP_PAIRS)
     )
-
-
-_ORDER_PARTS_MEMO: dict[tuple[str, str], DataFrame] = {}
-_COPURCHASE_MEMO: dict[tuple[str, str], DataFrame] = {}
-
-
-def _distinct_order_parts(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """Memoized, MATERIALIZED distinct (order, part) frame — the input
-    every co-purchase-graph query starts from (pair mining, degree
-    tables). Keyed on (applicationId, sf_dir) like the dup-cluster
-    memo: within a session the fact scan + distinct shuffle are paid
-    once, no matter how many graph queries run — exactly what a
-    production pipeline does by materializing the edge list once and
-    fanning analyses out from it."""
-    key = (spark.sparkContext.applicationId, sf_dir)
-    got = _ORDER_PARTS_MEMO.get(key)
-    if got is None:
-        got = (
-            load_table(spark, sf_dir, "lineitem")
-            .select("l_orderkey", "l_partkey")
-            .distinct()
-            .localCheckpoint(eager=True)
-        )
-        _ORDER_PARTS_MEMO[key] = got
-    return got
-
-
-def _copurchase_pairs(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """ONE definition of the co-purchase pair build shared by
-    orders_market_basket, part_pagerank, and the r7 Jaccard/triangle
-    queries: distinct (order, part), orderkey-co-partitioned
-    self-join with part_a < part_b, support count ``w`` per unordered
-    pair. Memoized AND materialized per (applicationId, sf_dir): four
-    registered queries consume this frame (market basket, PageRank,
-    Jaccard, triangles), and each consumes it from ≥2 plan branches —
-    without the shared checkpoint Spark re-runs the whole mining stage
-    per branch per query (replicated unshared subtrees)."""
-    key = (spark.sparkContext.applicationId, sf_dir)
-    got = _COPURCHASE_MEMO.get(key)
-    if got is None:
-        li = _distinct_order_parts(spark, sf_dir)
-        a = li.alias("a")
-        b = li.alias("b")
-        got = (
-            a.join(
-                b,
-                (F.col("a.l_orderkey") == F.col("b.l_orderkey"))
-                & (F.col("a.l_partkey") < F.col("b.l_partkey")),
-            )
-            .select(F.col("a.l_partkey").alias("part_a"), F.col("b.l_partkey").alias("part_b"))
-            .groupBy("part_a", "part_b")
-            .agg(F.count("*").alias("w"))
-            .localCheckpoint(eager=True)
-        )
-        _COPURCHASE_MEMO[key] = got
-    return got
-
-
-# one definition of the money discipline — imported like the other
-# sibling plan modules, so a precision change lands everywhere at once
-from lakehouse_architecture_transaction_spark.plans.analytics import _REV  # noqa: E402
-
-_SUM_REV = f"CAST(CAST(SUM({_REV}) AS DECIMAL(18,4)) AS DOUBLE)"
 
 
 @register(
@@ -242,6 +183,7 @@ _SUM_REV = f"CAST(CAST(SUM({_REV}) AS DECIMAL(18,4)) AS DOUBLE)"
     FROM y
     ORDER BY nation ASC, year ASC
     """,
+    headline=True,
 )
 def nation_yoy_growth(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Year-over-year supplier-nation revenue growth: the
@@ -295,6 +237,7 @@ _BOT_FACTOR = 1.2
           {_BOT_FACTOR} * (CAST(total_events AS DOUBLE) / total_days)
     ORDER BY user_id ASC
     """,
+    headline=True,
 )
 def events_bot_users(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Bot-rate flagging: users whose events-per-active-day exceeds 1.2× the corpus average — the traffic-cleaning filter ahead of any
@@ -321,71 +264,96 @@ def events_bot_users(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
 
 
-_PR_DAMPING, _PR_ITERS = 0.85, 10
+# ------------------------------------------------------------------
+# events_touch_attribution — first/last-touch half-credit units
+# ------------------------------------------------------------------
+
+EVENTS_TOUCH_ATTRIBUTION_ORACLE = """
+WITH p AS (
+    SELECT event_id AS p_id, user_id, ts AS p_ts FROM events WHERE event_type = 'purchase'
+),
+t AS (
+    SELECT user_id, event_id AS t_id, event_type AS t_type, ts AS t_ts
+    FROM events WHERE event_type <> 'purchase'
+),
+w AS (
+    SELECT p.p_id, t.t_id, t.t_type, t.t_ts
+    FROM p JOIN t ON p.user_id = t.user_id
+     AND t.t_ts BETWEEN p.p_ts - INTERVAL 1 HOUR AND p.p_ts
+),
+r AS (
+    SELECT *,
+           ROW_NUMBER() OVER (PARTITION BY p_id ORDER BY t_ts ASC, t_id ASC) AS rf,
+           ROW_NUMBER() OVER (PARTITION BY p_id ORDER BY t_ts DESC, t_id DESC) AS rl
+    FROM w
+),
+credits AS (
+    SELECT t_type, SUM(CASE WHEN rf = 1 THEN 1 ELSE 0 END) AS n_first,
+           SUM(CASE WHEN rl = 1 THEN 1 ELSE 0 END) AS n_last
+    FROM r GROUP BY 1
+)
+SELECT t_type AS event_type,
+       CAST(n_first AS BIGINT) AS n_first,
+       CAST(n_last AS BIGINT) AS n_last,
+       CAST(n_first + n_last AS DOUBLE) / 2.0 AS credit
+FROM credits
+ORDER BY event_type ASC
+"""
 
 
-def _pagerank_oracle() -> str:
-    tele = repr(1.0 - _PR_DAMPING)
-    d = repr(_PR_DAMPING)
-    parts = [
-        "op AS (SELECT DISTINCT l_orderkey, l_partkey FROM lineitem)",
-        """pe AS (
-        SELECT a.l_partkey AS part_a, b.l_partkey AS part_b, COUNT(*) AS w
-        FROM op a JOIN op b ON a.l_orderkey = b.l_orderkey AND a.l_partkey < b.l_partkey
-        GROUP BY 1, 2)""",
-        """e AS (SELECT part_a AS src, part_b AS dst, CAST(w AS DOUBLE) AS w FROM pe
-             UNION ALL SELECT part_b, part_a, CAST(w AS DOUBLE) FROM pe)""",
-        "ow AS (SELECT src, SUM(w) AS outw FROM e GROUP BY src)",
-        "ee AS (SELECT e.src, e.dst, e.w, ow.outw FROM e JOIN ow USING (src))",
-        "nodes AS (SELECT DISTINCT src AS node FROM e)",
-        "nn AS (SELECT COUNT(*) AS n FROM nodes)",
-        "pr0 AS (SELECT node, 1.0 / nn.n AS pr FROM nodes CROSS JOIN nn)",
-    ]
-    for i in range(1, _PR_ITERS + 1):
-        parts.append(
-            f"""c{i} AS (
-        SELECT ee.dst, CAST(floor(p.pr * ee.w / ee.outw * 1e9 + 0.5) AS BIGINT) AS c
-        FROM ee JOIN pr{i - 1} p ON ee.src = p.node)"""
-        )
-        parts.append(
-            f"""pr{i} AS (
-        SELECT nodes.node,
-               {tele} / nn.n + {d} * (CAST(coalesce(s.s, 0) AS DOUBLE) / 1e9) AS pr
-        FROM nodes CROSS JOIN nn
-        LEFT JOIN (SELECT dst, CAST(SUM(c) AS BIGINT) AS s FROM c{i} GROUP BY dst) s
-            ON nodes.node = s.dst)"""
-        )
-    return (
-        "WITH "
-        + ",\n".join(parts)
-        + f"""
-    SELECT node AS part, pr AS pagerank FROM pr{_PR_ITERS}
-    ORDER BY part ASC
-    """
+@register("events_touch_attribution", oracle=EVENTS_TOUCH_ATTRIBUTION_ORACLE, headline=True)
+def events_touch_attribution(spark: SparkSession, sf_dir: str) -> DataFrame:
+    """First/last-touch multi-touch attribution: for each purchase,
+    the non-purchase events of the same user in the preceding hour are
+    its touchpoints; the FIRST touch (position-based "introducer") and
+    the LAST touch ("closer") each earn half a conversion credit —
+    a single-touch window earns both halves. Credits are exact
+    half-units (integer first/last counts, ONE division by 2.0), so
+    the oracle replays them bit-for-bit — the reason this is first/
+    last rather than U-shaped: fractional middle credits 0.2/(n−2)
+    would force order-dependent double sums across the engine
+    boundary. Ties on ts break by event_id in BOTH directions.
+
+    Scale shape: the pair space comes from the bucketed interval join
+    (operators/interval.py — shuffle keyed by (user, time-bucket),
+    never per-user history); the two rank windows run per purchase at
+    window-pair cardinality; the credit aggregate is map-side
+    combinable at event-type cardinality."""
+    from lakehouse_architecture_transaction_spark.operators.interval import (
+        bucketed_interval_join,
     )
 
-
-@register("part_pagerank", oracle=_pagerank_oracle())
-def part_pagerank(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """Part importance by weighted PageRank over the co-purchase graph
-    (operators/graph.py pagerank): nodes are parts, symmetric edges
-    weighted by co-order support (the orders_market_basket pair
-    build), 10 fixed rounds at damping 0.85 — the "which items anchor
-    the catalog" centrality that raw co-occurrence counts miss
-    (a part co-bought with other CENTRAL parts outranks one with the
-    same support from peripheral partners). Every round is two narrow
-    shuffles; the oracle replays all 10 rounds with the same
-    quantized-exact contribution sums."""
-    from lakehouse_architecture_transaction_spark.operators.graph import pagerank
-
-    pe = _copurchase_pairs(spark, sf_dir)
-    edges = pe.select("part_a", "part_b", "w").unionByName(
-        pe.select(
-            F.col("part_b").alias("part_a"), F.col("part_a").alias("part_b"), F.col("w")
-        )
+    ev = load_table(spark, sf_dir, "events")
+    purchases = ev.filter(F.col("event_type") == "purchase").select(
+        F.col("event_id").alias("p_id"), F.col("user_id"), F.col("ts")
     )
-    pr = pagerank(
-        edges, src_col="part_a", dst_col="part_b", weight_col="w",
-        damping=_PR_DAMPING, iters=_PR_ITERS,
+    touches = ev.filter(F.col("event_type") != "purchase").select(
+        F.col("user_id").alias("t_user"),
+        F.col("event_id").alias("t_id"),
+        F.col("event_type").alias("t_type"),
+        F.col("ts").alias("t_ts"),
     )
-    return pr.select(F.col("node").alias("part"), "pagerank").orderBy("part")
+    pairs = bucketed_interval_join(
+        purchases,
+        touches,
+        left_ts="ts",
+        right_ts="t_ts",
+        lower_seconds=-3600,
+        upper_seconds=0,
+        on=[("user_id", "t_user")],
+    )
+    wf = Window.partitionBy("p_id").orderBy(F.col("t_ts").asc(), F.col("t_id").asc())
+    wl = Window.partitionBy("p_id").orderBy(F.col("t_ts").desc(), F.col("t_id").desc())
+    ranked = pairs.withColumn("rf", F.row_number().over(wf)).withColumn(
+        "rl", F.row_number().over(wl)
+    )
+    credits = ranked.groupBy("t_type").agg(
+        F.sum(F.when(F.col("rf") == 1, 1).otherwise(0)).cast("bigint").alias("n_first"),
+        F.sum(F.when(F.col("rl") == 1, 1).otherwise(0)).cast("bigint").alias("n_last"),
+    )
+    return credits.select(
+        F.col("t_type").alias("event_type"),
+        "n_first",
+        "n_last",
+        ((F.col("n_first") + F.col("n_last")).cast("double") / F.lit(2.0)).alias("credit"),
+    ).orderBy("event_type")

@@ -1,11 +1,14 @@
 """Registry of named queries with their DuckDB oracle SQL.
 
 Each operator the engine claims is registered here as a
-``QuerySpec``: a Spark callable ``(spark, sf_dir) -> DataFrame`` plus
+``QuerySpec``: a Spark callable ``(spark, sf_dir) -> DataFrame``,
 (when SQL-expressible) an ANSI-SQL oracle string DuckDB can run on the
-same parquet tables. The driver's correctness gate and the local
-pytest oracle harness both consume this registry, so the engine and
-its oracle can never drift apart silently.
+same parquet tables, its family and its headline flag. The family is
+the plan module that defines the query (``plans/<family>.py``); the
+headline flag puts the query in ``bench.py``'s timed set. The
+correctness gates, the bench and the perf workloads all read this one
+registry, so the engine, its oracle and its bench grouping can never
+drift apart silently.
 
 Determinism discipline (what makes cross-engine value-hashing work):
 - aggregate sums over money/quantity go through DECIMAL casts — exact
@@ -30,16 +33,20 @@ from pyspark.sql import DataFrame, SparkSession
 class QuerySpec:
     name: str
     fn: Callable[[SparkSession, str], DataFrame]
+    family: str
     oracle: str | None = None
-    doc: str = ""
+    headline: bool = False
 
 
 REGISTRY: dict[str, QuerySpec] = {}
 
 
-def register(name: str, oracle: str | None = None, doc: str = ""):
+def register(name: str, oracle: str | None = None, headline: bool = False):
     def deco(fn: Callable[[SparkSession, str], DataFrame]):
-        REGISTRY[name] = QuerySpec(name=name, fn=fn, oracle=oracle, doc=doc or (fn.__doc__ or ""))
+        family = fn.__module__.rsplit(".", 1)[-1]
+        REGISTRY[name] = QuerySpec(
+            name=name, fn=fn, family=family, oracle=oracle, headline=headline
+        )
         return fn
 
     return deco

@@ -266,7 +266,7 @@ def sessionize_stateful(
     watermark: str = "30 minutes",
 ) -> DataFrame:
     """Custom stateful operator: per-user gap sessions maintained in
-    group state (the streaming twin of plans/analytics.py
+    group state (the streaming twin of plans/events.py
     sessionize_events). With ``idle_timeout_ms`` set, idle keys are
     flushed by a processing-time timer; with ``event_time_gap_s`` set,
     by an event-time timer keyed to the stream's watermark (see

@@ -21,12 +21,12 @@ def _rows(df):
 
 
 def _clear_memos():
-    from lakehouse_architecture_transaction_spark.plans import pipeline_ops, pipeline_ops2
+    from lakehouse_architecture_transaction_spark.plans import ann
 
-    pipeline_ops._IVF_INDEX_MEMO.clear()
-    pipeline_ops._LSH_INDEX_MEMO.clear()
-    pipeline_ops2._PQ_INDEX_MEMO.clear()
-    pipeline_ops2._PQ_PACKED_MEMO.clear()
+    ann._IVF_INDEX_MEMO.clear()
+    ann._LSH_INDEX_MEMO.clear()
+    ann._PQ_INDEX_MEMO.clear()
+    ann._PQ_PACKED_MEMO.clear()
 
 
 @pytest.fixture
@@ -49,9 +49,7 @@ def index_env(tmp_path):
 
 def test_persisted_index_roundtrip_bit_identical(spark, sf_dir, tmp_path, index_env):
     from lakehouse_architecture_transaction_spark.plans import REGISTRY
-    from lakehouse_architecture_transaction_spark.plans.pipeline_ops2 import (
-        build_persisted_ann_index,
-    )
+    from lakehouse_architecture_transaction_spark.plans.ann import build_persisted_ann_index
 
     # Fresh in-process build (no store on disk yet → trains).
     expected_ivfpq = _rows(REGISTRY["emb_ann_ivfpq"].fn(spark, sf_dir))
@@ -70,9 +68,7 @@ def test_persisted_index_roundtrip_bit_identical(spark, sf_dir, tmp_path, index_
 
 def test_persisted_index_refresh_is_a_commit(spark, sf_dir, index_env):
     from lakehouse_architecture_transaction_spark.lakehouse.ann_index import AnnIndexStore
-    from lakehouse_architecture_transaction_spark.plans.pipeline_ops2 import (
-        build_persisted_ann_index,
-    )
+    from lakehouse_architecture_transaction_spark.plans.ann import build_persisted_ann_index
 
     v1 = build_persisted_ann_index(spark, sf_dir, index_env)
     v2 = build_persisted_ann_index(spark, sf_dir, index_env)
@@ -89,9 +85,7 @@ def test_persisted_index_refresh_is_a_commit(spark, sf_dir, index_env):
 
 def test_persisted_index_refuses_hyperparameter_mismatch(spark, sf_dir, index_env):
     from lakehouse_architecture_transaction_spark.lakehouse.ann_index import AnnIndexStore
-    from lakehouse_architecture_transaction_spark.plans.pipeline_ops2 import (
-        build_persisted_ann_index,
-    )
+    from lakehouse_architecture_transaction_spark.plans.ann import build_persisted_ann_index
 
     build_persisted_ann_index(spark, sf_dir, index_env)
     store = AnnIndexStore(
@@ -125,9 +119,7 @@ def test_new_session_loads_persisted_index_bit_identical(spark, sf_dir, index_en
     the SAME top-k bit-for-bit — and it must load, not retrain
     (asserted via the store's commit history staying put)."""
     from lakehouse_architecture_transaction_spark.plans import REGISTRY
-    from lakehouse_architecture_transaction_spark.plans.pipeline_ops2 import (
-        build_persisted_ann_index,
-    )
+    from lakehouse_architecture_transaction_spark.plans.ann import build_persisted_ann_index
 
     expected = _rows(REGISTRY["emb_ann_ivfpq"].fn(spark, sf_dir))
     versions = build_persisted_ann_index(spark, sf_dir, index_env)
@@ -170,9 +162,7 @@ def test_ivf_lifecycle_refresh_diff_restore(spark, sf_dir, tmp_path, index_env):
         corpus_fingerprint,
     )
     from lakehouse_architecture_transaction_spark.plans import REGISTRY
-    from lakehouse_architecture_transaction_spark.plans.pipeline_ops2 import (
-        build_persisted_ann_index,
-    )
+    from lakehouse_architecture_transaction_spark.plans.ann import build_persisted_ann_index
 
     # Private corpus copy (only embeddings is read by the emb_* plans).
     sf_copy = tmp_path / "sf"

@@ -13,7 +13,7 @@ from pathlib import Path
 
 sys.path.insert(0, str(Path(__file__).resolve().parents[1]))
 
-from bench import HEADLINE_FAMILIES, TAIL_BUDGET, tail_line
+from bench import HEADLINE, TAIL_BUDGET, tail_line
 
 
 def _base(times: dict) -> dict:
@@ -63,7 +63,7 @@ def _base(times: dict) -> dict:
 
 
 def test_tail_line_fits_and_parses_at_current_headline_size():
-    times = {name: 1.2345 for name in HEADLINE_FAMILIES}
+    times = {name: 1.2345 for name in HEADLINE}
     line = tail_line(_base(times))
     assert len(line) <= TAIL_BUDGET <= 1999
     parsed = json.loads(line)
@@ -201,10 +201,26 @@ def test_anchor_drift_flags_weather_regime_change():
     assert anchor_drift({"anchor_s": 0.6}, 2.0) == (None, False)
 
 
+
+def test_committed_capture_from_other_cpu_count_is_absent(tmp_path):
+    # A base captured on 8 CPUs must not anchor a 32-CPU run: its
+    # anchors and per-query times measure a different machine shape, so
+    # drift, regime split and geomean read None/False instead.
+    from bench import _committed_capture, anchor_drift, geomean_vs_committed, regime_split
+
+    base = {"cpus": 8, "queries": {"q1": 1.0}, "anchor_mc_s": 2.0, "anchor_sh_s": 1.0}
+    (tmp_path / "bench_full.json").write_text(json.dumps(base))
+    assert _committed_capture(str(tmp_path), 8) == base
+    prev = _committed_capture(str(tmp_path), 32)
+    assert prev is None
+    assert anchor_drift(prev, 1.0) == (None, False)
+    assert regime_split(prev, 1.0, 2.0) == (None, False)
+    assert geomean_vs_committed(prev, {"q1": 2.0}) == (None, 0)
+
 def test_tail_line_carries_anchor_drift_flag():
     # a weather-flagged capture must label itself IN the driver-visible
     # line, same as contention_suspect
-    times = {name: 1.2345 for name in HEADLINE_FAMILIES}
+    times = {name: 1.2345 for name in HEADLINE}
     parsed = json.loads(tail_line(_base(times)))
     assert parsed["anchor_drift_suspect"] is True
     assert parsed["anchor_drift_vs_committed"] == 1.327

@@ -475,7 +475,7 @@ def test_registered_pruned_scan_skips_files_end_to_end(spark, sf_dir):
     files on its way to a correct answer: the H1-1996 predicate over
     the date-clustered copy keeps a minority of files, and the
     SQL-by-name plan reads exactly the kept set."""
-    from lakehouse_architecture_transaction_spark.plans.lakehouse_queries import (
+    from lakehouse_architecture_transaction_spark.plans.etl import (
         orders_pruned_scan_sql,
         pruned_scan_report,
     )
@@ -506,9 +506,7 @@ def test_registered_bucketed_join_zero_exchange_on_keys(spark, sf_dir):
     fact-fact join exchange-free from the bucketed layout: the only
     Exchange in the executed plan is the priority aggregate's — none
     on the order key."""
-    from lakehouse_architecture_transaction_spark.plans.lakehouse_queries import (
-        orders_lineitem_bucketed_join,
-    )
+    from lakehouse_architecture_transaction_spark.plans.etl import orders_lineitem_bucketed_join
 
     prev = spark.conf.get("spark.sql.autoBroadcastJoinThreshold")
     spark.conf.set("spark.sql.autoBroadcastJoinThreshold", "-1")
@@ -526,9 +524,7 @@ def test_registered_bucketed_join_zero_exchange_on_keys(spark, sf_dir):
 def test_zorder_registered_scan_skips_files(spark, sf_dir):
     # the REGISTERED query path (lineitem_zorder_pruned_scan) must
     # actually skip files, not just return correct rows
-    from lakehouse_architecture_transaction_spark.plans.lakehouse_queries import (
-        zorder_scan_report,
-    )
+    from lakehouse_architecture_transaction_spark.plans.etl import zorder_scan_report
 
     report = zorder_scan_report(spark, sf_dir)
     assert report["files_read"] < report["files_total"]
@@ -536,9 +532,7 @@ def test_zorder_registered_scan_skips_files(spark, sf_dir):
 
 
 def test_cdc_registered_table_has_two_versions(spark, sf_dir):
-    from lakehouse_architecture_transaction_spark.plans.lakehouse_queries import (
-        cdc_orders_table,
-    )
+    from lakehouse_architecture_transaction_spark.plans.etl import cdc_orders_table
 
     t = cdc_orders_table(spark, sf_dir)
     assert t.latest_version() == 1

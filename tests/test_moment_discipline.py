@@ -33,49 +33,47 @@ PKG = os.path.join(os.path.dirname(os.path.dirname(os.path.abspath(__file__))),
 
 #: (relpath, whitespace-normalized SUM body) -> (expected count, audited bound)
 ALLOWED: dict[tuple[str, str], tuple[int, str]] = {
-    ("plans/pipeline_ops.py", "((h >> {j}) & 1) * 2 - 1"):
+    ("plans/dedup.py", "((h >> {j}) & 1) * 2 - 1"):
         (1, "simhash oracle: ±1 per row, |Σ| ≤ corpus rows"),
-    ("plans/pipeline_ops.py", "qi * qj"):
+    ("plans/emb.py", "qi * qj"):
         (1, "label-covariance oracle: 256-quantized, |q|≤~2^10, per-term ≤2^20; "
             "overflow needs ≥9e12 rows per (label,i,j) group, ~600x the 100 TB "
             "embedding count"),
-    ("plans/pipeline_ops.py", 'F.col("qi") * F.col("qj")'):
+    ("plans/emb.py", 'F.col("qi") * F.col("qj")'):
         (1, "label-covariance engine twin of the above, same 2^20 per-term bound"),
-    ("plans/pipeline_ops2.py",
+    ("plans/emb.py",
      "(CASE WHEN v < 0 THEN -1 ELSE 1 END) * CAST(floor(abs(CAST(v AS DOUBLE)) * 1e9 + 0.5) AS BIGINT)"):
         (1, "per-(label,pos) centroid sum of 1e9-scaled components: |Σ| ≤ 1e9·N_label; "
             "overflow needs ~9e9 rows in ONE label — ~6x the 100 TB per-label count"),
-    ("plans/pipeline_ops2.py",
+    ("plans/emb.py",
      '(CASE WHEN v < 0 THEN -1 ELSE 1 END) * " "CAST(floor(abs(CAST(v AS DOUBLE)) * 1e9 + 0.5) AS BIGINT)'):
         (1, "engine twin of the centroid sum (string-concat seam), same bound"),
-    ("plans/pipeline_ops3.py", "cnt * cnt"):
-        (1, "hash-embed oracle: per-DOC Σcnt² ≤ n_tokens² — bounded by the JVM "
-            "2^31 string length, (2^31)² < 2^63"),
-    ("plans/pipeline_ops4.py", 'F.col("i") * F.col("spend")'):
+    ("plans/window.py", 'F.col("i") * F.col("spend")'):
         (1, "gini: spend is DECIMAL(38,2), product stays decimal (exact, "
             "ANSI-raising); rank×spend ≤ ~1e19/row, Σ ≤ ~1e29 ≪ 1e38"),
-    ("plans/pipeline_ops4.py", "i * spend"):
+    ("plans/window.py", "i * spend"):
         (1, "gini oracle: spend is DuckDB DECIMAL(38,2), same decimal bound"),
-    ("plans/pipeline_ops4.py", "cnt * cnt"):
-        (1, "char-diversity oracle: per-DOC Σcnt² ≤ n_chars² < (2^31)² < 2^63 "
-            "(JVM string length bound)"),
-    ("plans/pipeline_ops4.py", 'F.col("cnt") * F.col("cnt")'):
+    ("plans/text.py", "cnt * cnt"):
+        (2, "hash-embed oracle: per-DOC Σcnt² ≤ n_tokens² — bounded by the JVM "
+            "2^31 string length, (2^31)² < 2^63; char-diversity oracle: per-DOC "
+            "Σcnt² ≤ n_chars² < (2^31)² < 2^63 (JVM string length bound)"),
+    ("plans/text.py", 'F.col("cnt") * F.col("cnt")'):
         (1, "char-diversity engine twin, same per-doc JVM-string bound"),
-    ("plans/queued_r10.py", 'F.col("__c") * F.col("__p")'):
+    ("plans/etl.py", 'F.col("__c") * F.col("__p")'):
         (1, "inclusion profile: 0/1 indicator product, Σ ≤ distinct keys"),
-    ("plans/queued_r10.py", "x*y"):
+    ("plans/events.py", "x*y"):
         (1, "seasonal/autocorr oracle: x,y are coarse integer units with the "
             "documented operators/timeseries.py contract (value²·days < 2^63)"),
-    ("plans/queued_r10.py", "x*x"):
+    ("plans/events.py", "x*x"):
         (1, "same timeseries coarse-unit contract"),
-    ("plans/queued_r10.py", "y*y"):
+    ("plans/events.py", "y*y"):
         (1, "same timeseries coarse-unit contract"),
-    ("plans/queued_r11.py", "x * y"):
+    ("plans/tpch.py", "x * y"):
         (1, "grouped_linreg oracle: x is a small day index per the documented "
             "exactness bound in operators/timeseries.py"),
-    ("plans/queued_r11.py", "x * x"):
+    ("plans/tpch.py", "x * x"):
         (1, "same grouped_linreg day-index bound"),
-    ("plans/queued_r11.py", 'F.col("freq") * F.size("after")'):
+    ("plans/text.py", 'F.col("freq") * F.size("after")'):
         (1, "BPE totals: Σ = corpus BPE token count ≤ corpus chars ≪ 2^63"),
     ("operators/dedup.py", "F.shiftright(F.col(\"__h\"), j).bitwiseAND(F.lit(1)) * 2 - 1"):
         (1, "simhash engine: ±1 per row, |Σ| ≤ corpus rows"),

@@ -8,6 +8,7 @@ should pass the driver's hash compare at sf0.01.
 
 from __future__ import annotations
 
+import importlib
 import math
 import os
 from decimal import Decimal
@@ -76,7 +77,7 @@ def test_hash_embed_oracle_parity_preview(spark, sf_dir):
     import duckdb
 
     from lakehouse_architecture_transaction_spark.operators.text import hash_embed
-    from lakehouse_architecture_transaction_spark.plans.pipeline_ops import _TOKENS
+    from lakehouse_architecture_transaction_spark.plans.text import _TOKENS
 
     dim = 16
     docs = spark.read.parquet(f"{sf_dir}/documents.parquet")
@@ -132,7 +133,7 @@ def test_quality_logistic_oracle_parity_preview(spark, sf_dir):
         QUALITY_WEIGHTS as W,
         quality_logistic_score,
     )
-    from lakehouse_architecture_transaction_spark.plans.pipeline_ops import _STOPS_SQL, _TOKENS
+    from lakehouse_architecture_transaction_spark.plans.text import _STOPS_SQL, _TOKENS
 
     docs = spark.read.parquet(f"{sf_dir}/documents.parquet")
     got = {
@@ -251,12 +252,12 @@ def _duck_rows(con, sql):
 
 
 def test_events_mad_anomalies_oracle_parity_preview(spark, sf_dir):
-    # Round-7 registration preview (pipeline_ops4.py): lower-median rank
+    # Round-7 registration preview (plans/events.py): lower-median rank
     # selections over exact integer counts — cell-exact now so the
     # r7 @register is a verified copy-paste.
     import duckdb
 
-    from lakehouse_architecture_transaction_spark.plans.pipeline_ops4 import (
+    from lakehouse_architecture_transaction_spark.plans.events import (
         EVENTS_MAD_ORACLE,
         events_mad_anomalies,
     )
@@ -275,7 +276,7 @@ def test_customer_gini_oracle_parity_preview(spark, sf_dir):
     # double chain, replayed cell-exact by DuckDB.
     import duckdb
 
-    from lakehouse_architecture_transaction_spark.plans.pipeline_ops4 import (
+    from lakehouse_architecture_transaction_spark.plans.window import (
         CUSTOMER_GINI_ORACLE,
         customer_mktseg_gini,
     )
@@ -297,7 +298,7 @@ def test_curation_pipeline_oracle_parity_preview(spark, sf_dir):
     # registered stage queries use.
     import duckdb
 
-    from lakehouse_architecture_transaction_spark.plans.pipeline_ops4 import (
+    from lakehouse_architecture_transaction_spark.plans.text import (
         _CUR_FOLDS,
         docs_curation_pipeline,
     )
@@ -346,7 +347,7 @@ def test_compacted_scan_oracle_parity_preview(spark, sf_dir):
     # the compacted snapshot aggregates exactly like the plain table.
     import duckdb
 
-    from lakehouse_architecture_transaction_spark.plans.pipeline_ops4 import (
+    from lakehouse_architecture_transaction_spark.plans.etl import (
         ORDERS_COMPACTED_ORACLE,
         orders_compacted_scan,
     )
@@ -364,7 +365,7 @@ def test_schema_evolution_oracle_parity_preview(spark, sf_dir):
     # deterministically merged subset.
     import duckdb
 
-    from lakehouse_architecture_transaction_spark.plans.pipeline_ops4 import (
+    from lakehouse_architecture_transaction_spark.plans.etl import (
         ORDERS_EVOLUTION_ORACLE,
         orders_schema_evolution_stats,
     )
@@ -382,7 +383,7 @@ def test_part_triangles_oracle_parity_preview(spark, sf_dir):
     # both formulations must agree on the total.
     import duckdb
 
-    from lakehouse_architecture_transaction_spark.plans.pipeline_ops4 import (
+    from lakehouse_architecture_transaction_spark.plans.graph import (
         PART_TRIANGLES_ORACLE,
         part_copurchase_triangles,
     )
@@ -423,12 +424,10 @@ def test_part_triangles_oracle_parity_preview(spark, sf_dir):
 
 
 def test_r8_registered_invariants(spark, sf_dir):
-    from lakehouse_architecture_transaction_spark.plans.queued_r8 import (
-        emb_ivf_cell_balance,
-        docs_ngram_containment,
-        orders_backlog_daily,
-        part_supplier_hhi,
-    )
+    from lakehouse_architecture_transaction_spark.plans.ann import emb_ivf_cell_balance
+    from lakehouse_architecture_transaction_spark.plans.dedup import docs_ngram_containment
+    from lakehouse_architecture_transaction_spark.plans.tpch import part_supplier_hhi
+    from lakehouse_architecture_transaction_spark.plans.window import orders_backlog_daily
 
     # containment threshold applies to the LARGER direction by identity
     for r in docs_ngram_containment(spark, sf_dir).collect():
@@ -449,13 +448,13 @@ def test_r8_registered_invariants(spark, sf_dir):
 def test_events_stream_hourly_repeatable(spark, sf_dir):
     # A registered STREAMING query must be idempotent per session
     # (bench runs it 3x): a fresh bounded run per call, same result.
-    from lakehouse_architecture_transaction_spark.plans.queued_r8 import events_stream_hourly
+    from lakehouse_architecture_transaction_spark.plans.streaming import events_stream_hourly
 
     first = _canon_rows(events_stream_hourly(spark, sf_dir))
     assert _canon_rows(events_stream_hourly(spark, sf_dir)) == first
 
 
-# ---------------- Round-9 registration previews (plans/queued_r9.py) --
+# ---------------- Round-9 registration previews --
 
 
 @pytest.mark.parametrize(
@@ -480,7 +479,7 @@ def test_events_stream_hourly_repeatable(spark, sf_dir):
     ],
 )
 def test_r9_lakehouse_companion_oracle_parity_preview(spark, sf_dir, fn_name, oracle_name):
-    from lakehouse_architecture_transaction_spark.plans import queued_r9 as Q
+    Q = importlib.import_module(REGISTRY[fn_name].fn.__module__)
 
     con = _duck(sf_dir)
     got = _canon_rows(getattr(Q, fn_name)(spark, sf_dir))
@@ -488,7 +487,7 @@ def test_r9_lakehouse_companion_oracle_parity_preview(spark, sf_dir, fn_name, or
     assert got == want
 
 
-# ---------------- Round-10 registration previews (plans/queued_r10.py) --
+# ---------------- Round-10 registration previews --
 
 
 @pytest.mark.parametrize(
@@ -504,12 +503,12 @@ def test_r9_lakehouse_companion_oracle_parity_preview(spark, sf_dir, fn_name, or
         ("docs_source_distinctive_terms", "DOCS_DISTINCTIVE_TERMS_ORACLE"),
         # the house applyInPandasWithState sessionizer (S2) as a
         # bounded availableNow run — sentinel-closed, so the emitted
-        # set equals batch sessionization exactly (see queued_r10)
+        # set equals batch sessionization exactly (see plans/streaming.py)
         ("events_stream_sessions_stateful", "EVENTS_STREAM_SESSIONS_STATEFUL_ORACLE"),
     ],
 )
 def test_r10_training_ops_oracle_parity_preview(spark, sf_dir, fn_name, oracle_name):
-    from lakehouse_architecture_transaction_spark.plans import queued_r10 as Q
+    Q = importlib.import_module(REGISTRY[fn_name].fn.__module__)
 
     con = _duck(sf_dir)
     got = _canon_rows(getattr(Q, fn_name)(spark, sf_dir))
@@ -522,10 +521,7 @@ def test_priority_sample_estimator_invariants(spark, sf_dir):
     # priority >= tau (= every kept est_weight >= its weight), and the
     # estimator reproduces the EXACT total weight for the certainty
     # set (w >= tau rows carry their own weight).
-    from lakehouse_architecture_transaction_spark.plans.queued_r10 import (
-        _PS_K,
-        docs_priority_sample,
-    )
+    from lakehouse_architecture_transaction_spark.plans.sampling import _PS_K, docs_priority_sample
 
     rows = docs_priority_sample(spark, sf_dir).collect()
     assert len(rows) == _PS_K
@@ -538,10 +534,7 @@ def test_dup_spans_coverage_invariants(spark, sf_dir):
     # Interval-union invariants: covered chars never exceed the doc
     # (dup_frac <= 1), every covered span is at least window chars, and
     # coverage >= position count (windows are 50 wide, positions step 1).
-    from lakehouse_architecture_transaction_spark.plans.queued_r10 import (
-        _SPAN_W,
-        docs_dup_spans,
-    )
+    from lakehouse_architecture_transaction_spark.plans.dedup import _SPAN_W, docs_dup_spans
 
     rows = docs_dup_spans(spark, sf_dir).collect()
     assert rows, "synthetic corpus repeats boilerplate; expected some coverage"
@@ -551,7 +544,7 @@ def test_dup_spans_coverage_invariants(spark, sf_dir):
         assert r["dup_chars"] >= r["n_dup_positions"]
 
 
-# ---------------- Round-11 registration previews (plans/queued_r11.py) --
+# ---------------- Round-11 registration previews --
 
 
 @pytest.mark.parametrize(
@@ -567,7 +560,7 @@ def test_dup_spans_coverage_invariants(spark, sf_dir):
     ],
 )
 def test_r11_ops_oracle_parity_preview(spark, sf_dir, fn_name, oracle_name):
-    from lakehouse_architecture_transaction_spark.plans import queued_r11 as Q
+    Q = importlib.import_module(REGISTRY[fn_name].fn.__module__)
 
     con = _duck(sf_dir)
     got = _canon_rows(getattr(Q, fn_name)(spark, sf_dir))
@@ -580,7 +573,7 @@ def test_bpe_merges_query_deterministic_and_shaped(spark, sf_dir):
     # not SQL-expressible) — pin what the rows-only driver check can't:
     # exactly 8 ranked merges, multi-char merges compose from earlier
     # ones, and a repeat run in the same session is bit-identical.
-    from lakehouse_architecture_transaction_spark.plans.queued_r11 import docs_bpe_merges
+    from lakehouse_architecture_transaction_spark.plans.text import docs_bpe_merges
 
     a = docs_bpe_merges(spark, sf_dir).collect()
     assert [r["rank"] for r in a] == list(range(1, 9))
@@ -591,7 +584,7 @@ def test_bpe_merges_query_deterministic_and_shaped(spark, sf_dir):
     assert a == b
 
 
-# ---------------- Round-12 registration previews (plans/queued_r12.py) --
+# ---------------- Round-12 registration previews --
 
 
 @pytest.mark.parametrize(
@@ -604,7 +597,7 @@ def test_bpe_merges_query_deterministic_and_shaped(spark, sf_dir):
     ],
 )
 def test_r12_ops_oracle_parity_preview(spark, sf_dir, fn_name, oracle_name):
-    from lakehouse_architecture_transaction_spark.plans import queued_r12 as Q
+    Q = importlib.import_module(REGISTRY[fn_name].fn.__module__)
 
     con = _duck(sf_dir)
     got = _canon_rows(getattr(Q, fn_name)(spark, sf_dir))
@@ -612,7 +605,7 @@ def test_r12_ops_oracle_parity_preview(spark, sf_dir, fn_name, oracle_name):
     assert got == want
 
 
-# ---------------- Round-13 registration previews (plans/queued_r13.py) --
+# ---------------- Round-13 registration previews --
 
 
 @pytest.mark.parametrize(
@@ -626,7 +619,7 @@ def test_r12_ops_oracle_parity_preview(spark, sf_dir, fn_name, oracle_name):
     ],
 )
 def test_r13_ops_oracle_parity_preview(spark, sf_dir, fn_name, oracle_name):
-    from lakehouse_architecture_transaction_spark.plans import queued_r13 as Q
+    Q = importlib.import_module(REGISTRY[fn_name].fn.__module__)
 
     con = _duck(sf_dir)
     got = _canon_rows(getattr(Q, fn_name)(spark, sf_dir))
@@ -638,9 +631,7 @@ def test_growth_accounting_ledger_identities(spark, sf_dir):
     # The decomposition must balance exactly: active = new + retained
     # + resurrected for every week, and week-over-week growth equals
     # new + resurrected - churned.
-    from lakehouse_architecture_transaction_spark.plans.queued_r13 import (
-        events_growth_accounting,
-    )
+    from lakehouse_architecture_transaction_spark.plans.events import events_growth_accounting
 
     rows = events_growth_accounting(spark, sf_dir).orderBy("week").collect()
     assert rows, "growth accounting must not be hollow"
@@ -652,7 +643,7 @@ def test_growth_accounting_ledger_identities(spark, sf_dir):
         )
 
 
-# ---------------- Round-14 registration previews (plans/queued_r14.py) --
+# ---------------- Round-14 registration previews --
 
 
 @pytest.mark.parametrize(
@@ -666,7 +657,7 @@ def test_growth_accounting_ledger_identities(spark, sf_dir):
     ],
 )
 def test_r14_ops_oracle_parity_preview(spark, sf_dir, fn_name, oracle_name):
-    from lakehouse_architecture_transaction_spark.plans import queued_r14 as Q
+    Q = importlib.import_module(REGISTRY[fn_name].fn.__module__)
 
     con = _duck(sf_dir)
     got = _canon_rows(getattr(Q, fn_name)(spark, sf_dir))
@@ -678,7 +669,7 @@ def test_fd_profile_recovers_controls(spark, sf_dir):
     # The profiler must recover the true TPC-H key FDs, reject the
     # attribute negatives, and FLAG the raw zone's dirty composite PK
     # (duplicated (l_orderkey, l_linenumber) — the E4 dedup rationale).
-    from lakehouse_architecture_transaction_spark.plans.queued_r14 import catalog_fd_profile
+    from lakehouse_architecture_transaction_spark.plans.etl import catalog_fd_profile
 
     rows = {
         (r["table_name"], r["determinant"], r["dependent"]): r
@@ -699,9 +690,7 @@ def test_column_stats_semantics(spark, sf_dir):
     # Key columns read key-like (distinct_ratio 1.0), enums read
     # category-like, and the clean fixtures carry no nulls — the
     # stats a CBO trusts must hold their defining invariants.
-    from lakehouse_architecture_transaction_spark.plans.queued_r14 import (
-        catalog_column_stats,
-    )
+    from lakehouse_architecture_transaction_spark.plans.etl import catalog_column_stats
 
     rows = {
         (r["table_name"], r["column_name"]): r
@@ -720,7 +709,7 @@ def test_column_stats_semantics(spark, sf_dir):
 def test_dsir_selection_concentrates_target(spark, sf_dir):
     # Importance resampling must shift the selected mix TOWARD the
     # target language without degenerating into a hard lang filter.
-    from lakehouse_architecture_transaction_spark.plans.queued_r14 import (
+    from lakehouse_architecture_transaction_spark.plans.sampling import (
         _DSIR_TARGET_LANG,
         docs_dsir_select,
     )
@@ -738,7 +727,7 @@ def test_dsir_selection_concentrates_target(spark, sf_dir):
 
 
 def test_matryoshka_recall_bounds(spark, sf_dir):
-    from lakehouse_architecture_transaction_spark.plans.queued_r14 import (
+    from lakehouse_architecture_transaction_spark.plans.ann import (
         _MT_K,
         _MT_QMAX,
         emb_matryoshka_recall,
@@ -756,9 +745,7 @@ def test_quality_calibration_partitions_corpus(spark, sf_dir):
     # Deciles must partition the corpus exactly and carry disjoint,
     # ascending score ranges (NTILE over a total order).
     from lakehouse_architecture_transaction_spark.catalog import load_table
-    from lakehouse_architecture_transaction_spark.plans.queued_r14 import (
-        docs_quality_calibration,
-    )
+    from lakehouse_architecture_transaction_spark.plans.text import docs_quality_calibration
 
     rows = docs_quality_calibration(spark, sf_dir).orderBy("decile").collect()
     n_docs = load_table(spark, sf_dir, "documents").count()
@@ -814,7 +801,7 @@ def test_stateful_sessions_companion_session_timezone_independent(spark, sf_dir)
     against the same DuckDB oracle. A fresh staged zone per timezone
     (the memo keys on app+sf_dir, so clear it) keeps the sentinel
     computation itself under test."""
-    from lakehouse_architecture_transaction_spark.plans import queued_r10 as Q
+    from lakehouse_architecture_transaction_spark.plans import streaming as Q
 
     prior = spark.conf.get("spark.sql.session.timeZone")
     staged = dict(Q._SFS_MEMO)

@@ -220,10 +220,11 @@ def test_r10_queued_materialize_shared_frames(spark, sf_dir):
     # materialization lesson): once the shared frame is localCheckpoint-ed,
     # the FINAL plan must contain ZERO parquet scans — every branch reads
     # the materialized frame, never re-running the upstream per branch.
-    from lakehouse_architecture_transaction_spark.plans import queued_r10 as Q
+    from lakehouse_architecture_transaction_spark.plans.dedup import docs_split_leakage
+    from lakehouse_architecture_transaction_spark.plans.events import orders_revenue_autocorr
+    from lakehouse_architecture_transaction_spark.plans.text import docs_source_distinctive_terms
 
-    for fn in (Q.docs_split_leakage, Q.docs_source_distinctive_terms,
-               Q.orders_revenue_autocorr):
+    for fn in (docs_split_leakage, docs_source_distinctive_terms, orders_revenue_autocorr):
         plan = _formatted_plan(fn(spark, sf_dir))
         n_scans = plan.count("ReadSchema")
         assert n_scans == 0, f"{fn.__name__}: expected 0 parquet scans after materialization, saw {n_scans}"
@@ -233,7 +234,7 @@ def test_seasonal_decompose_single_scan_and_broadcast(spark, sf_dir):
     # events_seasonal_decompose materializes the windowed frame; the
     # final plan re-reads only that frame and broadcasts the ≤7-row
     # per-phase seasonal means.
-    from lakehouse_architecture_transaction_spark.plans import queued_r10 as Q
+    from lakehouse_architecture_transaction_spark.plans import events as Q
 
     plan = _formatted_plan(Q.events_seasonal_decompose(spark, sf_dir))
     assert plan.count("ReadSchema") == 0
@@ -247,7 +248,7 @@ def test_inclusion_profile_one_scan_per_table_pruned(spark, sf_dir):
     # to exactly the key columns its edges need. A scan count above 7
     # means an edge side grew its own pipeline again; an over-wide
     # ReadSchema means the explode stopped pruning.
-    from lakehouse_architecture_transaction_spark.plans import queued_r10 as Q
+    from lakehouse_architecture_transaction_spark.plans import etl as Q
 
     expected_cols = {
         ("o_custkey", "o_orderkey"),  # orders: child e0, parent e1/e7
@@ -275,7 +276,7 @@ def test_vocab_growth_two_scans_and_broadcast_cuts(spark, sf_dir):
     # size() pass + the explode→min-first-occurrence aggregate); the
     # 8-row checkpoint frame joins via broadcast (nested-loop on the
     # <= range predicate is fine — the broadcast side is 8 rows).
-    from lakehouse_architecture_transaction_spark.plans import queued_r10 as Q
+    from lakehouse_architecture_transaction_spark.plans import text as Q
 
     plan = _formatted_plan(Q.docs_vocab_growth(spark, sf_dir))
     assert plan.count("ReadSchema") == 2
@@ -311,7 +312,7 @@ def test_survival_curve_broadcasts_month_histogram_not_customers(spark, sf_dir):
     # BroadcastExchange), never the per-customer span frame — the
     # first cut of this plan broadcast customer cardinality, an OOM
     # at real scale (caught ahead of the r11 registration).
-    from lakehouse_architecture_transaction_spark.plans import queued_r11 as Q
+    from lakehouse_architecture_transaction_spark.plans import window as Q
 
     # pin the LAZY curve plan (the registered fn checkpoints the
     # 13-row result, which would hide the join from explain)
@@ -335,7 +336,7 @@ def test_fd_profile_pruned_scans_no_row_joins(spark, sf_dir):
     # candidates scans ONLY its determinant+dependent columns and the
     # plan contains NO row-level join of any kind — a join (or an
     # unpruned scan) means the distinct-aggregate shape regressed.
-    from lakehouse_architecture_transaction_spark.plans import queued_r14 as Q
+    from lakehouse_architecture_transaction_spark.plans import etl as Q
 
     plan = _formatted_plan(Q.catalog_fd_profile(spark, sf_dir))
     schemas = re.findall(r"ReadSchema: struct<([^>]*)>", plan)
@@ -350,7 +351,7 @@ def test_fd_profile_pruned_scans_no_row_joins(spark, sf_dir):
 def test_column_stats_pruned_scans_no_joins(spark, sf_dir):
     # ANALYZE-style stats: one single-column pruned scan per profiled
     # column, no joins anywhere — 17 scans of width 1.
-    from lakehouse_architecture_transaction_spark.plans import queued_r14 as Q
+    from lakehouse_architecture_transaction_spark.plans import etl as Q
 
     plan = _formatted_plan(Q.catalog_column_stats(spark, sf_dir))
     schemas = re.findall(r"ReadSchema: struct<([^>]*)>", plan)
@@ -368,7 +369,7 @@ def test_dsir_broadcasts_bucket_marginals_not_docs(spark, sf_dir):
     # and the doc metadata join are corpus-sized and must NEVER sit
     # under a BroadcastExchange (the doc-id join correctly plans as
     # sort-merge — both sides scale with the corpus).
-    from lakehouse_architecture_transaction_spark.plans import queued_r14 as Q
+    from lakehouse_architecture_transaction_spark.plans import sampling as Q
 
     plan = _formatted_plan(Q.docs_dsir_select(spark, sf_dir))
     hits = re.findall(r"\(\d+\) BroadcastExchange\nInput \[\d+\]: (\[[^\n]*\])", plan)
@@ -385,9 +386,10 @@ def test_r14_shared_topk_frames_materialized_once(spark, sf_dir):
     # checkpoints must shield every downstream branch from re-scanning
     # the corpus (a ReadSchema in the result plan means a branch
     # replays the scan).
-    from lakehouse_architecture_transaction_spark.plans import queued_r14 as Q
+    from lakehouse_architecture_transaction_spark.plans.ann import emb_matryoshka_recall
+    from lakehouse_architecture_transaction_spark.plans.text import docs_quality_calibration
 
-    for fn in (Q.emb_matryoshka_recall, Q.docs_quality_calibration):
+    for fn in (emb_matryoshka_recall, docs_quality_calibration):
         plan = _formatted_plan(fn(spark, sf_dir))
         assert plan.count("ReadSchema") == 0, f"{fn.__name__} re-scans past its checkpoint"
 
@@ -399,7 +401,7 @@ def test_r13_dispersion_single_scan_no_rank_machinery(spark, sf_dir):
     # re-reading the scan. A second ReadSchema or any join/window
     # means the grid-collapse shape regressed to row-cardinality
     # machinery.
-    from lakehouse_architecture_transaction_spark.plans import queued_r13 as Q
+    from lakehouse_architecture_transaction_spark.plans import tpch as Q
 
     plan = _formatted_plan(Q.part_price_dispersion_by_type(spark, sf_dir))
     schemas = re.findall(r"ReadSchema: struct<([^>]*)>", plan)

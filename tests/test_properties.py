@@ -646,9 +646,7 @@ def test_char_diversity_bounds_and_identities(spark, texts):
     # Simpson diversity ∈ [0, 1); effective alphabet ∈ [1, distinct];
     # a one-distinct-char doc has diversity exactly 0 / alphabet 1;
     # all-distinct chars give effective alphabet == n_chars exactly.
-    from lakehouse_architecture_transaction_spark.plans.pipeline_ops4 import (
-        docs_char_diversity,
-    )
+    from lakehouse_architecture_transaction_spark.plans.text import docs_char_diversity
 
     rows = [(i, t, "s", "en", len(t)) for i, t in enumerate(texts)]
     df = spark.createDataFrame(rows, "doc_id long, text string, source string, lang string, n_chars long")
@@ -657,13 +655,13 @@ def test_char_diversity_bounds_and_identities(spark, texts):
     orig = cat.load_table
     try:
         cat.load_table = lambda _s, _d, _n, **k: df
-        import lakehouse_architecture_transaction_spark.plans.pipeline_ops4 as p4
+        import lakehouse_architecture_transaction_spark.plans.text as p4
 
         p4.load_table = cat.load_table
         out = {r["doc_id"]: r for r in docs_char_diversity(spark, "ignored").collect()}
     finally:
         cat.load_table = orig
-        import lakehouse_architecture_transaction_spark.plans.pipeline_ops4 as p4
+        import lakehouse_architecture_transaction_spark.plans.text as p4
 
         p4.load_table = orig
     for i, t in enumerate(texts):
@@ -1016,7 +1014,7 @@ def _py_bpe_apply(word, table):
 def test_bpe_alt_route_matches_primary_and_python(spark, words):
     # VERDICT r13 item 6: segment_consistent's two routes must be
     # genuinely independent scans that agree. The alt route
-    # (plans/queued_r11.py _bpe_apply_alt_expr: active-site/run-parity
+    # (plans/text.py _bpe_apply_alt_expr: active-site/run-parity
     # positional rebuild) must equal BOTH the primary fold
     # (operators/text.py bpe_apply_expr) and the from-scratch Python
     # reference on every word — including the adversarial shapes:
@@ -1029,9 +1027,7 @@ def test_bpe_alt_route_matches_primary_and_python(spark, words):
         BPE_MERGES_TABLE_EXPR,
         bpe_apply_expr,
     )
-    from lakehouse_architecture_transaction_spark.plans.queued_r11 import (
-        _bpe_apply_alt_expr,
-    )
+    from lakehouse_architecture_transaction_spark.plans.text import _bpe_apply_alt_expr
 
     table = [("a", "a", "aa"), ("a", "b", "ab"), ("ab", "b", "abb"), ("aa", "ab", "aaab")]
     merges = spark.createDataFrame(

@@ -49,17 +49,17 @@ COLLECT_ALLOWED: dict[tuple[str, str], tuple[int, str]] = {
             "hard-bounded by the constant 5 (r13 rewrite; the window's "
             "per-group buffer is disk-spillable, unlike a collect's array "
             "state)"),
-    ("plans/pipeline_ops2.py", "_centroids"):
+    ("plans/emb.py", "_centroids"):
         (1, "centroid matrix assembly at label x dim cardinality "
             "(<= labels * 64 rows per group)"),
-    ("plans/pipeline_ops4.py", "part_copurchase_triangles"):
+    ("plans/graph.py", "part_copurchase_triangles"):
         (1, "forward-adjacency: degree-ordered orientation bounds per-src "
             "out-degree by O(sqrt m) — hubs never fan out"),
-    ("plans/pipeline_ops4.py", "docs_temperature_mixture"):
+    ("plans/sampling.py", "docs_temperature_mixture"):
         (1, "source-counts fold at source cardinality (~10)"),
-    ("plans/queued_r11.py", "docs_bpe_invariants"):
+    ("plans/text.py", "docs_bpe_invariants"):
         (2, "folds over the trained BPE merge table (8 rows by construction)"),
-    ("plans/queued_r13.py", "part_price_dispersion_by_type"):
+    ("plans/tpch.py", "part_price_dispersion_by_type"):
         (1, "weighted-median fold over the (type, cent) grid — bounded by "
             "the price domain, not row count"),
     ("operators/similarity.py", "_assign"):
@@ -95,7 +95,7 @@ COLLECT_ALLOWED: dict[tuple[str, str], tuple[int, str]] = {
 #: (relpath, enclosing def) -> (expected Window.orderBy-without-
 #: partitionBy count, bound)
 GLOBAL_WINDOW_ALLOWED: dict[tuple[str, str], tuple[int, str]] = {
-    ("plans/analytics3.py", "events_weekly_active_users"):
+    ("plans/events.py", "events_weekly_active_users"):
         (1, "lag over the WEEK rollup — calendar cardinality (thousands of "
             "rows at any corpus size)"),
     ("operators/timeseries.py", "seasonal_decompose"):
@@ -127,29 +127,29 @@ CROSSJOIN_ALLOWED: dict[tuple[str, str], int] = {
     ("operators/text.py", "bpe_segment"): 1,
     ("operators/text.py", "source_distinctive_terms"): 1,
     ("operators/text.py", "tfidf_top_terms"): 1,
-    ("plans/analytics.py", "events_funnel"): 2,
-    ("plans/analytics3.py", "events_hourly_seasonality"): 1,
-    ("plans/analytics3.py", "orders_weekday_profile"): 1,
-    ("plans/analytics_tpch2.py", "q11_important_parts"): 1,
-    ("plans/analytics_tpch2.py", "q22_idle_rich_customers"): 1,
+    ("plans/events.py", "events_funnel"): 2,
+    ("plans/events.py", "events_hourly_seasonality"): 1,
+    ("plans/window.py", "orders_weekday_profile"): 1,
+    ("plans/tpch.py", "q11_important_parts"): 1,
+    ("plans/tpch.py", "q22_idle_rich_customers"): 1,
     ("plans/behavior.py", "events_bot_users"): 1,
-    ("plans/customer_value.py", "customer_rfm_segments"): 1,
-    ("plans/customer_value.py", "supplier_revenue_pareto"): 1,
-    ("plans/pipeline_ops2.py", "docs_length_histogram"): 1,
-    ("plans/pipeline_ops2.py", "emb_centroid_distance_matrix"): 1,
-    ("plans/pipeline_ops2.py", "emb_nearest_centroid_confusion"): 1,
-    ("plans/pipeline_ops2.py", "emb_norm_outliers"): 1,
-    ("plans/pipeline_ops4.py", "docs_temperature_mixture"): 1,
-    ("plans/queued_r11.py", "customer_survival_curve"): 1,
-    ("plans/queued_r11.py", "docs_bpe_invariants"): 3,
-    ("plans/queued_r11.py", "emb_pair_sim_histogram"): 1,
-    ("plans/queued_r11.py", "orders_benford_audit"): 1,
-    ("plans/queued_r12.py", "orders_order_size_histogram"): 1,
-    ("plans/queued_r13.py", "lineitem_discount_profile"): 1,
-    ("plans/queued_r14.py", "docs_dsir_select"): 3,
-    ("plans/queued_r8.py", "emb_ivf_cell_balance"): 1,
-    ("plans/queued_r9.py", "orders_constraint_audit"): 1,
-    ("plans/queued_r9.py", "orders_csv_roundtrip_stats"): 1,
+    ("plans/window.py", "customer_rfm_segments"): 1,
+    ("plans/window.py", "supplier_revenue_pareto"): 1,
+    ("plans/text.py", "docs_length_histogram"): 1,
+    ("plans/emb.py", "emb_centroid_distance_matrix"): 1,
+    ("plans/emb.py", "emb_nearest_centroid_confusion"): 1,
+    ("plans/emb.py", "emb_norm_outliers"): 1,
+    ("plans/sampling.py", "docs_temperature_mixture"): 1,
+    ("plans/window.py", "customer_survival_curve"): 1,
+    ("plans/text.py", "docs_bpe_invariants"): 3,
+    ("plans/dedup.py", "emb_pair_sim_histogram"): 1,
+    ("plans/etl.py", "orders_benford_audit"): 1,
+    ("plans/tpch.py", "orders_order_size_histogram"): 1,
+    ("plans/tpch.py", "lineitem_discount_profile"): 1,
+    ("plans/sampling.py", "docs_dsir_select"): 3,
+    ("plans/ann.py", "emb_ivf_cell_balance"): 1,
+    ("plans/etl.py", "orders_constraint_audit"): 1,
+    ("plans/etl.py", "orders_csv_roundtrip_stats"): 1,
 }
 
 

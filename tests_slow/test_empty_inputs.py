@@ -176,14 +176,7 @@ def test_laketable_degenerate_lifecycle(spark, tmp_path):
 
 
 def _queued_fns():
-    from lakehouse_architecture_transaction_spark.plans import (
-        queued_r9 as Q9,
-        queued_r10 as Q10,
-        queued_r11 as Q11,
-        queued_r12 as Q12,
-        queued_r13 as Q13,
-        queued_r14 as Q14,
-    )
+    from lakehouse_architecture_transaction_spark.plans import REGISTRY
 
     return [
         # the r9 streaming companions (bounded availableNow runs: an
@@ -191,51 +184,51 @@ def _queued_fns():
         # events_stream_{sessions,dedup,hourly,trending} and the rest
         # of the r8 batch were REGISTERED in round 8 and now ride the
         # registry-wide degenerate sweep above.
-        ("events_stream_clicks", Q9.events_stream_clicks),
-        ("events_stream_enriched", Q9.events_stream_enriched),
-        ("orders_stream_upsert_cdc", Q9.orders_stream_upsert_cdc),
+        ("events_stream_clicks", REGISTRY["events_stream_clicks"].fn),
+        ("events_stream_enriched", REGISTRY["events_stream_enriched"].fn),
+        ("orders_stream_upsert_cdc", REGISTRY["orders_stream_upsert_cdc"].fn),
         # the r10 training ops (k > n path, window > text length path)
-        ("docs_priority_sample", Q10.docs_priority_sample),
-        ("docs_dup_spans", Q10.docs_dup_spans),
+        ("docs_priority_sample", REGISTRY["docs_priority_sample"].fn),
+        ("docs_dup_spans", REGISTRY["docs_dup_spans"].fn),
         # the r10 diagnostics batch (empty pair frame, all-NULL keys,
         # series shorter than the window/lag horizon, empty vocabulary)
-        ("docs_split_leakage", Q10.docs_split_leakage),
-        ("catalog_inclusion_profile", Q10.catalog_inclusion_profile),
-        ("events_seasonal_decompose", Q10.events_seasonal_decompose),
-        ("orders_revenue_autocorr", Q10.orders_revenue_autocorr),
-        ("docs_vocab_growth", Q10.docs_vocab_growth),
-        ("docs_source_distinctive_terms", Q10.docs_source_distinctive_terms),
+        ("docs_split_leakage", REGISTRY["docs_split_leakage"].fn),
+        ("catalog_inclusion_profile", REGISTRY["catalog_inclusion_profile"].fn),
+        ("events_seasonal_decompose", REGISTRY["events_seasonal_decompose"].fn),
+        ("orders_revenue_autocorr", REGISTRY["orders_revenue_autocorr"].fn),
+        ("docs_vocab_growth", REGISTRY["docs_vocab_growth"].fn),
+        ("docs_source_distinctive_terms", REGISTRY["docs_source_distinctive_terms"].fn),
         # the house stateful sessionizer companion (empty landing
         # zone: one empty schema-bearing slice, no sentinel file)
-        ("events_stream_sessions_stateful", Q10.events_stream_sessions_stateful),
+        ("events_stream_sessions_stateful", REGISTRY["events_stream_sessions_stateful"].fn),
         # the r11 batch (no purchases, constant-x groups, empty corpus,
         # single-vector embeddings, empty victim)
-        ("lineitem_shipdelay_trend", Q11.lineitem_shipdelay_trend),
-        ("customer_survival_curve", Q11.customer_survival_curve),
-        ("events_touch_attribution", Q11.events_touch_attribution),
-        ("docs_langid_confusion", Q11.docs_langid_confusion),
-        ("emb_pair_sim_histogram", Q11.emb_pair_sim_histogram),
-        ("orders_gdpr_erasure_audit", Q11.orders_gdpr_erasure_audit),
-        ("orders_benford_audit", Q11.orders_benford_audit),
-        ("docs_bpe_merges", Q11.docs_bpe_merges),
+        ("lineitem_shipdelay_trend", REGISTRY["lineitem_shipdelay_trend"].fn),
+        ("customer_survival_curve", REGISTRY["customer_survival_curve"].fn),
+        ("events_touch_attribution", REGISTRY["events_touch_attribution"].fn),
+        ("docs_langid_confusion", REGISTRY["docs_langid_confusion"].fn),
+        ("emb_pair_sim_histogram", REGISTRY["emb_pair_sim_histogram"].fn),
+        ("orders_gdpr_erasure_audit", REGISTRY["orders_gdpr_erasure_audit"].fn),
+        ("orders_benford_audit", REGISTRY["orders_benford_audit"].fn),
+        ("docs_bpe_merges", REGISTRY["docs_bpe_merges"].fn),
         # the r12 batch (empty facts, all-null money, single-row dims)
-        ("orders_order_size_histogram", Q12.orders_order_size_histogram),
-        ("supplier_part_degree_profile", Q12.supplier_part_degree_profile),
-        ("customer_order_value_cv", Q12.customer_order_value_cv),
-        ("nation_trade_balance", Q12.nation_trade_balance),
+        ("orders_order_size_histogram", REGISTRY["orders_order_size_histogram"].fn),
+        ("supplier_part_degree_profile", REGISTRY["supplier_part_degree_profile"].fn),
+        ("customer_order_value_cv", REGISTRY["customer_order_value_cv"].fn),
+        ("nation_trade_balance", REGISTRY["nation_trade_balance"].fn),
         # the r13 batch (all-null types, empty facts, one-user events)
-        ("part_price_dispersion_by_type", Q13.part_price_dispersion_by_type),
-        ("events_usertype_overlap", Q13.events_usertype_overlap),
-        ("lineitem_discount_profile", Q13.lineitem_discount_profile),
-        ("events_growth_accounting", Q13.events_growth_accounting),
-        ("events_hourly_concentration", Q13.events_hourly_concentration),
+        ("part_price_dispersion_by_type", REGISTRY["part_price_dispersion_by_type"].fn),
+        ("events_usertype_overlap", REGISTRY["events_usertype_overlap"].fn),
+        ("lineitem_discount_profile", REGISTRY["lineitem_discount_profile"].fn),
+        ("events_growth_accounting", REGISTRY["events_growth_accounting"].fn),
+        ("events_hourly_concentration", REGISTRY["events_hourly_concentration"].fn),
         # the r14 batch (empty catalog tables, empty/one-doc corpus with
         # zero-token texts, single-vector embeddings, all-null langs)
-        ("catalog_fd_profile", Q14.catalog_fd_profile),
-        ("catalog_column_stats", Q14.catalog_column_stats),
-        ("docs_dsir_select", Q14.docs_dsir_select),
-        ("emb_matryoshka_recall", Q14.emb_matryoshka_recall),
-        ("docs_quality_calibration", Q14.docs_quality_calibration),
+        ("catalog_fd_profile", REGISTRY["catalog_fd_profile"].fn),
+        ("catalog_column_stats", REGISTRY["catalog_column_stats"].fn),
+        ("docs_dsir_select", REGISTRY["docs_dsir_select"].fn),
+        ("emb_matryoshka_recall", REGISTRY["emb_matryoshka_recall"].fn),
+        ("docs_quality_calibration", REGISTRY["docs_quality_calibration"].fn),
     ]
 
 
@@ -259,7 +252,7 @@ def test_fd_profile_empty_relation_gives_null_not_pass(spark, degenerate_dirs):
     # Vacuous truth guard (ADVICE r11): an EMPTY relation has zero
     # observations of the FD — the verdict must be NULL (no evidence),
     # never 1, so a catalog crawler cannot promote an unobserved FD.
-    from lakehouse_architecture_transaction_spark.plans import queued_r14 as Q
+    from lakehouse_architecture_transaction_spark.plans import etl as Q
 
     rows = Q.catalog_fd_profile(spark, degenerate_dirs["empty"]).collect()
     assert rows, "profile must still emit one row per candidate"

@@ -96,28 +96,28 @@ def test_executor_count_invariance_smoke(spark, sf_dir):
 #: identical): each call rebuilds its plan, so 16 vs 199 genuinely
 #: re-shuffles every stage.
 _QUEUED_SAMPLE = [
-    ("queued_r8", "nation_flow_matrix"),
-    ("queued_r8", "orders_backlog_daily"),
-    ("queued_r10", "catalog_inclusion_profile"),
-    ("queued_r10", "docs_source_distinctive_terms"),
-    ("queued_r11", "lineitem_shipdelay_trend"),
-    ("queued_r11", "events_touch_attribution"),
-    ("queued_r11", "customer_survival_curve"),
+    ("tpch", "nation_flow_matrix"),
+    ("window", "orders_backlog_daily"),
+    ("etl", "catalog_inclusion_profile"),
+    ("text", "docs_source_distinctive_terms"),
+    ("tpch", "lineitem_shipdelay_trend"),
+    ("behavior", "events_touch_attribution"),
+    ("window", "customer_survival_curve"),
     # the rest of the r11 registrations (r11: all eight now registered;
     # the gdpr audit is excluded — its LakeTable memo keys on
     # (applicationId, sf_dir), so the second run reads the same staged
     # table and the check would be vacuous)
-    ("queued_r11", "docs_langid_confusion"),
-    ("queued_r11", "emb_pair_sim_histogram"),
-    ("queued_r11", "orders_benford_audit"),
-    ("queued_r11", "docs_bpe_merges"),
+    ("text", "docs_langid_confusion"),
+    ("dedup", "emb_pair_sim_histogram"),
+    ("etl", "orders_benford_audit"),
+    ("text", "docs_bpe_merges"),
     # the r14 batch (per-call localCheckpoints only — no module memo,
     # so the second run genuinely re-shuffles every stage)
-    ("queued_r14", "catalog_fd_profile"),
-    ("queued_r14", "catalog_column_stats"),
-    ("queued_r14", "docs_dsir_select"),
-    ("queued_r14", "emb_matryoshka_recall"),
-    ("queued_r14", "docs_quality_calibration"),
+    ("etl", "catalog_fd_profile"),
+    ("etl", "catalog_column_stats"),
+    ("sampling", "docs_dsir_select"),
+    ("ann", "emb_matryoshka_recall"),
+    ("text", "docs_quality_calibration"),
     # r13 bounded-state rewrite (grouped-top-k window + constant-5
     # collect): pins that the path result is independent of shuffle
     # width/partitioning

@@ -40,24 +40,24 @@ END = "<!-- ANN-FRONTIER:END -->"
 
 
 def _clear_index_memos() -> None:
-    from lakehouse_architecture_transaction_spark.plans import pipeline_ops, pipeline_ops2
+    from lakehouse_architecture_transaction_spark.plans import ann
 
-    pipeline_ops._IVF_INDEX_MEMO.clear()
-    pipeline_ops._LSH_INDEX_MEMO.clear()
-    pipeline_ops2._PQ_INDEX_MEMO.clear()
-    pipeline_ops2._PQ_PACKED_MEMO.clear()
+    ann._IVF_INDEX_MEMO.clear()
+    ann._LSH_INDEX_MEMO.clear()
+    ann._PQ_INDEX_MEMO.clear()
+    ann._PQ_PACKED_MEMO.clear()
 
 
 def index_timings(spark, sf_dir: str, index_dir: str) -> list[tuple[str, float, float]]:
     """(family, train_s, load_s) per index family: index-ready time
     from a cold memo, training from the corpus vs loading the
     persisted store — the per-session cost the store amortizes."""
-    from lakehouse_architecture_transaction_spark.plans import pipeline_ops, pipeline_ops2
+    from lakehouse_architecture_transaction_spark.plans import ann
 
     builders = [
-        ("ivf", pipeline_ops._ivf_index),
-        ("pq", pipeline_ops2._pq_index),
-        ("lsh", pipeline_ops._lsh_index),
+        ("ivf", ann._ivf_index),
+        ("pq", ann._pq_index),
+        ("lsh", ann._lsh_index),
     ]
     out = []
     saved = os.environ.pop("SPARK_GRAFT_ANN_INDEX_DIR", None)
@@ -90,9 +90,7 @@ def run(sf_dir: str, index_dir: str | None) -> tuple[list, list]:
     idx_rows: list[tuple[str, float, float]] = []
     if index_dir:
         from lakehouse_architecture_transaction_spark.lakehouse.ann_index import AnnIndexStore
-        from lakehouse_architecture_transaction_spark.plans.pipeline_ops2 import (
-            build_persisted_ann_index,
-        )
+        from lakehouse_architecture_transaction_spark.plans.ann import build_persisted_ann_index
 
         store = AnnIndexStore(
             spark, os.path.join(index_dir, os.path.basename(os.path.normpath(sf_dir)))

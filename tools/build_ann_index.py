@@ -18,7 +18,7 @@ import sys
 
 sys.path.insert(0, os.path.dirname(os.path.dirname(os.path.abspath(__file__))))
 
-from lakehouse_architecture_transaction_spark.plans.pipeline_ops2 import (  # noqa: E402
+from lakehouse_architecture_transaction_spark.plans.ann import (  # noqa: E402
     build_persisted_ann_index,
 )
 from lakehouse_architecture_transaction_spark.session import get_spark  # noqa: E402

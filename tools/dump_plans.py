@@ -180,7 +180,7 @@ NOTES = {
     ),
     "emb_ivf_cell_balance": (
         "`Scan ExistingRDD` is the session-memoized served IVF index "
-        "(pipeline_ops.py `_ivf_index` — the same clustered corpus the "
+        "(plans/ann.py `_ivf_index` — the same clustered corpus the "
         "search paths probe); the audit itself is one cell-cardinality "
         "aggregate + a broadcast 1-row total."
     ),
@@ -246,7 +246,7 @@ NOTES = {
     ),
     "docs_split_leakage": (
         "`Scan ExistingRDD` is the session-memoized LSH pair frame "
-        "(pipeline_ops.py `_minhash_pairs` — shared with L4/L17/L43/"
+        "(plans/dedup.py `_cand_pairs_frame` — shared with L4/L17/L43/"
         "L59/L65/L67); the audit itself is the pair frame joined twice "
         "to the hash-split assignment (broadcast — split table is "
         "doc_id+class only) and one class-pair aggregate."

@@ -245,28 +245,6 @@ PROBES = [
 ]
 
 
-def _fn(name: str):
-    """Resolve a probe name: registered query, else a queued plan fn."""
-    if name in REGISTRY:
-        return REGISTRY[name].fn
-    from lakehouse_architecture_transaction_spark.plans import (
-        queued_r8,
-        queued_r9,
-        queued_r10,
-        queued_r11,
-        queued_r12,
-        queued_r13,
-        queued_r14,
-    )
-
-    for mod in (
-        queued_r14, queued_r13, queued_r12, queued_r11, queued_r10, queued_r9, queued_r8
-    ):
-        if hasattr(mod, name):
-            return getattr(mod, name)
-    raise KeyError(name)
-
-
 def build_scaled(spark, factor: int) -> str:
     out_dir = os.path.join(OUT, f"x{factor}")
     marker = os.path.join(out_dir, "_DONE")
@@ -400,7 +378,7 @@ def main() -> None:
                 # nothing). The noop sink executes the FULL plan, all
                 # columns, and discards rows executor-side — no driver
                 # transfer to distort big-output shapes.
-                force_full_result(_fn(name)(spark, dirs[f_]))
+                force_full_result(REGISTRY[name].fn(spark, dirs[f_]))
                 times.append(time.perf_counter() - t0)
                 release_persisted()
             # 3 identical runs → per-run shuffle volume = delta / 3

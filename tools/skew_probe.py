@@ -145,23 +145,6 @@ PROBES = [
 ]
 
 
-def _fn(name: str):
-    """Resolve a probe name: registered query, else a queued plan fn."""
-    if name in REGISTRY:
-        return REGISTRY[name].fn
-    from lakehouse_architecture_transaction_spark.plans import (
-        queued_r8,
-        queued_r9,
-        queued_r10,
-        queued_r11,
-    )
-
-    for mod in (queued_r11, queued_r10, queued_r9, queued_r8):
-        if hasattr(mod, name):
-            return getattr(mod, name)
-    raise KeyError(name)
-
-
 def build(spark, variant: str) -> str:
     out_dir = os.path.join(OUT, variant)
     marker = os.path.join(out_dir, "_DONE")
@@ -238,7 +221,7 @@ def text_main(spark) -> None:
             s0 = shuffle_write_bytes(spark)
             for _ in range(3):
                 t0 = time.perf_counter()
-                force_full_result(_fn(name)(spark, d))
+                force_full_result(REGISTRY[name].fn(spark, d))
                 best = min(best, time.perf_counter() - t0)
                 release_persisted()
             s1 = shuffle_write_bytes(spark)
@@ -269,7 +252,7 @@ def text_main(spark) -> None:
     table = "\n".join(lines)
     print(table)
     if "--update-md" in sys.argv:
-        _update_text_md(table)
+        _write_block("SKEW-PROBE-TEXT", table)
         print("SCALE.md updated (text block)")
 
 
@@ -283,7 +266,6 @@ def main() -> None:
 
     from lakehouse_architecture_transaction_spark.operators.dedup import release_persisted
 
-    from lakehouse_architecture_transaction_spark.plans import REGISTRY as _R  # noqa: F401
     from tools.scale_probe import shuffle_write_bytes
 
     seen_stages: set = set()
@@ -297,7 +279,7 @@ def main() -> None:
             s0 = shuffle_write_bytes(spark)
             for _ in range(3):
                 t0 = time.perf_counter()
-                force_full_result(_fn(name)(spark, d))
+                force_full_result(REGISTRY[name].fn(spark, d))
                 best = min(best, time.perf_counter() - t0)
                 release_persisted()
             s1 = shuffle_write_bytes(spark)
@@ -330,56 +312,23 @@ def main() -> None:
     table = "\n".join(lines)
     print(table)
     if "--update-md" in sys.argv:
-        _update_md(table)
+        _write_block("SKEW-PROBE", table)
         print("SCALE.md updated")
 
 
-BEGIN = "<!-- SKEW-PROBE:BEGIN -->"
-END = "<!-- SKEW-PROBE:END -->"
-TBEGIN = "<!-- SKEW-PROBE-TEXT:BEGIN -->"
-TEND = "<!-- SKEW-PROBE-TEXT:END -->"
-
-
-def _update_text_md(table: str) -> None:
+def _write_block(name: str, table: str) -> None:
+    """Replace the table between SCALE.md's ``<!-- {name}:BEGIN -->`` and
+    ``<!-- {name}:END -->`` markers. The markers wrap only the table: the
+    prose that explains it lives once in SCALE.md, outside them, so a
+    hand edit to it survives every rerun."""
     path = os.path.join(os.path.dirname(os.path.dirname(os.path.abspath(__file__))), "SCALE.md")
-    block = (
-        f"{TBEGIN}\nHot CONTENT keys (r16, ADVICE r15): runs of 3 consecutive\n"
-        f"tokens (positions i%8<3) in EVERY document replaced by one constant\n"
-        f"token, so the hottest bigram carries ~2/8 of all bigram occurrences\n"
-        f"and the hottest 3-shingle ~1/8 of all shingles at unchanged token\n"
-        f"volume. These operators compute their per-key statistic as a WINDOW\n"
-        f"over the content key (the r15 restructures), which AQE cannot\n"
-        f"skew-split — the max-task column is the hot key's one-task bound:\n"
-        f"it must grow proportionately to the head's share (O(hot\n"
-        f"occurrences) work in one task), not explode quadratically.\n\n{table}\n{TEND}"
-    )
+    begin, end = f"<!-- {name}:BEGIN -->", f"<!-- {name}:END -->"
     txt = open(path).read()
-    if TBEGIN in txt and TEND in txt:
-        pre, post = txt.split(TBEGIN)[0], txt.split(TEND)[1]
-        open(path, "w").write(pre + block + post)
-    else:
-        open(path, "a").write("\n## Skew probe — hot content keys (window statistics)\n\n" + block + "\n")
-
-
-def _update_md(table: str) -> None:
-    path = os.path.join(os.path.dirname(os.path.dirname(os.path.abspath(__file__))), "SCALE.md")
-    block = (
-        f"{BEGIN}\nSame volume (sf0.1, 32 files both sides), but ~1/3 of each\n"
-        f"fact's join/window key collapsed onto ONE hot key (events.user_id,\n"
-        f"orders.o_custkey, lineitem.l_partkey, documents.source); per-query\n"
-        f"min of 3 runs. ratio ≈ 1 ⇒ the plan's parallelism does not depend\n"
-        f"on the key distribution; > 2 flags a hot-key funnel. The max-task\n"
-        f"column is the per-task duration ceiling across that cell's runs\n"
-        f"(stage metrics API): wall-clock flatness can hide a straggler that\n"
-        f"32 idle slots absorb at sf0.1 but 1000 busy executors would not —\n"
-        f"a max-task ratio ≫ the wall ratio is the hidden-funnel signal.\n\n{table}\n{END}"
-    )
-    txt = open(path).read()
-    if BEGIN in txt and END in txt:
-        pre, post = txt.split(BEGIN)[0], txt.split(END)[1]
-        open(path, "w").write(pre + block + post)
-    else:
-        open(path, "a").write("\n## Skew probe (hot-key robustness)\n\n" + block + "\n")
+    if begin not in txt or end not in txt:
+        raise SystemExit(f"SCALE.md has no {begin} ... {end} block to update")
+    pre, rest = txt.split(begin, 1)
+    post = rest.split(end, 1)[1]
+    open(path, "w").write(f"{pre}{begin}\n{table}\n{end}{post}")
 
 
 if __name__ == "__main__":
