@@ -99,7 +99,10 @@ def prev_round_tail_names(repo_dir: str) -> list[str]:
     """The query names the LAST round's driver-parsed tail reported
     (highest-numbered BENCH_r{N}.json, ``parsed.queries`` keys) — the
     pin set for :func:`tail_line`. Returns [] when no prior round
-    record exists or it carried no per-query entries."""
+    record exists or it carried no per-query entries. A rerun within a
+    round, once that round's own BENCH_r{N}.json exists, pins to that
+    round's own tail (the highest-numbered record); the pin set is then
+    self-stable across the round's reruns."""
     import glob
     import re
 

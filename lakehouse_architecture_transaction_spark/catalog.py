@@ -37,6 +37,32 @@ def table_path(sf_dir: str, name: str) -> str:
     return os.path.join(sf_dir, f"{name}.parquet")
 
 
+def corpus_fingerprint(sf_dir: str, table: str = "embeddings") -> dict:
+    """Cheap fingerprint of one table: (name, size, mtime_ns) of its
+    parquet file(s). The ANN index store saves it into its manifest at
+    build time and refuses a load when the corpus was regenerated
+    under the index (same failure mode a stale Delta manifest would
+    catch via snapshot ids); session memos key on it for every table,
+    so a rewritten input rebuilds instead of serving the old data."""
+    path = table_path(sf_dir, table)
+    if os.path.isdir(path):
+        paths = [
+            os.path.join(path, n)
+            for n in sorted(os.listdir(path))
+            if not n.startswith((".", "_"))
+        ]
+    else:
+        paths = [path]
+    files = []
+    for p in paths:
+        try:
+            st = os.stat(p)
+        except OSError:
+            continue
+        files.append([os.path.basename(p), st.st_size, st.st_mtime_ns])
+    return {"table": table, "files": files}
+
+
 def _spread(df: DataFrame, spark: SparkSession) -> DataFrame:
     """Guarantee scan parallelism for compute-bound row-local
     pipelines. A single-row-group parquet file is UNSPLITTABLE — Spark

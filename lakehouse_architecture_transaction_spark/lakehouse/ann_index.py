@@ -51,33 +51,6 @@ from pyspark.sql import DataFrame, SparkSession
 from lakehouse_architecture_transaction_spark.lakehouse.table import LakeTable
 
 
-def corpus_fingerprint(sf_dir: str, table: str = "embeddings") -> dict:
-    """Cheap source-corpus fingerprint: (name, size, mtime_ns) of the
-    corpus parquet file(s). Saved into the manifest at index-build
-    time; loaders compare against the live corpus and refuse a load
-    when the data was regenerated under the index (same failure mode
-    a stale Delta manifest would catch via snapshot ids)."""
-    from lakehouse_architecture_transaction_spark.catalog import table_path
-
-    path = table_path(sf_dir, table)
-    if os.path.isdir(path):
-        paths = [
-            os.path.join(path, n)
-            for n in sorted(os.listdir(path))
-            if not n.startswith((".", "_"))
-        ]
-    else:
-        paths = [path]
-    files = []
-    for p in paths:
-        try:
-            st = os.stat(p)
-        except OSError:
-            continue
-        files.append([os.path.basename(p), st.st_size, st.st_mtime_ns])
-    return {"table": table, "files": files}
-
-
 class AnnIndexStore:
     """Versioned on-disk home of one embedding corpus's ANN index."""
 

@@ -33,9 +33,7 @@ schema sidecar.
 
 Scale notes: a full-outer-join merge rewrites the table — that is
 what Delta does logically too (copy-on-write); Delta wins at scale by
-pruning untouched FILES via the log. The partition layout here gives
-the same effect per-partition: merges whose source only touches some
-partitions can restrict the rewrite with ``partition_filter``.
+pruning untouched FILES via the log.
 """
 
 from __future__ import annotations

@@ -6,7 +6,7 @@ and truncated-dimension (Matryoshka) recall, plus the shared vector
 SQL fragments (exact dot/norm folds, HALF_UP decimal rounding, k-means
 assignment/update steps) the embedding and dedup oracles reuse.
 
-Index builds are memoized per (applicationId, sf_dir), so min-of-N
+Index builds are session-memoized (session.session_memo), so min-of-N
 timings measure search, not training; when a persisted index store
 exists for the sf_dir (lakehouse/ann_index.py,
 tools/build_ann_index.py) the loaders read it instead of retraining.
@@ -19,9 +19,10 @@ import os
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
-from lakehouse_architecture_transaction_spark.catalog import load_table
+from lakehouse_architecture_transaction_spark.catalog import corpus_fingerprint, load_table
 from lakehouse_architecture_transaction_spark.operators import similarity as S
 from lakehouse_architecture_transaction_spark.plans.registry import register
+from lakehouse_architecture_transaction_spark.session import session_memo
 
 # -------------------------------------------------- embedding queries
 
@@ -98,15 +99,13 @@ def emb_knn_bruteforce(spark: SparkSession, sf_dir: str) -> DataFrame:
     return S.cosine_topk(emb, id_col="vec_id", vec_col="embedding", query_ids=list(range(_Q_MAX)), k=_K)
 
 
-#: Session-scoped memos of the ANN index structures, keyed by
-#: (applicationId, sf_dir) — the same build-once-query-many pattern as
-#: _signature_frame/_cluster_frame. A vector index (LSH buckets, IVF
-#: centroids + inverted lists, PQ codes) is trained/persisted once in
-#: any real deployment; queries pay only the probe path. Frames are
-#: localCheckpointed so repeated queries (and the min-of-3 frontier
-#: timings) measure SEARCH latency, not the amortized build.
-_LSH_INDEX_MEMO: dict[tuple[str, str], DataFrame] = {}
-_IVF_INDEX_MEMO: dict[tuple[str, str], tuple[DataFrame, DataFrame]] = {}
+# The ANN index structures are session-memoized — the same
+# build-once-query-many pattern as _signature_frame/_cluster_frame. A
+# vector index (LSH buckets, IVF centroids + inverted lists, PQ codes)
+# is trained/persisted once in any real deployment; queries pay only
+# the probe path. Frames are localCheckpointed so repeated queries
+# (and the min-of-3 frontier timings) measure SEARCH latency, not the
+# amortized build.
 
 
 def _train_lsh(spark: SparkSession, sf_dir: str) -> DataFrame:
@@ -120,25 +119,15 @@ def _train_lsh(spark: SparkSession, sf_dir: str) -> DataFrame:
     ).localCheckpoint(eager=True)
 
 
+@session_memo
 def _lsh_index(spark: SparkSession, sf_dir: str) -> DataFrame:
-    key = (spark.sparkContext.applicationId, sf_dir)
-    got = _LSH_INDEX_MEMO.get(key)
-    if got is not None:
-        return got
     # Persisted index first — same contract as _ivf_index below.
-    from lakehouse_architecture_transaction_spark.lakehouse.ann_index import (
-        corpus_fingerprint,
-        default_store,
-    )
+    from lakehouse_architecture_transaction_spark.lakehouse.ann_index import default_store
 
     store = default_store(spark, sf_dir)
     if store is not None and store.has_lsh():
-        built = store.load_lsh(bits=_LSHV_BITS, fingerprint=corpus_fingerprint(sf_dir))
-        _LSH_INDEX_MEMO[key] = built
-        return built
-    built = _train_lsh(spark, sf_dir)
-    _LSH_INDEX_MEMO[key] = built
-    return built
+        return store.load_lsh(bits=_LSHV_BITS, fingerprint=corpus_fingerprint(sf_dir))
+    return _train_lsh(spark, sf_dir)
 
 
 def _train_ivf(spark: SparkSession, sf_dir: str) -> tuple[DataFrame, DataFrame]:
@@ -150,11 +139,8 @@ def _train_ivf(spark: SparkSession, sf_dir: str) -> tuple[DataFrame, DataFrame]:
     return (cent.localCheckpoint(eager=True), corpus.localCheckpoint(eager=True))
 
 
+@session_memo
 def _ivf_index(spark: SparkSession, sf_dir: str) -> tuple[DataFrame, DataFrame]:
-    key = (spark.sparkContext.applicationId, sf_dir)
-    got = _IVF_INDEX_MEMO.get(key)
-    if got is not None:
-        return got
     # Persisted index first ($SPARK_GRAFT_ANN_INDEX_DIR, see
     # lakehouse/ann_index.py): a new session LOADS the committed
     # centroids + clustered corpus instead of re-training — at scale
@@ -163,21 +149,14 @@ def _ivf_index(spark: SparkSession, sf_dir: str) -> tuple[DataFrame, DataFrame]:
     # way (round-trip pinned by test_ann_index_store). The live corpus
     # fingerprint travels with the load so a regenerated corpus
     # refuses the stale index instead of serving old neighbors.
-    from lakehouse_architecture_transaction_spark.lakehouse.ann_index import (
-        corpus_fingerprint,
-        default_store,
-    )
+    from lakehouse_architecture_transaction_spark.lakehouse.ann_index import default_store
 
     store = default_store(spark, sf_dir)
     if store is not None and store.has_ivf():
-        built = store.load_ivf(
+        return store.load_ivf(
             n_cells=_IVF_CELLS, iters=_IVF_ITERS, fingerprint=corpus_fingerprint(sf_dir)
         )
-        _IVF_INDEX_MEMO[key] = built
-        return built
-    built = _train_ivf(spark, sf_dir)
-    _IVF_INDEX_MEMO[key] = built
-    return built
+    return _train_ivf(spark, sf_dir)
 
 
 def _lshv_oracle(radius: int = 2) -> str:
@@ -525,13 +504,6 @@ def _pq_oracle() -> str:
     )
 
 
-#: Session-scoped memo of the trained PQ index (codes + codebooks),
-#: keyed by (applicationId, sf_dir) — emb_product_quantize and
-#: emb_ann_pq_adc train the SAME index; in a real pipeline it is
-#: persisted once. Same pattern as _lsh_index/_ivf_index.
-_PQ_INDEX_MEMO: dict[tuple[str, str], tuple] = {}
-
-
 def _train_pq(spark: SparkSession, sf_dir: str):
     """Train the PQ index from the CURRENT corpus — no store, no memo
     (the build path build_persisted_ann_index uses, so a refresh
@@ -546,31 +518,25 @@ def _train_pq(spark: SparkSession, sf_dir: str):
     return (codes.localCheckpoint(eager=True), cent.localCheckpoint(eager=True))
 
 
+#: The trained PQ index (codes + codebooks) is session-memoized —
+#: emb_product_quantize and emb_ann_pq_adc train the SAME index; in a
+#: real pipeline it is persisted once. Same pattern as
+#: _lsh_index/_ivf_index.
+@session_memo
 def _pq_index(spark: SparkSession, sf_dir: str):
-    key = (spark.sparkContext.applicationId, sf_dir)
-    got = _PQ_INDEX_MEMO.get(key)
-    if got is not None:
-        return got
     # Persisted index first — same contract as _ivf_index
     # (load the committed codes/codebooks instead of re-training; the
     # manifest check refuses a hyperparameter mismatch, the corpus
     # fingerprint refuses a stale index after data regeneration).
-    from lakehouse_architecture_transaction_spark.lakehouse.ann_index import (
-        corpus_fingerprint,
-        default_store,
-    )
+    from lakehouse_architecture_transaction_spark.lakehouse.ann_index import default_store
 
     store = default_store(spark, sf_dir)
     if store is not None and store.has_pq():
-        built = store.load_pq(
+        return store.load_pq(
             m=_PQ_M, dsub=_PQ_DSUB, k=_PQ_K, iters=_PQ_ITERS,
             fingerprint=corpus_fingerprint(sf_dir),
         )
-        _PQ_INDEX_MEMO[key] = built
-        return built
-    built = _train_pq(spark, sf_dir)
-    _PQ_INDEX_MEMO[key] = built
-    return built
+    return _train_pq(spark, sf_dir)
 
 
 def build_persisted_ann_index(spark: SparkSession, sf_dir: str, base_path: str) -> dict[str, int]:
@@ -584,10 +550,7 @@ def build_persisted_ann_index(spark: SparkSession, sf_dir: str, base_path: str) 
     store picks up corpus changes instead of re-committing the stale
     persisted index verbatim. Returns the committed version per
     component table."""
-    from lakehouse_architecture_transaction_spark.lakehouse.ann_index import (
-        AnnIndexStore,
-        corpus_fingerprint,
-    )
+    from lakehouse_architecture_transaction_spark.lakehouse.ann_index import AnnIndexStore
 
     store = AnnIndexStore(
         spark, os.path.join(base_path, os.path.basename(os.path.normpath(sf_dir)))
@@ -606,24 +569,16 @@ def build_persisted_ann_index(spark: SparkSession, sf_dir: str, base_path: str) 
 
 
 #: Search-side packing of the memoized PQ index (packed codes + the
-#: one-row broadcast codebook) — built once per (app, sf_dir) like the
-#: index itself; emb_ann_pq_adc and emb_ann_ivfpq share it so their
-#: searches run with zero index-side shuffles.
-_PQ_PACKED_MEMO: dict[tuple[str, str], tuple] = {}
-
-
+#: one-row broadcast codebook) — session-memoized like the index
+#: itself; emb_ann_pq_adc and emb_ann_ivfpq share it so their searches
+#: run with zero index-side shuffles.
+@session_memo
 def _pq_packed(spark: SparkSession, sf_dir: str):
     from lakehouse_architecture_transaction_spark.operators.similarity import pq_pack_index
 
-    key = (spark.sparkContext.applicationId, sf_dir)
-    got = _PQ_PACKED_MEMO.get(key)
-    if got is not None:
-        return got
     codes, cent = _pq_index(spark, sf_dir)
     pcodes, pbooks = pq_pack_index(codes, cent, "vec_id")
-    built = (pcodes.localCheckpoint(eager=True), pbooks.localCheckpoint(eager=True))
-    _PQ_PACKED_MEMO[key] = built
-    return built
+    return (pcodes.localCheckpoint(eager=True), pbooks.localCheckpoint(eager=True))
 
 
 @register("emb_product_quantize", oracle=_pq_oracle(), headline=True)

@@ -42,6 +42,7 @@ from lakehouse_architecture_transaction_spark.plans.text import (
     _STOPS_SQL,
     _TOKENS,
 )
+from lakehouse_architecture_transaction_spark.session import session_memo
 
 _NORM_TOKENS = (
     "list_filter(regexp_split_to_array("
@@ -137,41 +138,26 @@ def docs_ngram_jaccard_pairs(spark: SparkSession, sf_dir: str) -> DataFrame:
     return _jaccard_pairs_frame(spark, sf_dir).orderBy("id_a", "id_b")
 
 
-#: Session-scoped memos of the two pair frames the dedup-evaluation
-#: family shares: exact Jaccard pairs (the expensive shingle
-#: self-join) and the LSH candidate set. docs_ngram_jaccard_pairs,
+#: Session memos of the two pair frames the dedup-evaluation family
+#: shares: exact Jaccard pairs (the expensive shingle self-join) and
+#: the LSH candidate set. docs_ngram_jaccard_pairs,
 #: docs_minhash_lsh_pairs, docs_lsh_precision and docs_lsh_recall all
 #: read these; in a real pipeline both tables are computed once per
-#: corpus snapshot. Same (applicationId, sf_dir) keying as
-#: _signature_frame.
-_JACCARD_PAIRS_MEMO: dict[tuple[str, str], DataFrame] = {}
-_CAND_PAIRS_MEMO: dict[tuple[str, str], DataFrame] = {}
-
-
+#: corpus snapshot.
+@session_memo
 def _jaccard_pairs_frame(spark: SparkSession, sf_dir: str) -> DataFrame:
-    key = (spark.sparkContext.applicationId, sf_dir)
-    got = _JACCARD_PAIRS_MEMO.get(key)
-    if got is not None:
-        return got
     docs = load_table(spark, sf_dir, "documents", spread=True)
-    pairs = D.ngram_jaccard_pairs(
+    return D.ngram_jaccard_pairs(
         docs, text_col="text", id_col="doc_id", n=3, threshold=0.1, max_df=_MAX_DF
     ).localCheckpoint(eager=True)
-    _JACCARD_PAIRS_MEMO[key] = pairs
-    return pairs
 
 
+@session_memo
 def _cand_pairs_frame(spark: SparkSession, sf_dir: str) -> DataFrame:
-    key = (spark.sparkContext.applicationId, sf_dir)
-    got = _CAND_PAIRS_MEMO.get(key)
-    if got is not None:
-        return got
     sig = _signature_frame(spark, sf_dir)
-    pairs = D.lsh_candidate_pairs(
+    return D.lsh_candidate_pairs(
         sig, id_col="doc_id", num_perms=_NUM_PERMS, bands=_BANDS, bucket_cap=_BUCKET_CAP
     ).localCheckpoint(eager=True)
-    _CAND_PAIRS_MEMO[key] = pairs
-    return pairs
 
 
 def _minhash_oracle() -> str:
@@ -199,25 +185,17 @@ def _minhash_oracle() -> str:
     """
 
 
-#: Session-scoped memo of the MinHash signature frame, keyed by
-#: (applicationId, sf_dir). Four queries consume the SAME signatures
-#: (lsh_pairs, jaccard_est, and the cluster memo's build) — in a real
-#: pipeline the signature table is computed once and persisted. One
-#: row per doc × num_perms longs after localCheckpoint truncation.
-_SIG_MEMO: dict[tuple[str, str], DataFrame] = {}
-
-
+#: Session memo of the MinHash signature frame. Four queries consume
+#: the SAME signatures (lsh_pairs, jaccard_est, and the cluster memo's
+#: build) — in a real pipeline the signature table is computed once
+#: and persisted. One row per doc × num_perms longs after
+#: localCheckpoint truncation.
+@session_memo
 def _signature_frame(spark: SparkSession, sf_dir: str) -> DataFrame:
-    key = (spark.sparkContext.applicationId, sf_dir)
-    got = _SIG_MEMO.get(key)
-    if got is not None:
-        return got
     docs = load_table(spark, sf_dir, "documents", spread=True)
-    sig = D.minhash_signature(
+    return D.minhash_signature(
         docs, text_col="text", id_col="doc_id", num_perms=_NUM_PERMS, n=3
     ).localCheckpoint(eager=True)
-    _SIG_MEMO[key] = sig
-    return sig
 
 
 @register(
@@ -248,34 +226,26 @@ def _dup_clusters_oracle() -> str:
     """
 
 
-#: Session-scoped memo of the MinHash→LSH→CC cluster frame, keyed by
-#: (applicationId, sf_dir). docs_dup_clusters AND docs_dup_cluster_sizes
-#: (and any future survivor policy) consume the same clustering; in a
-#: real pipeline the cluster table is persisted once, so queries that
-#: share a session should not pay the iterative CC twice. The frame is
-#: tiny ((doc_id, cluster_id) at corpus-id cardinality after
-#: localCheckpoint truncation — a few KB at gate scale), so holding it
-#: for the session is safe.
-_CLUSTER_MEMO: dict[tuple[str, str], DataFrame] = {}
-
-
+#: Session memo of the MinHash→LSH→CC cluster frame.
+#: docs_dup_clusters AND docs_dup_cluster_sizes (and any future
+#: survivor policy) consume the same clustering; in a real pipeline the
+#: cluster table is persisted once, so queries that share a session
+#: should not pay the iterative CC twice. The frame is tiny ((doc_id,
+#: cluster_id) at corpus-id cardinality after localCheckpoint
+#: truncation — a few KB at gate scale), so holding it for the session
+#: is safe.
+@session_memo
 def _cluster_frame(spark: SparkSession, sf_dir: str) -> DataFrame:
     from lakehouse_architecture_transaction_spark.operators.graph import connected_components
 
-    key = (spark.sparkContext.applicationId, sf_dir)
-    got = _CLUSTER_MEMO.get(key)
-    if got is not None:
-        return got
     docs = load_table(spark, sf_dir, "documents", spread=True)
     pairs = _cand_pairs_frame(spark, sf_dir)
     comp = connected_components(
         docs.select("doc_id"), pairs, id_col="doc_id", src_col="id_a", dst_col="id_b"
     )
-    comp = comp.select("doc_id", F.col("component").alias("cluster_id")).localCheckpoint(
+    return comp.select("doc_id", F.col("component").alias("cluster_id")).localCheckpoint(
         eager=True
     )
-    _CLUSTER_MEMO[key] = comp
-    return comp
 
 
 @register("docs_dup_clusters", oracle=_dup_clusters_oracle(), headline=True)

@@ -23,11 +23,8 @@ degrees, Benford) complete the module.
 
 from __future__ import annotations
 
-import atexit
 import datetime as _dt
 import math as _math
-import shutil
-import tempfile
 from functools import reduce
 
 from pyspark.sql import DataFrame, SparkSession
@@ -46,6 +43,7 @@ from lakehouse_architecture_transaction_spark.operators.dedup import dedup_exact
 from lakehouse_architecture_transaction_spark.operators.merge import merge_upsert
 from lakehouse_architecture_transaction_spark.operators.scd2 import scd2_build
 from lakehouse_architecture_transaction_spark.plans.registry import register
+from lakehouse_architecture_transaction_spark.session import scratch_dir, session_memo
 
 @register(
     "profile_orders",
@@ -626,22 +624,6 @@ def scd2_customer_history(spark: SparkSession, sf_dir: str) -> DataFrame:
     return hist.orderBy("c_custkey", "valid_from")
 
 
-def _scratch_dir(prefix: str) -> str:
-    """mkdtemp with process-exit cleanup: the clustered/bucketed table
-    copies are session artifacts, not deliverables — without the
-    atexit hook every gate/bench run would leak an orders+lineitem
-    copy into the temp dir."""
-    path = tempfile.mkdtemp(prefix=prefix)
-    atexit.register(shutil.rmtree, path, ignore_errors=True)
-    return path
-
-
-#: Session-scoped memo of the clustered "curated orders" table path,
-#: keyed by (applicationId, sf_dir) — the crawl/cluster step runs once
-#: per session (it IS the table build; queries pay only the scan),
-#: matching the _lsh_index/_cluster_frame amortization pattern.
-_SCAN_TABLE_MEMO: dict[tuple[str, str], str] = {}
-
 #: files in the clustered copy — small enough that every file spans
 #: months (pruning visible at sf0.001), large enough that a 6-month
 #: predicate skips most of them
@@ -651,20 +633,20 @@ _SCAN_FROM = _dt.datetime(1996, 1, 1)
 _SCAN_TO = _dt.datetime(1996, 7, 1)
 
 
+#: The clustered "curated orders" table path is session-memoized — the
+#: crawl/cluster step runs once per session (it IS the table build;
+#: queries pay only the scan), matching the _lsh_index/_cluster_frame
+#: amortization pattern.
+@session_memo
 def clustered_orders_path(spark: SparkSession, sf_dir: str) -> str:
     """Build (once per app+sf_dir) the date-clustered curated orders
     table: ``repartitionByRange`` on o_orderdate gives each parquet
     file a tight, disjoint date span — the single-column analogue of
     zorder_write, and the layout that makes footer pruning bite on
     date predicates."""
-    key = (spark.sparkContext.applicationId, sf_dir)
-    got = _SCAN_TABLE_MEMO.get(key)
-    if got is not None:
-        return got
-    path = _scratch_dir("lakehouse_architecture_transaction_scan_orders_")
+    path = scratch_dir("lakehouse_architecture_transaction_scan_orders_")
     orders = load_table(spark, sf_dir, "orders")
     orders.repartitionByRange(_SCAN_FILES, "o_orderdate").write.mode("overwrite").parquet(path)
-    _SCAN_TABLE_MEMO[key] = path
     return path
 
 
@@ -750,12 +732,10 @@ def orders_salted_segment_revenue(spark: SparkSession, sf_dir: str) -> DataFrame
     )
 
 
-#: Session-scoped memo of the bucketed fact tables (orders + lineitem
-#: bucketed by order key): the write IS the pre-shuffle; every keyed
-#: join afterwards runs with zero exchange on the bucketed columns.
-_BUCKETED_MEMO: dict[tuple[str, str], tuple[str, str]] = {}
-
-
+#: The bucketed fact tables (orders + lineitem bucketed by order key)
+#: are session-memoized: the write IS the pre-shuffle; every keyed join
+#: afterwards runs with zero exchange on the bucketed columns.
+@session_memo
 def bucketed_fact_tables(spark: SparkSession, sf_dir: str) -> tuple[str, str]:
     """Build (once per app+sf_dir) catalog-registered bucketed copies
     of orders and lineitem, co-bucketed on the order key — E14's
@@ -765,13 +745,9 @@ def bucketed_fact_tables(spark: SparkSession, sf_dir: str) -> tuple[str, str]:
 
     from lakehouse_architecture_transaction_spark.lakehouse.table import write_bucketed
 
-    key = (spark.sparkContext.applicationId, sf_dir)
-    got = _BUCKETED_MEMO.get(key)
-    if got is not None:
-        return got
     tag = hashlib.md5(sf_dir.encode()).hexdigest()[:8]
     o_name, l_name = f"bkt_orders_{tag}", f"bkt_lineitem_{tag}"
-    root = _scratch_dir("lakehouse_architecture_transaction_bucketed_")
+    root = scratch_dir("lakehouse_architecture_transaction_bucketed_")
     write_bucketed(
         load_table(spark, sf_dir, "orders"),
         o_name,
@@ -786,7 +762,6 @@ def bucketed_fact_tables(spark: SparkSession, sf_dir: str) -> tuple[str, str]:
         num_buckets=8,
         bucket_cols=["l_orderkey"],
     )
-    _BUCKETED_MEMO[key] = (o_name, l_name)
     return o_name, l_name
 
 
@@ -830,15 +805,14 @@ def orders_lineitem_bucketed_join(spark: SparkSession, sf_dir: str) -> DataFrame
     )
 
 
-#: Session-scoped memo of the Z-order-clustered lineitem copy — built
-#: once per (app, sf_dir) like the range-clustered orders above.
-_ZORDER_MEMO: dict[tuple[str, str], str] = {}
-
 _Z_FILES = 8
 _Z_PARTKEY_LT = 99
 _Z_SUPPKEY_LT = 5
 
 
+#: The Z-order-clustered lineitem copy is session-memoized like the
+#: range-clustered orders above.
+@session_memo
 def zordered_lineitem_path(spark: SparkSession, sf_dir: str) -> str:
     """Build (once per app+sf_dir) the Z-order-clustered lineitem copy
     on (l_partkey, l_suppkey): Morton-interleaved quantile-scaled keys
@@ -847,18 +821,13 @@ def zordered_lineitem_path(spark: SparkSession, sf_dir: str) -> str:
     claim E25's single-column range clustering cannot make."""
     from lakehouse_architecture_transaction_spark.lakehouse.table import zorder_write
 
-    key = (spark.sparkContext.applicationId, sf_dir)
-    got = _ZORDER_MEMO.get(key)
-    if got is not None:
-        return got
-    path = _scratch_dir("lakehouse_architecture_transaction_zorder_lineitem_")
+    path = scratch_dir("lakehouse_architecture_transaction_zorder_lineitem_")
     li = load_table(spark, sf_dir, "lineitem")
     # bits=6 (64 bins/dim): with only 8 output files, finer Morton
     # resolution buys no extra pruning, and the quantile sketch cost
     # scales with 2^bits probes — 10 bits spent ~90 s sketching at
     # sf0.1 for identical files_read.
     zorder_write(li, path, cols=["l_partkey", "l_suppkey"], num_files=_Z_FILES, bits=6)
-    _ZORDER_MEMO[key] = path
     return path
 
 
@@ -910,11 +879,9 @@ def lineitem_zorder_pruned_scan(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
 
 
-#: Session-scoped memo of the versioned orders LakeTable used by the
-#: CDC query (v0 = initial load, v1 = deterministic merge).
-_CDC_MEMO: dict[tuple[str, str], str] = {}
-
-
+#: The versioned orders LakeTable used by the CDC query (v0 = initial
+#: load, v1 = deterministic merge) is session-memoized.
+@session_memo
 def cdc_orders_table(spark: SparkSession, sf_dir: str):
     """Build (once per app+sf_dir) a versioned LakeTable with two
     committed snapshots: v0 = the orders table; v1 = after a
@@ -922,22 +889,18 @@ def cdc_orders_table(spark: SparkSession, sf_dir: str):
     divisible by 100 and inserts a negated-key copy of every key
     ≡ 1 (mod 100). The modification is a pure function of the data,
     so a SQL oracle can state the expected change feed exactly."""
-    key = (spark.sparkContext.applicationId, sf_dir)
-    path = _CDC_MEMO.get(key)
-    if path is None:
-        path = _scratch_dir("lakehouse_architecture_transaction_cdc_orders_")
-        orders = load_table(spark, sf_dir, "orders")
-        t = LakeTable(spark, path, keys=["o_orderkey"], versioned=True)
-        t.create(orders)  # v0
-        updates = orders.filter(F.col("o_orderkey") % 100 == 0).withColumn(
-            "o_orderpriority", F.lit("9-CDC")
-        )
-        inserts = orders.filter(F.col("o_orderkey") % 100 == 1).withColumn(
-            "o_orderkey", -F.col("o_orderkey")
-        )
-        t.upsert(updates.unionByName(inserts))  # v1
-        _CDC_MEMO[key] = path
-    return LakeTable(spark, path, keys=["o_orderkey"], versioned=True)
+    path = scratch_dir("lakehouse_architecture_transaction_cdc_orders_")
+    orders = load_table(spark, sf_dir, "orders")
+    t = LakeTable(spark, path, keys=["o_orderkey"], versioned=True)
+    t.create(orders)  # v0
+    updates = orders.filter(F.col("o_orderkey") % 100 == 0).withColumn(
+        "o_orderpriority", F.lit("9-CDC")
+    )
+    inserts = orders.filter(F.col("o_orderkey") % 100 == 1).withColumn(
+        "o_orderkey", -F.col("o_orderkey")
+    )
+    t.upsert(updates.unionByName(inserts))  # v1
+    return t
 
 
 @register(
@@ -977,23 +940,17 @@ def orders_cdc_diff(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
 
 
-_COMPACT_MEMO: dict[tuple[str, str], str] = {}
-
-
+@session_memo
 def _compacted_orders(spark: SparkSession, sf_dir: str):
     """Build (once per app+sf_dir) a versioned orders LakeTable whose
     history is: v0 = a deliberately fragmented 64-file load (the
     small-file state streaming appends produce), v1 = the OPTIMIZE
     compaction rewrite. The query reads the compacted snapshot."""
-    key = (spark.sparkContext.applicationId, sf_dir)
-    path = _COMPACT_MEMO.get(key)
-    if path is None:
-        path = _scratch_dir("lakehouse_architecture_transaction_compact_orders_")
-        t = LakeTable(spark, path, keys=["o_orderkey"], versioned=True)
-        t.create(load_table(spark, sf_dir, "orders").repartition(64))  # fragmented v0
-        t.compact(target_files=4)  # v1
-        _COMPACT_MEMO[key] = path
-    return LakeTable(spark, path, keys=["o_orderkey"], versioned=True)
+    path = scratch_dir("lakehouse_architecture_transaction_compact_orders_")
+    t = LakeTable(spark, path, keys=["o_orderkey"], versioned=True)
+    t.create(load_table(spark, sf_dir, "orders").repartition(64))  # fragmented v0
+    t.compact(target_files=4)  # v1
+    return t
 
 
 ORDERS_COMPACTED_ORACLE = """
@@ -1030,9 +987,7 @@ def orders_compacted_scan(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
 
 
-_EVO_MEMO: dict[tuple[str, str], str] = {}
-
-
+@session_memo
 def _evolved_orders(spark: SparkSession, sf_dir: str):
     """Build (once per app+sf_dir) a versioned orders LakeTable whose
     schema EVOLVES across commits: v0 loads orders without any extra
@@ -1040,19 +995,15 @@ def _evolved_orders(spark: SparkSession, sf_dir: str):
     ``priority_class`` column under evolve_schema=True (Delta
     mergeSchema). Untouched rows carry NULL in the new column — the
     exact semantics the oracle states."""
-    key = (spark.sparkContext.applicationId, sf_dir)
-    path = _EVO_MEMO.get(key)
-    if path is None:
-        path = _scratch_dir("lakehouse_architecture_transaction_evo_orders_")
-        orders = load_table(spark, sf_dir, "orders")
-        t = LakeTable(spark, path, keys=["o_orderkey"], versioned=True)
-        t.create(orders)  # v0: original schema
-        update = orders.filter(F.col("o_orderkey") % 7 == 0).withColumn(
-            "priority_class", F.substring("o_orderpriority", 1, 1)
-        )
-        t.upsert(update, evolve_schema=True)  # v1: schema + column
-        _EVO_MEMO[key] = path
-    return LakeTable(spark, path, keys=["o_orderkey"], versioned=True)
+    path = scratch_dir("lakehouse_architecture_transaction_evo_orders_")
+    orders = load_table(spark, sf_dir, "orders")
+    t = LakeTable(spark, path, keys=["o_orderkey"], versioned=True)
+    t.create(orders)  # v0: original schema
+    update = orders.filter(F.col("o_orderkey") % 7 == 0).withColumn(
+        "priority_class", F.substring("o_orderpriority", 1, 1)
+    )
+    t.upsert(update, evolve_schema=True)  # v1: schema + column
+    return t
 
 
 ORDERS_EVOLUTION_ORACLE = """
@@ -1108,32 +1059,25 @@ def _total_col():
 # E24: RESTORE / CLONE
 # ------------------------------------------------------------------
 
-_RC_MEMO: dict[tuple[str, str], tuple[str, str]] = {}
-
-
+@session_memo
 def _restore_clone_tables(spark: SparkSession, sf_dir: str) -> tuple[str, str]:
     """v0 = base orders; v1 = deterministic merge (keys ≡ 0 mod 9 get
     o_totalprice + 1.00); clone = deep copy of v1; then RESTORE the
     source table to v0 (a NEW commit — history moves forward)."""
-    key = (spark.sparkContext.applicationId, sf_dir)
-    got = _RC_MEMO.get(key)
-    if got is None:
-        root = _scratch_dir("lakehouse_architecture_transaction_restore_clone_")
-        src_path, clone_path = f"{root}/src", f"{root}/clone"
-        orders = load_table(spark, sf_dir, "orders")
-        t = LakeTable(spark, src_path, keys=["o_orderkey"], versioned=True)
-        t.create(orders)  # v0
-        update = orders.filter(F.col("o_orderkey") % 9 == 0).withColumn(
-            "o_totalprice",
-            (F.col("o_totalprice").cast("decimal(18,2)") + F.lit(1.00).cast("decimal(18,2)"))
-            .cast("double"),
-        )
-        t.upsert(update)  # v1
-        t.clone(clone_path)  # snapshot of v1
-        t.restore(0)  # v2 = v0 content, history intact
-        _RC_MEMO[key] = (src_path, clone_path)
-        got = _RC_MEMO[key]
-    return got
+    root = scratch_dir("lakehouse_architecture_transaction_restore_clone_")
+    src_path, clone_path = f"{root}/src", f"{root}/clone"
+    orders = load_table(spark, sf_dir, "orders")
+    t = LakeTable(spark, src_path, keys=["o_orderkey"], versioned=True)
+    t.create(orders)  # v0
+    update = orders.filter(F.col("o_orderkey") % 9 == 0).withColumn(
+        "o_totalprice",
+        (F.col("o_totalprice").cast("decimal(18,2)") + F.lit(1.00).cast("decimal(18,2)"))
+        .cast("double"),
+    )
+    t.upsert(update)  # v1
+    t.clone(clone_path)  # snapshot of v1
+    t.restore(0)  # v2 = v0 content, history intact
+    return (src_path, clone_path)
 
 
 ORDERS_RESTORE_CLONE_ORACLE = f"""
@@ -1192,23 +1136,17 @@ def orders_restore_clone_audit(spark: SparkSession, sf_dir: str) -> DataFrame:
 # E9: partitioned versioned write + time travel
 # ------------------------------------------------------------------
 
-_TT_MEMO: dict[tuple[str, str], str] = {}
-
-
+@session_memo
 def _timetravel_table(spark: SparkSession, sf_dir: str) -> str:
     """v0 = orders WITHOUT the deterministic late batch (keys ≡ 0
     mod 11), partitioned by o_orderstatus; v1 = append of that batch."""
-    key = (spark.sparkContext.applicationId, sf_dir)
-    path = _TT_MEMO.get(key)
-    if path is None:
-        path = _scratch_dir("lakehouse_architecture_transaction_timetravel_")
-        orders = load_table(spark, sf_dir, "orders")
-        t = LakeTable(
-            spark, path, keys=["o_orderkey"], partition_by="o_orderstatus", versioned=True
-        )
-        t.create(orders.filter(F.col("o_orderkey") % 11 != 0))  # v0
-        t.append(orders.filter(F.col("o_orderkey") % 11 == 0))  # v1
-        _TT_MEMO[key] = path
+    path = scratch_dir("lakehouse_architecture_transaction_timetravel_")
+    orders = load_table(spark, sf_dir, "orders")
+    t = LakeTable(
+        spark, path, keys=["o_orderkey"], partition_by="o_orderstatus", versioned=True
+    )
+    t.create(orders.filter(F.col("o_orderkey") % 11 != 0))  # v0
+    t.append(orders.filter(F.col("o_orderkey") % 11 == 0))  # v1
     return path
 
 
@@ -1261,40 +1199,33 @@ def orders_snapshot_timetravel_stats(spark: SparkSession, sf_dir: str) -> DataFr
 # E19: CHECK constraints + commit log
 # ------------------------------------------------------------------
 
-_CK_MEMO: dict[tuple[str, str], tuple[str, int]] = {}
-
-
+@session_memo
 def _constrained_table(spark: SparkSession, sf_dir: str) -> tuple[str, int]:
     """A constrained table (CHECK o_totalprice > 0): the valid commit
     lands; the violating commit (prices negated on keys ≡ 0 mod 13)
     must be REFUSED atomically — nothing from it becomes visible."""
-    key = (spark.sparkContext.applicationId, sf_dir)
-    got = _CK_MEMO.get(key)
-    if got is None:
-        path = _scratch_dir("lakehouse_architecture_transaction_constraint_")
-        orders = load_table(spark, sf_dir, "orders")
-        t = LakeTable(
-            spark,
-            path,
-            keys=["o_orderkey"],
-            versioned=True,
-            constraints={"positive_price": "o_totalprice > 0"},
-        )
-        t.create(orders)  # valid commit
-        bad = orders.withColumn(
-            "o_totalprice",
-            F.when(F.col("o_orderkey") % 13 == 0, -F.col("o_totalprice")).otherwise(
-                F.col("o_totalprice")
-            ),
-        )
-        refused = 0
-        try:
-            t.upsert(bad)
-        except ValueError:
-            refused = 1
-        _CK_MEMO[key] = (path, refused)
-        got = _CK_MEMO[key]
-    return got
+    path = scratch_dir("lakehouse_architecture_transaction_constraint_")
+    orders = load_table(spark, sf_dir, "orders")
+    t = LakeTable(
+        spark,
+        path,
+        keys=["o_orderkey"],
+        versioned=True,
+        constraints={"positive_price": "o_totalprice > 0"},
+    )
+    t.create(orders)  # valid commit
+    bad = orders.withColumn(
+        "o_totalprice",
+        F.when(F.col("o_orderkey") % 13 == 0, -F.col("o_totalprice")).otherwise(
+            F.col("o_totalprice")
+        ),
+    )
+    refused = 0
+    try:
+        t.upsert(bad)
+    except ValueError:
+        refused = 1
+    return (path, refused)
 
 
 ORDERS_CONSTRAINT_ORACLE = f"""
@@ -1354,40 +1285,35 @@ def orders_constraint_audit(spark: SparkSession, sf_dir: str) -> DataFrame:
 # E7: CSV ingest + corrupt routing
 # ------------------------------------------------------------------
 
-_CSV_MEMO: dict[tuple[str, str], str] = {}
 _CSV_BAD_LINES = [
     '999999991,"unclosed quote,F,123.45,1995-01-01',
     '999999992,BAD"QUOTE"MID,O,99.99,1995-01-02,extra,fields,beyond,schema',
 ]
 
 
+@session_memo
 def _csv_landing_zone(spark: SparkSession, sf_dir: str) -> str:
     """Stage orders as a CSV landing zone (one header-bearing part)
     plus a file of structurally corrupt lines (bad quoting) that the
     PERMISSIVE reader must route to the corrupt channel."""
     import os
 
-    key = (spark.sparkContext.applicationId, sf_dir)
-    src = _CSV_MEMO.get(key)
-    if src is None:
-        src = _scratch_dir("lakehouse_architecture_transaction_csv_zone_")
-        orders = load_table(spark, sf_dir, "orders").select(
-            "o_orderkey",
-            "o_custkey",
-            "o_orderstatus",
-            F.col("o_totalprice").cast("decimal(18,2)").cast("string").alias("o_totalprice"),
-            F.date_format("o_orderdate", "yyyy-MM-dd").alias("o_orderdate"),
-        )
-        staged = os.path.join(src, "csv")
-        orders.coalesce(1).write.option("header", "true").csv(staged)
-        # header=true skips the FIRST line of EVERY file, so the
-        # corrupt part carries a header line too
-        header = "o_orderkey,o_custkey,o_orderstatus,o_totalprice,o_orderdate"
-        with open(os.path.join(staged, "part-corrupt.csv"), "w") as f:
-            f.write(header + "\n" + "\n".join(_CSV_BAD_LINES) + "\n")
-        _CSV_MEMO[key] = staged
-        src = staged
-    return src
+    src = scratch_dir("lakehouse_architecture_transaction_csv_zone_")
+    orders = load_table(spark, sf_dir, "orders").select(
+        "o_orderkey",
+        "o_custkey",
+        "o_orderstatus",
+        F.col("o_totalprice").cast("decimal(18,2)").cast("string").alias("o_totalprice"),
+        F.date_format("o_orderdate", "yyyy-MM-dd").alias("o_orderdate"),
+    )
+    staged = os.path.join(src, "csv")
+    orders.coalesce(1).write.option("header", "true").csv(staged)
+    # header=true skips the FIRST line of EVERY file, so the
+    # corrupt part carries a header line too
+    header = "o_orderkey,o_custkey,o_orderstatus,o_totalprice,o_orderdate"
+    with open(os.path.join(staged, "part-corrupt.csv"), "w") as f:
+        f.write(header + "\n" + "\n".join(_CSV_BAD_LINES) + "\n")
+    return staged
 
 
 ORDERS_CSV_ROUNDTRIP_ORACLE = f"""
@@ -1443,10 +1369,10 @@ def orders_csv_roundtrip_stats(spark: SparkSession, sf_dir: str) -> DataFrame:
 # E15: the reference's three-dataset flow (pipelines.py)
 # ------------------------------------------------------------------
 
-_PIPE_MEMO: dict[tuple[str, str], list] = {}
 _PIPE_OFF = 1_000_000_000
 
 
+@session_memo
 def _pipeline_results(spark: SparkSession, sf_dir: str) -> list:
     """Run the reference pipeline ONCE per (app, sf_dir) on inputs
     with deterministic injected dirt:
@@ -1461,44 +1387,39 @@ def _pipeline_results(spark: SparkSession, sf_dir: str) -> list:
       the rejected count is exactly the items of rejected orders."""
     from lakehouse_architecture_transaction_spark.pipelines import run_reference_pipeline
 
-    key = (spark.sparkContext.applicationId, sf_dir)
-    got = _PIPE_MEMO.get(key)
-    if got is None:
-        root = _scratch_dir("lakehouse_architecture_transaction_pipeline_")
-        part = load_table(spark, sf_dir, "part")
-        orders = load_table(spark, sf_dir, "orders")
-        li = load_table(spark, sf_dir, "lineitem")
-        products_in = part.unionByName(
-            part.withColumn(
-                "p_name",
-                F.when(F.col("p_partkey") % 3 == 0, F.lit(None).cast("string")).otherwise(
-                    F.col("p_name")
-                ),
-            ).withColumn("p_partkey", F.col("p_partkey") + _PIPE_OFF)
+    root = scratch_dir("lakehouse_architecture_transaction_pipeline_")
+    part = load_table(spark, sf_dir, "part")
+    orders = load_table(spark, sf_dir, "orders")
+    li = load_table(spark, sf_dir, "lineitem")
+    products_in = part.unionByName(
+        part.withColumn(
+            "p_name",
+            F.when(F.col("p_partkey") % 3 == 0, F.lit(None).cast("string")).otherwise(
+                F.col("p_name")
+            ),
+        ).withColumn("p_partkey", F.col("p_partkey") + _PIPE_OFF)
+    )
+    orders_in = orders.unionByName(
+        orders.withColumn(
+            "o_totalprice",
+            F.when(F.col("o_orderkey") % 5 == 0, -F.col("o_totalprice")).otherwise(
+                F.col("o_totalprice")
+            ),
         )
-        orders_in = orders.unionByName(
-            orders.withColumn(
-                "o_totalprice",
-                F.when(F.col("o_orderkey") % 5 == 0, -F.col("o_totalprice")).otherwise(
-                    F.col("o_totalprice")
-                ),
-            )
-            .withColumn(
-                "o_orderdate",
-                F.when(
-                    F.col("o_orderkey") % 7 == 0, F.lit(None).cast("timestamp_ntz")
-                ).otherwise(F.col("o_orderdate")),
-            )
-            .withColumn("o_orderkey", F.col("o_orderkey") + _PIPE_OFF)
+        .withColumn(
+            "o_orderdate",
+            F.when(
+                F.col("o_orderkey") % 7 == 0, F.lit(None).cast("timestamp_ntz")
+            ).otherwise(F.col("o_orderdate")),
         )
-        items_in = li.unionByName(
-            li.withColumn("l_orderkey", F.col("l_orderkey") + _PIPE_OFF)
-        )
-        _PIPE_MEMO[key] = run_reference_pipeline(
-            spark, products_in, orders_in, items_in, lake_root=root
-        )
-        got = _PIPE_MEMO[key]
-    return got
+        .withColumn("o_orderkey", F.col("o_orderkey") + _PIPE_OFF)
+    )
+    items_in = li.unionByName(
+        li.withColumn("l_orderkey", F.col("l_orderkey") + _PIPE_OFF)
+    )
+    return run_reference_pipeline(
+        spark, products_in, orders_in, items_in, lake_root=root
+    )
 
 
 PIPELINE_SUMMARY_ORACLE = """
@@ -1559,9 +1480,7 @@ def pipeline_three_dataset_summary(spark: SparkSession, sf_dir: str) -> DataFram
 # E21: event-driven orchestration (landing-zone watcher cycle)
 # ------------------------------------------------------------------
 
-_ORCH_MEMO: dict[tuple[str, str], tuple[str, str, str, str]] = {}
-
-
+@session_memo
 def _orchestrated_zone(spark: SparkSession, sf_dir: str) -> tuple[str, str, str, str]:
     """Stage a landing zone (products/orders/order_items parquet drops
     + ONE structurally corrupt orders drop) and run ONE watcher cycle
@@ -1572,30 +1491,25 @@ def _orchestrated_zone(spark: SparkSession, sf_dir: str) -> tuple[str, str, str,
 
     from lakehouse_architecture_transaction_spark.orchestration import process_landing
 
-    key = (spark.sparkContext.applicationId, sf_dir)
-    got = _ORCH_MEMO.get(key)
-    if got is None:
-        root = _scratch_dir("lakehouse_architecture_transaction_orch_")
-        landing = os.path.join(root, "landing")
-        archive = os.path.join(root, "archive")
-        errors = os.path.join(root, "errors")
-        lake = os.path.join(root, "lake")
-        os.makedirs(landing, exist_ok=True)
-        load_table(spark, sf_dir, "part").write.parquet(
-            os.path.join(landing, "products_1.parquet")
-        )
-        load_table(spark, sf_dir, "orders").write.parquet(
-            os.path.join(landing, "orders_1.parquet")
-        )
-        load_table(spark, sf_dir, "lineitem").write.parquet(
-            os.path.join(landing, "order_items_1.parquet")
-        )
-        with open(os.path.join(landing, "orders_corrupt_2.parquet"), "wb") as f:
-            f.write(b"this is not a parquet file\n")
-        process_landing(spark, landing, archive, errors, lake)
-        _ORCH_MEMO[key] = (landing, archive, errors, lake)
-        got = _ORCH_MEMO[key]
-    return got
+    root = scratch_dir("lakehouse_architecture_transaction_orch_")
+    landing = os.path.join(root, "landing")
+    archive = os.path.join(root, "archive")
+    errors = os.path.join(root, "errors")
+    lake = os.path.join(root, "lake")
+    os.makedirs(landing, exist_ok=True)
+    load_table(spark, sf_dir, "part").write.parquet(
+        os.path.join(landing, "products_1.parquet")
+    )
+    load_table(spark, sf_dir, "orders").write.parquet(
+        os.path.join(landing, "orders_1.parquet")
+    )
+    load_table(spark, sf_dir, "lineitem").write.parquet(
+        os.path.join(landing, "order_items_1.parquet")
+    )
+    with open(os.path.join(landing, "orders_corrupt_2.parquet"), "wb") as f:
+        f.write(b"this is not a parquet file\n")
+    process_landing(spark, landing, archive, errors, lake)
+    return (landing, archive, errors, lake)
 
 
 ORCHESTRATION_AUDIT_ORACLE = """
@@ -1810,33 +1724,26 @@ def catalog_inclusion_profile(spark: SparkSession, sf_dir: str) -> DataFrame:
 # orders_gdpr_erasure_audit — right-to-be-forgotten lifecycle
 # ------------------------------------------------------------------
 
-_GDPR_MEMO: dict[tuple[str, str], str] = {}
-
-
+@session_memo
 def _erasure_table(spark: SparkSession, sf_dir: str) -> str:
     """v0 = base orders; v1 = base minus every order of the single
     heaviest customer (most orders, min custkey tiebreak), erased via
     the copy-on-write overwrite commit (stage-and-swap safe against
     read-then-overwrite)."""
-    key = (spark.sparkContext.applicationId, sf_dir)
-    got = _GDPR_MEMO.get(key)
-    if got is None:
-        root = _scratch_dir("lakehouse_architecture_transaction_gdpr_")
-        path = f"{root}/orders"
-        orders = load_table(spark, sf_dir, "orders")
-        t = LakeTable(spark, path, keys=["o_orderkey"], versioned=True)
-        t.create(orders)  # v0
-        victim = (
-            orders.groupBy("o_custkey")
-            .agg(F.count("*").alias("__n"))
-            .orderBy(F.col("__n").desc(), F.col("o_custkey").asc())
-            .limit(1)
-            .select("o_custkey")
-        )
-        t.overwrite(t.read().join(F.broadcast(victim), "o_custkey", "left_anti"))  # v1
-        _GDPR_MEMO[key] = path
-        got = path
-    return got
+    root = scratch_dir("lakehouse_architecture_transaction_gdpr_")
+    path = f"{root}/orders"
+    orders = load_table(spark, sf_dir, "orders")
+    t = LakeTable(spark, path, keys=["o_orderkey"], versioned=True)
+    t.create(orders)  # v0
+    victim = (
+        orders.groupBy("o_custkey")
+        .agg(F.count("*").alias("__n"))
+        .orderBy(F.col("__n").desc(), F.col("o_custkey").asc())
+        .limit(1)
+        .select("o_custkey")
+    )
+    t.overwrite(t.read().join(F.broadcast(victim), "o_custkey", "left_anti"))  # v1
+    return path
 
 
 ORDERS_GDPR_ERASURE_ORACLE = """

@@ -13,9 +13,7 @@ SQL over the base tables.
 
 from __future__ import annotations
 
-import atexit
 import shutil
-import tempfile
 
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
@@ -23,24 +21,18 @@ from pyspark.sql import functions as F
 from lakehouse_architecture_transaction_spark.catalog import load_table
 from lakehouse_architecture_transaction_spark.lakehouse.table import LakeTable
 from lakehouse_architecture_transaction_spark.plans.registry import register
+from lakehouse_architecture_transaction_spark.session import scratch_dir, session_memo
 
 # ------------------------------------------------------------------
 # events_stream_hourly — the STREAMING pipeline, oracle-checked
 # ------------------------------------------------------------------
 
-_STREAM_SRC_MEMO: dict[tuple[str, str], str] = {}
-
-
+@session_memo
 def _stream_events_src(spark: SparkSession, sf_dir: str) -> str:
     """Stage (once per app+sf_dir) the events table as an 8-file
     parquet landing zone for the file-source streams."""
-    key = (spark.sparkContext.applicationId, sf_dir)
-    src = _STREAM_SRC_MEMO.get(key)
-    if src is None:
-        src = tempfile.mkdtemp(prefix="lakehouse_architecture_transaction_stream_events_")
-        atexit.register(shutil.rmtree, src, ignore_errors=True)
-        load_table(spark, sf_dir, "events").repartition(8).write.mode("overwrite").parquet(src)
-        _STREAM_SRC_MEMO[key] = src
+    src = scratch_dir("lakehouse_architecture_transaction_stream_events_")
+    load_table(spark, sf_dir, "events").repartition(8).write.mode("overwrite").parquet(src)
     return src
 
 EVENTS_STREAM_HOURLY_ORACLE = """
@@ -294,9 +286,7 @@ def events_stream_sessions(spark: SparkSession, sf_dir: str) -> DataFrame:
 # S4: streaming exact dedup against a re-delivering source
 # ------------------------------------------------------------------
 
-_DUP_SRC_MEMO: dict[tuple[str, str], str] = {}
-
-
+@session_memo
 def _redelivered_events_src(spark: SparkSession, sf_dir: str) -> str:
     """Stage (once per app+sf_dir) a landing zone where every fifth
     event (event_id % 5 == 0) is DELIVERED TWICE — the at-least-once
@@ -304,16 +294,11 @@ def _redelivered_events_src(spark: SparkSession, sf_dir: str) -> str:
     re-deliveries, so whichever arrives first is the keeper and the
     deduped stream equals the original table regardless of file/batch
     order."""
-    key = (spark.sparkContext.applicationId, sf_dir)
-    src = _DUP_SRC_MEMO.get(key)
-    if src is None:
-        src = tempfile.mkdtemp(prefix="lakehouse_architecture_transaction_stream_dups_")
-        atexit.register(shutil.rmtree, src, ignore_errors=True)
-        ev = load_table(spark, sf_dir, "events")
-        ev.unionByName(ev.filter(F.col("event_id") % 5 == 0)).repartition(
-            8
-        ).write.mode("overwrite").parquet(src)
-        _DUP_SRC_MEMO[key] = src
+    src = scratch_dir("lakehouse_architecture_transaction_stream_dups_")
+    ev = load_table(spark, sf_dir, "events")
+    ev.unionByName(ev.filter(F.col("event_id") % 5 == 0)).repartition(
+        8
+    ).write.mode("overwrite").parquet(src)
     return src
 
 
@@ -568,9 +553,7 @@ def events_stream_enriched(spark: SparkSession, sf_dir: str) -> DataFrame:
 # S7: foreachBatch streaming upsert → versioned LakeTable → CDC diff
 # ------------------------------------------------------------------
 
-_UPSERT_CDC_MEMO: dict[tuple[str, str], str] = {}
-
-
+@session_memo
 def _stream_upserted_orders(spark: SparkSession, sf_dir: str) -> str:
     """Build (once per app+sf_dir) the S7 scenario: a versioned
     LakeTable seeded with a deliberately WRONG orders snapshot
@@ -585,42 +568,36 @@ def _stream_upserted_orders(spark: SparkSession, sf_dir: str) -> str:
     diff(v0, latest) is batch-order-independent."""
     from lakehouse_architecture_transaction_spark.streaming.pipeline import stream_upsert_into
 
-    key = (spark.sparkContext.applicationId, sf_dir)
-    path = _UPSERT_CDC_MEMO.get(key)
-    if path is None:
-        root = tempfile.mkdtemp(prefix="lakehouse_architecture_transaction_s7_cdc_")
-        atexit.register(shutil.rmtree, root, ignore_errors=True)
-        orders = load_table(spark, sf_dir, "orders")
-        ptype = orders.schema["o_totalprice"].dataType.simpleString()
-        seed = orders.filter(F.col("o_orderkey") % 13 != 0).withColumn(
-            "o_totalprice",
-            F.when(
-                F.col("o_orderkey") % 7 == 0, F.lit(0).cast(ptype)
-            ).otherwise(F.col("o_totalprice")),
-        )
-        table = LakeTable(spark, f"{root}/orders", keys=["o_orderkey"], versioned=True)
-        table.create(seed)  # v0: the stale serving snapshot
-        src = f"{root}/landing"
-        orders.repartition(8).write.mode("overwrite").parquet(src)
-        stream = (
-            spark.readStream.schema(orders.schema)
-            .option("maxFilesPerTrigger", 3)
-            .parquet(src)
-        )
-        from lakehouse_architecture_transaction_spark.streaming.pipeline import (
-            gate_state_partitions,
-        )
+    root = scratch_dir("lakehouse_architecture_transaction_s7_cdc_")
+    orders = load_table(spark, sf_dir, "orders")
+    ptype = orders.schema["o_totalprice"].dataType.simpleString()
+    seed = orders.filter(F.col("o_orderkey") % 13 != 0).withColumn(
+        "o_totalprice",
+        F.when(
+            F.col("o_orderkey") % 7 == 0, F.lit(0).cast(ptype)
+        ).otherwise(F.col("o_totalprice")),
+    )
+    table = LakeTable(spark, f"{root}/orders", keys=["o_orderkey"], versioned=True)
+    table.create(seed)  # v0: the stale serving snapshot
+    src = f"{root}/landing"
+    orders.repartition(8).write.mode("overwrite").parquet(src)
+    stream = (
+        spark.readStream.schema(orders.schema)
+        .option("maxFilesPerTrigger", 3)
+        .parquet(src)
+    )
+    from lakehouse_architecture_transaction_spark.streaming.pipeline import (
+        gate_state_partitions,
+    )
 
-        # no stream state stores here (the table IS the state), but
-        # each micro-batch's merge join still shuffles at session
-        # width — pin the replay like the other bounded runs
-        with gate_state_partitions(spark):
-            q = stream_upsert_into(stream, table, checkpoint_dir=f"{root}/ckpt")
-            q.processAllAvailable()
-            q.stop()
-        path = f"{root}/orders"
-        _UPSERT_CDC_MEMO[key] = path
-    return path
+    # no stream state stores here (the table IS the state), but
+    # each micro-batch's merge join still shuffles at session
+    # width — pin the replay like the other bounded runs
+    with gate_state_partitions(spark):
+        q = stream_upsert_into(stream, table, checkpoint_dir=f"{root}/ckpt")
+        q.processAllAvailable()
+        q.stop()
+    return f"{root}/orders"
 
 
 ORDERS_STREAM_UPSERT_CDC_ORACLE = """
@@ -702,10 +679,10 @@ def orders_stream_upsert_cdc(spark: SparkSession, sf_dir: str) -> DataFrame:
 # set is therefore EXACTLY the batch gap-sessionization of the real
 # events; the sentinel sessions stay open in state and never emit.
 
-_SFS_MEMO: dict[tuple[str, str], str] = {}
 _SFS_SLICES = 6
 
 
+@session_memo
 def _stateful_sessions_src(spark: SparkSession, sf_dir: str) -> str:
     """Stage (once per app+sf_dir) the events table as 6 time-ordered
     slices + 1 sentinel file (one event per user, 1 day past the max
@@ -713,19 +690,13 @@ def _stateful_sessions_src(spark: SparkSession, sf_dir: str) -> str:
     source replays them in event-time order."""
     import os
 
-    key = (spark.sparkContext.applicationId, sf_dir)
-    src = _SFS_MEMO.get(key)
-    if src is not None:
-        return src
-    src = tempfile.mkdtemp(prefix="lakehouse_architecture_transaction_sessfn_")
-    atexit.register(shutil.rmtree, src, ignore_errors=True)
+    src = scratch_dir("lakehouse_architecture_transaction_sessfn_")
     ev = load_table(spark, sf_dir, "events")
     # 1-ROW aggregate collect at memo time (slice boundaries for the
     # replay harness) — not a data collect; the staged zone itself is
     # written distributed.
     lo, hi = ev.agg(F.min("ts"), F.max("ts")).collect()[0]
-    stage = tempfile.mkdtemp(prefix="lakehouse_architecture_transaction_sessfn_stage_")
-    atexit.register(shutil.rmtree, stage, ignore_errors=True)
+    stage = scratch_dir("lakehouse_architecture_transaction_sessfn_stage_")
 
     def _ship(df, i: int) -> None:
         df.coalesce(1).write.mode("overwrite").parquet(stage)
@@ -736,7 +707,6 @@ def _stateful_sessions_src(spark: SparkSession, sf_dir: str) -> str:
 
     if lo is None:
         _ship(ev, 0)  # empty corpus: one empty, schema-bearing file
-        _SFS_MEMO[key] = src
         return src
     span = (hi - lo) / _SFS_SLICES
 
@@ -771,7 +741,6 @@ def _stateful_sessions_src(spark: SparkSession, sf_dir: str) -> str:
         )
     )
     _ship(sentinel.select([f.name for f in ev.schema.fields]), _SFS_SLICES)
-    _SFS_MEMO[key] = src
     return src
 
 

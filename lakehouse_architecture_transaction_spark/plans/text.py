@@ -24,6 +24,7 @@ from lakehouse_architecture_transaction_spark.operators import dedup as D
 from lakehouse_architecture_transaction_spark.operators import sampling as SA
 from lakehouse_architecture_transaction_spark.operators import text as T
 from lakehouse_architecture_transaction_spark.plans.registry import register
+from lakehouse_architecture_transaction_spark.session import session_memo
 
 # ----------------------------------------------------------- SQL lego
 
@@ -1231,47 +1232,16 @@ def docs_langid_confusion(spark: SparkSession, sf_dir: str) -> DataFrame:
 # ------------------------------------------------------------------
 
 
-#: Learned merge table per (applicationId, sf_dir) — docs_bpe_merges
-#: and docs_bpe_invariants consume the SAME 8-round training run, so
+#: Learned merge table, session-memoized — docs_bpe_merges and
+#: docs_bpe_invariants consume the SAME 8-round training run, so
 #: registering the invariant companion does not double the iterative
-#: cost (house memo pattern, the signature memo in plans/dedup.py). Bounded LRU
-#:: the values are localCheckpoint-backed, so an
-#: unbounded memo would pin checkpoint storage for every (app,
-#: sf_dir) pair a long-lived session ever touches; eviction drops the
-#: reference ONLY (ContextCleaner reclaims the blocks once the RDD is
-#: garbage-collected — never an eager unpersist, which would crash a
-#: still-held evicted frame). Cap 4 covers every gate/
-#: bench sweep (one app × ≤3 sf dirs) without re-training thrash.
-_BPE_MERGES_MEMO: dict[tuple[str, str], DataFrame] = {}
-_BPE_MERGES_MEMO_CAP = 4
-
-
-def _lru_touch(memo: dict, key, value, cap: int):
-    """Insert/refresh ``key`` (insertion order = recency) and evict
-    past ``cap`` by dropping the reference ONLY. The values are
-    localCheckpoint-backed: their lineage is already truncated, so an
-    eager ``unpersist()`` would delete the checkpoint blocks under any
-    still-held reference, turning its next action into a
-    checkpoint-block-not-found crash instead of a recompute. Dropping the reference lets ContextCleaner reclaim the
-    blocks once the RDD is garbage-collected — callers that retained
-    an evicted frame keep a working (still block-backed) handle until
-    they release it."""
-    memo.pop(key, None)
-    memo[key] = value
-    while len(memo) > cap:
-        memo.pop(next(iter(memo)))
-    return value
-
-
+#: cost (house memo pattern, the signature memo in plans/dedup.py).
+@session_memo
 def _bpe_merges(spark: SparkSession, sf_dir: str) -> DataFrame:
-    key = (spark.sparkContext.applicationId, sf_dir)
-    got = _BPE_MERGES_MEMO.get(key)
-    if got is None:
-        from lakehouse_architecture_transaction_spark.operators.text import bpe_learn_merges
+    from lakehouse_architecture_transaction_spark.operators.text import bpe_learn_merges
 
-        docs = load_table(spark, sf_dir, "documents", spread=True)
-        got = bpe_learn_merges(docs, id_col="doc_id", text_col="text", n_merges=8)
-    return _lru_touch(_BPE_MERGES_MEMO, key, got, _BPE_MERGES_MEMO_CAP)
+    docs = load_table(spark, sf_dir, "documents", spread=True)
+    return bpe_learn_merges(docs, id_col="doc_id", text_col="text", n_merges=8)
 
 
 @register("docs_bpe_merges", oracle=None, headline=True)

@@ -6,13 +6,23 @@ splitting, partition coalescing), shuffle partitions sized from the
 environment, Arrow enabled for the Pandas-UDF slow path, session
 timezone pinned to UTC so timestamp semantics match the DuckDB oracle
 and any other engine reading the same parquet.
+
+It also holds the session memo: plan helpers that build an artifact
+once per session (a staged table, a landing zone, a trained index, a
+checkpointed pair frame) and serve it to every query that reads it.
 """
 
 from __future__ import annotations
 
+import atexit
+import functools
 import os
+import shutil
+import tempfile
 
 from pyspark.sql import SparkSession
+
+from lakehouse_architecture_transaction_spark.catalog import TABLES, corpus_fingerprint
 
 
 def get_spark(
@@ -67,3 +77,71 @@ def get_spark(
     spark = builder.getOrCreate()
     spark.sparkContext.setLogLevel("WARN")
     return spark
+
+
+#: Entries kept per memoized builder: covers every gate/bench sweep
+#: (one app × ≤3 sf dirs) without rebuild thrash, and lets frames of
+#: stopped sessions go once newer apps replace them.
+_MEMO_CAP = 4
+#: One dict per memoized builder, so clear() reaches all of them.
+_MEMOS: list[dict] = []
+
+
+def _lru_touch(memo: dict, key, value, cap: int):
+    """Insert/refresh ``key`` (insertion order = recency) and evict
+    past ``cap`` by dropping the reference ONLY. The values are
+    localCheckpoint-backed: their lineage is already truncated, so an
+    eager ``unpersist()`` would delete the checkpoint blocks under any
+    still-held reference, turning its next action into a
+    checkpoint-block-not-found crash instead of a recompute. Dropping the reference lets ContextCleaner reclaim the
+    blocks once the RDD is garbage-collected — callers that retained
+    an evicted frame keep a working (still block-backed) handle until
+    they release it."""
+    memo.pop(key, None)
+    memo[key] = value
+    while len(memo) > cap:
+        memo.pop(next(iter(memo)))
+    return value
+
+
+def _lake_fingerprint(sf_dir: str) -> tuple:
+    """(table, name, size, mtime_ns) of every file of every catalog
+    table under ``sf_dir`` — a rewritten input changes the memo key."""
+    return tuple(
+        (table, *f) for table in TABLES for f in corpus_fingerprint(sf_dir, table)["files"]
+    )
+
+
+def session_memo(build):
+    """Memoize a ``build(spark, sf_dir)`` plan helper per (applicationId,
+    sf_dir, lake fingerprint): queries that share a session share the
+    artifact, a new session or rewritten input files build it afresh,
+    and each builder keeps at most ``_MEMO_CAP`` entries (LRU, see
+    _lru_touch)."""
+    memo: dict = {}
+    _MEMOS.append(memo)
+
+    @functools.wraps(build)
+    def memoized(spark: SparkSession, sf_dir: str):
+        key = (spark.sparkContext.applicationId, sf_dir, _lake_fingerprint(sf_dir))
+        value = memo[key] if key in memo else build(spark, sf_dir)
+        return _lru_touch(memo, key, value, _MEMO_CAP)
+
+    return memoized
+
+
+def clear() -> None:
+    """Forget every session memo entry; the next call of each builder
+    builds again."""
+    for memo in _MEMOS:
+        memo.clear()
+
+
+def scratch_dir(prefix: str) -> str:
+    """mkdtemp with process-exit cleanup: staged tables and landing
+    zones are session artifacts, not deliverables — without the
+    atexit hook every gate/bench run would leak an orders+lineitem
+    copy into the temp dir."""
+    path = tempfile.mkdtemp(prefix=prefix)
+    atexit.register(shutil.rmtree, path, ignore_errors=True)
+    return path

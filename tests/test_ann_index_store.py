@@ -14,19 +14,12 @@ import sys
 import pytest
 from pyspark.sql import functions as F
 
+from lakehouse_architecture_transaction_spark.session import clear
+
 
 def _rows(df):
     # repr-exact canonical rowset (same normalization as the gates)
     return sorted(tuple(repr(v) for v in r) for r in df.collect())
-
-
-def _clear_memos():
-    from lakehouse_architecture_transaction_spark.plans import ann
-
-    ann._IVF_INDEX_MEMO.clear()
-    ann._LSH_INDEX_MEMO.clear()
-    ann._PQ_INDEX_MEMO.clear()
-    ann._PQ_PACKED_MEMO.clear()
 
 
 @pytest.fixture
@@ -36,7 +29,7 @@ def index_env(tmp_path):
     the suite keeps its in-process builds."""
     old = os.environ.get("SPARK_GRAFT_ANN_INDEX_DIR")
     os.environ["SPARK_GRAFT_ANN_INDEX_DIR"] = str(tmp_path)
-    _clear_memos()
+    clear()
     try:
         yield str(tmp_path)
     finally:
@@ -44,7 +37,7 @@ def index_env(tmp_path):
             os.environ.pop("SPARK_GRAFT_ANN_INDEX_DIR", None)
         else:
             os.environ["SPARK_GRAFT_ANN_INDEX_DIR"] = old
-        _clear_memos()
+        clear()
 
 
 def test_persisted_index_roundtrip_bit_identical(spark, sf_dir, tmp_path, index_env):
@@ -60,7 +53,7 @@ def test_persisted_index_roundtrip_bit_identical(spark, sf_dir, tmp_path, index_
     assert set(versions) == {"ivf_centroids", "ivf_corpus", "pq_codes", "pq_books", "lsh_corpus"}
 
     # Drop the session memos: the next call must LOAD the store.
-    _clear_memos()
+    clear()
     assert _rows(REGISTRY["emb_ann_ivfpq"].fn(spark, sf_dir)) == expected_ivfpq
     assert _rows(REGISTRY["emb_ann_ivf"].fn(spark, sf_dir)) == expected_ivf
     assert _rows(REGISTRY["emb_ann_lsh"].fn(spark, sf_dir)) == expected_lsh
@@ -157,10 +150,8 @@ def test_ivf_lifecycle_refresh_diff_restore(spark, sf_dir, tmp_path, index_env):
 
     import pyarrow.parquet as pq
 
-    from lakehouse_architecture_transaction_spark.lakehouse.ann_index import (
-        AnnIndexStore,
-        corpus_fingerprint,
-    )
+    from lakehouse_architecture_transaction_spark.catalog import corpus_fingerprint
+    from lakehouse_architecture_transaction_spark.lakehouse.ann_index import AnnIndexStore
     from lakehouse_architecture_transaction_spark.plans import REGISTRY
     from lakehouse_architecture_transaction_spark.plans.ann import build_persisted_ann_index
 
@@ -176,7 +167,7 @@ def test_ivf_lifecycle_refresh_diff_restore(spark, sf_dir, tmp_path, index_env):
 
     v0 = build_persisted_ann_index(spark, sfc, index_env)
     fp0 = corpus_fingerprint(sfc)
-    _clear_memos()
+    clear()
     topk0 = _rows(REGISTRY["emb_ann_ivf"].fn(spark, sfc))
 
     store = AnnIndexStore(spark, os.path.join(index_env, "sf"))
@@ -203,13 +194,13 @@ def test_ivf_lifecycle_refresh_diff_restore(spark, sf_dir, tmp_path, index_env):
     pq.write_table(pa.Table.from_pandas(df, schema=tbl.schema, preserve_index=False), dst)
 
     # The stale-corpus guard must now refuse the old index...
-    _clear_memos()
+    clear()
     with pytest.raises(ValueError, match="different corpus"):
         REGISTRY["emb_ann_ivf"].fn(spark, sfc)
 
     # ...and a refresh must RETRAIN from the changed corpus, not
     # re-commit the loaded stale index (the ADVICE stale-reload bug).
-    _clear_memos()
+    clear()
     v1 = build_persisted_ann_index(spark, sfc, index_env)
     assert all(v1[t] == v0[t] + 1 for t in v0)
 
@@ -234,5 +225,5 @@ def test_ivf_lifecycle_refresh_diff_restore(spark, sf_dir, tmp_path, index_env):
     # bit-identical top-k as before the bad build, no data rewrite.
     shutil.copy2(backup, dst)
     store.restore_pins("ivf", v0, fingerprint=fp0)
-    _clear_memos()
+    clear()
     assert _rows(REGISTRY["emb_ann_ivf"].fn(spark, sfc)) == topk0

@@ -1214,7 +1214,7 @@ def test_bpe_merges_memo_lru_eviction():
     # drop the reference ONLY — the values are localCheckpoint-backed,
     # so an eager unpersist would delete blocks under any still-held
     # reference (lineage already truncated → crash, not recompute).
-    from lakehouse_architecture_transaction_spark.plans.text import _lru_touch
+    from lakehouse_architecture_transaction_spark.session import _lru_touch
 
     class Frame:
         def unpersist(self):
@@ -1237,7 +1237,7 @@ def test_lru_evicted_checkpoint_frame_still_usable(spark):
     # ADVICE r13 end-to-end pin: retain a localCheckpoint-backed frame
     # across >cap touches; the evicted handle must still answer
     # actions (the block store keeps it until the reference is GC'd)
-    from lakehouse_architecture_transaction_spark.plans.text import _lru_touch
+    from lakehouse_architecture_transaction_spark.session import _lru_touch
 
     memo: dict = {}
     retained = spark.range(10).localCheckpoint(eager=True)

@@ -802,17 +802,16 @@ def test_stateful_sessions_companion_session_timezone_independent(spark, sf_dir)
     (the memo keys on app+sf_dir, so clear it) keeps the sentinel
     computation itself under test."""
     from lakehouse_architecture_transaction_spark.plans import streaming as Q
+    from lakehouse_architecture_transaction_spark.session import clear
 
     prior = spark.conf.get("spark.sql.session.timeZone")
-    staged = dict(Q._SFS_MEMO)
     try:
         spark.conf.set("spark.sql.session.timeZone", "America/New_York")
-        Q._SFS_MEMO.clear()
+        clear()
         con = _duck(sf_dir)
         got = _canon_rows(Q.events_stream_sessions_stateful(spark, sf_dir))
         want = _duck_rows(con, Q.EVENTS_STREAM_SESSIONS_STATEFUL_ORACLE)
         assert got == want
     finally:
         spark.conf.set("spark.sql.session.timeZone", prior)
-        Q._SFS_MEMO.clear()
-        Q._SFS_MEMO.update(staged)
+        clear()

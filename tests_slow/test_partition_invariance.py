@@ -104,9 +104,9 @@ _QUEUED_SAMPLE = [
     ("behavior", "events_touch_attribution"),
     ("window", "customer_survival_curve"),
     # the rest of the r11 registrations (r11: all eight now registered;
-    # the gdpr audit is excluded — its LakeTable memo keys on
-    # (applicationId, sf_dir), so the second run reads the same staged
-    # table and the check would be vacuous)
+    # the gdpr audit is excluded — its LakeTable is session-memoized,
+    # so the second run reads the same staged table and the check
+    # would be vacuous)
     ("text", "docs_langid_confusion"),
     ("dedup", "emb_pair_sim_histogram"),
     ("etl", "orders_benford_audit"),

@@ -39,20 +39,12 @@ BEGIN = "<!-- ANN-FRONTIER:BEGIN -->"
 END = "<!-- ANN-FRONTIER:END -->"
 
 
-def _clear_index_memos() -> None:
-    from lakehouse_architecture_transaction_spark.plans import ann
-
-    ann._IVF_INDEX_MEMO.clear()
-    ann._LSH_INDEX_MEMO.clear()
-    ann._PQ_INDEX_MEMO.clear()
-    ann._PQ_PACKED_MEMO.clear()
-
-
 def index_timings(spark, sf_dir: str, index_dir: str) -> list[tuple[str, float, float]]:
     """(family, train_s, load_s) per index family: index-ready time
     from a cold memo, training from the corpus vs loading the
     persisted store — the per-session cost the store amortizes."""
     from lakehouse_architecture_transaction_spark.plans import ann
+    from lakehouse_architecture_transaction_spark.session import clear
 
     builders = [
         ("ivf", ann._ivf_index),
@@ -69,7 +61,7 @@ def index_timings(spark, sf_dir: str, index_dir: str) -> list[tuple[str, float, 
             else:
                 os.environ["SPARK_GRAFT_ANN_INDEX_DIR"] = mode_env
             for fam, fn in builders:
-                _clear_index_memos()
+                clear()
                 t0 = time.time()
                 fn(spark, sf_dir)
                 times.setdefault(fam, []).append(time.time() - t0)
@@ -84,7 +76,7 @@ def index_timings(spark, sf_dir: str, index_dir: str) -> list[tuple[str, float, 
 
 def run(sf_dir: str, index_dir: str | None) -> tuple[list, list]:
     import __spark_entry__ as entry
-    from lakehouse_architecture_transaction_spark.session import get_spark
+    from lakehouse_architecture_transaction_spark.session import clear, get_spark
 
     spark = get_spark()
     idx_rows: list[tuple[str, float, float]] = []
@@ -102,7 +94,7 @@ def run(sf_dir: str, index_dir: str | None) -> tuple[list, list]:
         idx_rows = index_timings(spark, sf_dir, index_dir)
         # production path for the variant timings: load from the store
         os.environ["SPARK_GRAFT_ANN_INDEX_DIR"] = index_dir
-        _clear_index_memos()
+        clear()
     qs = entry.queries()
     truth: dict[int, set[int]] = {}
     rows_out = []

@@ -147,18 +147,18 @@ NOTES = {
     ),
     "orders_market_basket": (
         "`Scan ExistingRDD` is the session-memoized co-purchase pair frame "
-        "(behavior.py `_copurchase_pairs`): the fact scan + distinct + "
+        "(graph.py `_copurchase_pairs`): the fact scan + distinct + "
         "orderkey-co-partitioned self-join + pair aggregate run ONCE per "
         "session at checkpoint time and are shared with part_pagerank / "
         "part_copurchase_jaccard / part_copurchase_triangles."
     ),
     "part_copurchase_jaccard": (
         "Both `Scan ExistingRDD`s are shared session memos (distinct "
-        "(order, part) frame + weighted pair frame, behavior.py); the "
+        "(order, part) frame + weighted pair frame, graph.py); the "
         "degree joins broadcast from the materialized frames."
     ),
     "part_copurchase_triangles": (
-        "Reads the shared pair-frame memo (behavior.py), orients edges by "
+        "Reads the shared pair-frame memo (graph.py), orients edges by "
         "(degree, id), builds oriented out-adjacency lists, and closes "
         "triangles with a per-edge array_intersect — open wedges never "
         "reach a shuffle; adjacency arrays are capped at ~sqrt(m) by the "
