@@ -33,7 +33,7 @@ sys.path.insert(0, os.path.dirname(os.path.abspath(__file__)))
 
 from lakehouse_architecture_transaction_spark.plans import REGISTRY
 from lakehouse_architecture_transaction_spark.session import get_spark
-from lakehouse_architecture_transaction_spark.measure import force_full_result
+from lakehouse_architecture_transaction_spark.measure import timed_run, warm_up
 
 #: The headline set: every query registered with ``headline=True``, in
 #: registry order. Its family (the plan module that defines it) keys the
@@ -351,17 +351,7 @@ def main() -> None:
     sf_dir = os.environ.get("SPARK_GRAFT_SF_DIR", "/root/testdata/sf0.1")
     cpus = int(os.environ.get("SPARK_GRAFT_CPUS", os.cpu_count() or 4))
     spark = get_spark("bench", cpus=cpus)
-
-    # Warmup: JVM + codegen + parquet footer caches, plus the Python
-    # worker pool (Arrow-batched ops otherwise pay ~3s of daemon
-    # spin-up on their first query — boot cost, not plan cost).
-    # warm up through the MEASUREMENT action so the noop sink's own
-    # one-time init (datasource lookup, write-path codegen) is paid
-    # here, not inside the first timed run
-    force_full_result(REGISTRY["q1_pricing_summary"].fn(spark, sf_dir))
-    spark.range(cpus).repartition(cpus).mapInPandas(lambda it: it, "id long").count()
-
-    from lakehouse_architecture_transaction_spark.operators.dedup import release_persisted
+    warm_up(spark, sf_dir)
 
     runs = int(os.environ.get("SPARK_GRAFT_BENCH_RUNS", "3"))
     # Pre-capture quiesce gate (r12 verdict item 5): don't START a
@@ -388,17 +378,8 @@ def main() -> None:
     total = 0.0
     dispersion_cold_inclusive = False
     for name in HEADLINE:
-        n_runs = runs
-        done = 0
-        samples: list[float] = []
-        while done < n_runs:
-            t0 = time.perf_counter()
-            force_full_result(REGISTRY[name].fn(spark, sf_dir))
-            samples.append(time.perf_counter() - t0)
-            release_persisted()  # caches must not leak across queries
-            done += 1
-            if done == runs:
-                n_runs = total_runs_for(min(samples), runs)
+        samples = [timed_run(spark, name, sf_dir) for _ in range(runs)]
+        samples += [timed_run(spark, name, sf_dir) for _ in range(total_runs_for(min(samples), runs) - runs)]
         times[name] = round(min(samples), 4)
         total += times[name]
         ratio, cold = dispersion_sample(samples)

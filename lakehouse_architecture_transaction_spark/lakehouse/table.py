@@ -5,11 +5,9 @@ scripts/glue/script.py:201-227): first write creates the table
 partitioned by a chosen column; subsequent batches MERGE on the
 primary key (whenMatchedUpdateAll + whenNotMatchedInsertAll).
 
-delta-spark isn't in this image, so the default backend is parquet
-with an atomic directory-swap rewrite; when the ``delta`` package is
-importable the same API routes to a real DeltaTable merge (transaction
-log, file-level pruning). The merge itself is the join-based operator
-in operators/merge.py — identical logical plan either way.
+The storage is parquet with an atomic directory-swap rewrite. The
+merge itself is the join-based operator in operators/merge.py — the
+same logical plan as Delta's update-all/insert-all merge.
 
 One commit rule serves every write that replaces the table's
 contents (``create``, ``overwrite``, the parquet ``upsert``,
@@ -47,13 +45,6 @@ from datetime import datetime, timezone
 from pyspark.sql import DataFrame, SparkSession
 
 from lakehouse_architecture_transaction_spark.operators.merge import merge_upsert
-
-try:  # pragma: no cover - delta not present in the test image
-    from delta.tables import DeltaTable  # type: ignore
-
-    _HAVE_DELTA = True
-except ImportError:
-    _HAVE_DELTA = False
 
 
 def _hidden(name: str) -> bool:
@@ -267,36 +258,29 @@ class LakeTable:
 
     def num_rows(self) -> int:
         """Row count of the current snapshot from the parquet footers —
-        no Spark job (a Delta table counts through ``read()``)."""
-        if _HAVE_DELTA and not self.versioned:  # pragma: no cover - delta not in test image
-            return self.read().count()
+        no Spark job."""
         return _parquet_footer_rows(self._snapshot_dir())
 
     def read(self, version: int | None = None) -> DataFrame:
-        target = self._snapshot_dir(version)
-        if _HAVE_DELTA and not self.versioned:
-            return self.spark.read.format("delta").load(target)
-        return _read_snapshot(self.spark, target)
+        return _read_snapshot(self.spark, self._snapshot_dir(version))
 
     # -- writes --------------------------------------------------------
 
     def _writer(self, df: DataFrame):
-        """A writer for ``df`` in the table's partitioning and format."""
+        """A parquet writer for ``df`` in the table's partitioning."""
         writer = df.write
         if self.partition_by and self.partition_by in df.columns:
             writer = writer.partitionBy(self.partition_by)
-        return writer.format("delta" if _HAVE_DELTA else "parquet")
+        return writer.format("parquet")
 
     def _write(self, df: DataFrame, target: str) -> None:
         self._writer(df).mode("overwrite").save(target)
-        if not _HAVE_DELTA:
-            # after the data write: overwrite mode has already cleared
-            # the directory, so the sidecar always describes THIS
-            # snapshot (partition column included — the explicit-schema
-            # read then types partition values identically to the
-            # written frame)
-            with open(os.path.join(target, "_schema.json"), "w") as f:
-                f.write(df.schema.json())
+        # after the data write: overwrite mode has already cleared the
+        # directory, so the sidecar always describes THIS snapshot
+        # (partition column included — the explicit-schema read then
+        # types partition values identically to the written frame)
+        with open(os.path.join(target, "_schema.json"), "w") as f:
+            f.write(df.schema.json())
 
     def _replace(self, df: DataFrame, operation: str) -> int:
         """Make ``df`` the table's contents under the module's commit
@@ -341,17 +325,6 @@ class LakeTable:
             self.create(source)
             return
         self._check_constraints(source)
-        if _HAVE_DELTA and not self.versioned:  # pragma: no cover - delta not in test image
-            dt = DeltaTable.forPath(self.spark, self.path)
-            cond = " AND ".join(f"existing.{k} = updates.{k}" for k in self.keys)
-            (
-                dt.alias("existing")
-                .merge(source.alias("updates"), cond)
-                .whenMatchedUpdateAll()
-                .whenNotMatchedInsertAll()
-                .execute()
-            )
-            return
         self._replace(merge_upsert(self.read(), source, keys=self.keys, evolve_schema=evolve_schema), "merge")
 
     def compact(self, target_files: int = 8) -> int:

@@ -7,7 +7,7 @@ delta-spark isn't in this image, so the engine expresses the same
 semantics as a full-outer join that prefers the source row — exactly
 what Delta's merge produces for update-all/insert-all, minus the
 transaction log. ``lakehouse/table.py`` wires this into a persistent
-parquet table (and uses real Delta when importable).
+parquet table.
 
 Scale: one shuffle on the merge key for each side (or broadcast when
 the update batch is small — the common CDC case, which Catalyst/AQE

@@ -35,7 +35,8 @@ def get_spark(
     to ~2-3x total executor cores instead; AQE coalescing makes the
     exact number forgiving. ``ui=True`` enables the Spark UI (off by
     default — tests/gates don't need the port) so measurement tools
-    can read per-stage shuffle metrics from the REST API.
+    can read stage, task, SQL and shuffle metrics from its REST API
+    through ``measure.SparkUI``, the one reader of it.
     """
     if cpus is None:
         cpus = int(os.environ.get("SPARK_GRAFT_CPUS", os.cpu_count() or 4))
@@ -73,6 +74,13 @@ def get_spark(
         .config("spark.sql.autoBroadcastJoinThreshold", str(64 * 1024 * 1024))
         .config("spark.driver.memory", os.environ.get("SPARK_GRAFT_DRIVER_MEM", "16g"))
         .config("spark.ui.enabled", "true" if ui else "false")
+        # A UI session is read by measure.SparkUI. Its status store then
+        # aggregates each SQL execution's metrics on the listener thread
+        # (the default hands that to a background thread), so the
+        # reader's listener-bus barrier covers them too: read right
+        # after the action, broadcast row counts otherwise come back
+        # missing on some runs.
+        .config("spark.appStateStore.asyncTracking.enable", "false" if ui else "true")
     )
     spark = builder.getOrCreate()
     spark.sparkContext.setLogLevel("WARN")

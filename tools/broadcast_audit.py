@@ -8,8 +8,9 @@ static grep cannot adjudicate this (plenty of broadcasts legitimately
 carry key columns), so this tool MEASURES it: run every registered
 query at two scale factors, read each run's BroadcastExchange
 "number of output rows" metrics from the UI REST API's SQL endpoint
-(Spark 4.1 no longer reports a broadcast data-size metric), and flag
-any query whose LARGEST broadcast grows with the corpus.
+through measure.SparkUI (Spark 4.1 no longer reports a broadcast
+data-size metric), and flag any query whose LARGEST broadcast grows
+with the corpus.
 
 Reading the flags: dims (region/nation at fixed cardinality) and
 aggregate/argmax frames stay ~flat across SFs. SURVEY §6's documented
@@ -26,17 +27,15 @@ Defaults: /root/testdata/sf0.001 vs /root/testdata/sf0.01 (10x rows).
 
 from __future__ import annotations
 
-import json as _json
 import os
 import re
 import sys
-import urllib.request
 
 sys.path.insert(0, os.path.dirname(os.path.dirname(os.path.abspath(__file__))))
 
 from lakehouse_architecture_transaction_spark.plans import REGISTRY  # noqa: E402
 from lakehouse_architecture_transaction_spark.session import get_spark  # noqa: E402
-from lakehouse_architecture_transaction_spark.measure import force_full_result  # noqa: E402
+from lakehouse_architecture_transaction_spark.measure import SparkUI, timed_run  # noqa: E402
 
 GROWTH_FLOOR_ROWS = 5_000  # ignore smaller broadcasts at sfB
 GROWTH_RATIO = 4.0  # flag when rows(sfB) > 4x rows(sfA) for 10x rows
@@ -52,60 +51,36 @@ def parse_rows(v: str) -> int:
     return best
 
 
-def _sql_execs(spark) -> list[dict]:
-    base = spark.sparkContext.uiWebUrl
-    app = spark.sparkContext.applicationId
-    out: list[dict] = []
-    offset = 0
-    while True:
-        url = f"{base}/api/v1/applications/{app}/sql?details=true&planDescription=false&offset={offset}&length=200"
-        try:
-            with urllib.request.urlopen(url) as r:
-                page = _json.load(r)
-        except Exception:  # noqa: BLE001 — metrics are best-effort
-            return out
-        out.extend(page)
-        if len(page) < 200:
-            return out
-        offset += len(page)
-
-
-def max_broadcast_rows(spark, since_id: int) -> tuple[int, int]:
-    """(max BroadcastExchange output rows, max seen execution id) over
-    SQL executions with id > since_id."""
-    best, last = 0, since_id
-    for ex in _sql_execs(spark):
-        eid = ex.get("id", -1)
-        last = max(last, eid)
-        if eid <= since_id:
-            continue
+def max_broadcast_rows(ui: SparkUI) -> int:
+    """Max BroadcastExchange output rows over the SQL executions that
+    ``ui`` has not returned before."""
+    best = 0
+    for ex in ui.new_sql_executions():
         for node in ex.get("nodes", []):
             if "BroadcastExchange" not in node.get("nodeName", ""):
                 continue
             for metric in node.get("metrics", []):
                 if metric.get("name") == "number of output rows":
                     best = max(best, parse_rows(metric.get("value", "")))
-    return best, last
+    return best
 
 
 def measure(spark, sf_dir: str) -> dict[str, int]:
-    from lakehouse_architecture_transaction_spark.operators.dedup import release_persisted
-
+    ui = SparkUI(spark)
+    ui.new_sql_executions()  # drain pre-existing
     sizes: dict[str, int] = {}
-    _, last = max_broadcast_rows(spark, -1)  # drain pre-existing
-    for name, spec in REGISTRY.items():
+    for name in REGISTRY:
         try:
-            force_full_result(spec.fn(spark, sf_dir))
-            sizes[name], last = max_broadcast_rows(spark, last)
+            timed_run(spark, name, sf_dir)
         except Exception as e:  # noqa: BLE001 — audit everything else
             print(f"  ERROR {name}: {type(e).__name__}: {str(e)[:100]}", flush=True)
             sizes[name] = -1
             # still advance past the failed query's partial SQL
             # executions — otherwise its BroadcastExchange metrics
             # get attributed to the NEXT query (r10 advice).
-            _, last = max_broadcast_rows(spark, last)
-        finally:
-            release_persisted()
+            ui.new_sql_executions()
+            continue
+        sizes[name] = max_broadcast_rows(ui)
     return sizes
 
 

@@ -10,8 +10,9 @@ query went 2.99 s -> 4.47 s between driver captures. A static plan
 read cannot adjudicate this (the exchange still SAYS 32 partitions
 before AQE re-plans it), so this tool MEASURES it: run every
 registered query once, read each run's completed stages from the UI
-REST API, and flag queries with a stage that is BOTH slow (sum of
-task time above a floor) AND narrow (fewer tasks than cores/4).
+REST API (measure.SparkUI), and flag queries with a stage that is BOTH
+slow (sum of task time above a floor) AND narrow (fewer tasks than
+cores/4).
 
 Reading the flags: single-row aggregates, TakeOrdered finals, and
 driver-side memo builds are legitimately narrow AND fast — the task-
@@ -28,16 +29,14 @@ Default: /root/testdata/sf0.1 (funnels need enough data to hurt).
 
 from __future__ import annotations
 
-import json as _json
 import os
 import sys
-import urllib.request
 
 sys.path.insert(0, os.path.dirname(os.path.dirname(os.path.abspath(__file__))))
 
 from lakehouse_architecture_transaction_spark.plans import REGISTRY  # noqa: E402
 from lakehouse_architecture_transaction_spark.session import get_spark  # noqa: E402
-from lakehouse_architecture_transaction_spark.measure import force_full_result  # noqa: E402
+from lakehouse_architecture_transaction_spark.measure import SparkUI, timed_run  # noqa: E402
 
 #: a stage is "slow" when its tasks together burned this much CPU-ms —
 #: below it, narrowness is noise (tiny finals, 1-row aggregates)
@@ -48,49 +47,30 @@ NARROW_DIVISOR = 4
 SKIP_PREFIXES = ("events_stream_", "orders_stream_")
 
 
-def _stages(spark, after_id: int) -> list[dict]:
-    base = spark.sparkContext.uiWebUrl
-    app = spark.sparkContext.applicationId
-    url = f"{base}/api/v1/applications/{app}/stages?status=complete"
-    try:
-        with urllib.request.urlopen(url) as r:
-            return [s for s in _json.load(r) if s.get("stageId", -1) > after_id]
-    except Exception:  # noqa: BLE001 — metrics are best-effort
-        return []
-
-
-def _max_stage_id(spark) -> int:
-    return max((s.get("stageId", -1) for s in _stages(spark, -1)), default=-1)
-
-
 def audit(spark, sf_dir: str, only: set[str]) -> list[tuple[str, int, int, int]]:
-    from lakehouse_architecture_transaction_spark.operators.dedup import release_persisted
-
+    ui = SparkUI(spark)
     cores = spark.sparkContext.defaultParallelism
     narrow_cut = max(2, cores // NARROW_DIVISOR)
     flags: list[tuple[str, int, int, int]] = []
-    last = _max_stage_id(spark)
-    for name, spec in REGISTRY.items():
+    ui.new_stages()  # absorb the stages that ran before the audit
+    for name in REGISTRY:
         if only and name not in only:
             continue
         if name.startswith(SKIP_PREFIXES):
             continue
         try:
-            force_full_result(spec.fn(spark, sf_dir))
+            timed_run(spark, name, sf_dir)
         except Exception as e:  # noqa: BLE001 — audit everything else
             print(f"  ERROR {name}: {type(e).__name__}: {str(e)[:100]}", flush=True)
-            last = _max_stage_id(spark)
+            ui.new_stages()
             continue
-        finally:
-            release_persisted()
         worst = None
-        for s in _stages(spark, last):
+        for s in ui.new_stages():
             n_tasks = s.get("numCompleteTasks", 0)
             ttime = s.get("executorRunTime", 0)
             if ttime >= STAGE_TASKTIME_FLOOR_MS and 0 < n_tasks < narrow_cut:
                 if worst is None or ttime > worst[1]:
                     worst = (s.get("stageId"), ttime, n_tasks)
-        last = _max_stage_id(spark)
         if worst:
             flags.append((name, *worst))
             print(

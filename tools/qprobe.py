@@ -6,9 +6,9 @@ Usage:
     python tools/qprobe.py [--plans OUTDIR] [--suffix TAG] [--runs N]
                            [--sf SF_DIR] query [query ...]
 
-For each query: warm the session (flagship query + Python worker
-pool, same as bench.py), then run min-of-N with
-measure.force_full_result and print one line per query. With
+For each query: warm the session with measure.warm_up (the bench's
+warm-up), then run min-of-N measure.timed_run and print every run's
+wall time and the min, one line per query. With
 ``--plans`` the ``explain("formatted")`` output is written to
 ``OUTDIR/<query>_<suffix>.txt`` (the r15 deliverable format).
 """
@@ -19,14 +19,13 @@ import argparse
 import io
 import os
 import sys
-import time
 from contextlib import redirect_stdout
 
 sys.path.insert(0, os.path.dirname(os.path.dirname(os.path.abspath(__file__))))
 
 from lakehouse_architecture_transaction_spark.plans import REGISTRY  # noqa: E402
 from lakehouse_architecture_transaction_spark.session import get_spark  # noqa: E402
-from lakehouse_architecture_transaction_spark.measure import force_full_result  # noqa: E402
+from lakehouse_architecture_transaction_spark.measure import timed_run, warm_up  # noqa: E402
 
 
 def main() -> None:
@@ -40,10 +39,7 @@ def main() -> None:
 
     cpus = int(os.environ.get("SPARK_GRAFT_CPUS", os.cpu_count() or 4))
     spark = get_spark("qprobe", cpus=cpus)
-    # identical warmup to bench.py: JVM/codegen/noop-sink init + the
-    # Python worker pool, so probe timings are comparable to bench rows
-    force_full_result(REGISTRY["q1_pricing_summary"].fn(spark, args.sf))
-    spark.range(cpus).repartition(cpus).mapInPandas(lambda it: it, "id long").count()
+    warm_up(spark, args.sf)
 
     from lakehouse_architecture_transaction_spark.operators.dedup import release_persisted
     from bench import measure_anchor_mc
@@ -53,12 +49,7 @@ def main() -> None:
         if name not in REGISTRY:
             print(f"SKIP {name}: not registered")
             continue
-        samples = []
-        for _ in range(args.runs):
-            t0 = time.perf_counter()
-            force_full_result(REGISTRY[name].fn(spark, args.sf))
-            samples.append(time.perf_counter() - t0)
-            release_persisted()
+        samples = [timed_run(spark, name, args.sf) for _ in range(args.runs)]
         if args.plans:
             os.makedirs(args.plans, exist_ok=True)
             df = REGISTRY[name].fn(spark, args.sf)

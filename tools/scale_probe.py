@@ -25,9 +25,10 @@ projections collapse to row-count shortcuts, so their rows measured
 less than the real query (fixed round 11; the whole table is
 regenerated under the noop action).
 
-Usage: python tools/scale_probe.py [--factors 1,2,4,8] [--update-md]
+Usage: python tools/scale_probe.py [--factors 1,2,4,8] [--only=q,...] [--update-md]
 Writes per-factor parquet to /tmp/spark_graft_scale/x{f}/ (reused if
-present) and, with --update-md, rewrites the table in SCALE.md.
+present) and, with --update-md, rewrites the table in SCALE.md (with
+--only, merges the probed rows into it).
 """
 
 from __future__ import annotations
@@ -40,10 +41,9 @@ sys.path.insert(0, os.path.dirname(os.path.dirname(os.path.abspath(__file__))))
 
 from pyspark.sql import functions as F  # noqa: E402
 
-from lakehouse_architecture_transaction_spark.catalog import load_table  # noqa: E402
-from lakehouse_architecture_transaction_spark.plans import REGISTRY  # noqa: E402
 from lakehouse_architecture_transaction_spark.session import get_spark  # noqa: E402
-from lakehouse_architecture_transaction_spark.measure import force_full_result  # noqa: E402
+from lakehouse_architecture_transaction_spark.measure import SparkUI, timed_run, warm_up  # noqa: E402
+from tools.skew_probe import _write_block  # noqa: E402
 
 BASE = "/root/testdata/sf0.1"
 OUT = "/tmp/spark_graft_scale"
@@ -296,31 +296,6 @@ def build_scaled(spark, factor: int) -> str:
     return out_dir
 
 
-def shuffle_write_bytes(spark) -> int:
-    """Total shuffle-write bytes over all completed stages so far,
-    from the UI REST API (the probe session runs with ui=True).
-    Deltas around a run give that run's shuffle volume — the number
-    that must scale LINEARLY with the data for a plan to be healthy
-    (time can stay flat while parallelism absorbs the growth; shuffle
-    bytes cannot lie)."""
-    import json as _json
-    import urllib.request
-
-    base = spark.sparkContext.uiWebUrl
-    app = spark.sparkContext.applicationId
-    try:
-        # executors, not stages: the stage list is evicted past
-        # spark.ui.retainedStages (cumulative totals can DECREASE and a
-        # long probe's poll payload grows to MBs); per-executor
-        # totalShuffleWrite is cumulative for the app's lifetime and a
-        # few hundred bytes to fetch.
-        with urllib.request.urlopen(f"{base}/api/v1/applications/{app}/executors") as r:
-            execs = _json.load(r)
-        return sum(e.get("totalShuffleWrite", 0) for e in execs)
-    except Exception:  # noqa: BLE001 — metrics are best-effort
-        return -1
-
-
 def main() -> None:
     global PROBES
     factors = [1, 2, 4, 8]
@@ -342,7 +317,8 @@ def main() -> None:
         PROBES = only
     cpus = int(os.environ.get("SPARK_GRAFT_CPUS", "32"))
     spark = get_spark("scale-probe", cpus=cpus, ui=True)
-    REGISTRY["q1_pricing_summary"].fn(spark, BASE).count()  # warmup
+    warm_up(spark, BASE)
+    ui = SparkUI(spark)
 
     # factor 1 goes through the SAME writer: identical file counts and
     # row-group layout, so ratios measure data growth, not the base
@@ -353,8 +329,6 @@ def main() -> None:
         dirs[f_] = build_scaled(spark, f_)
         print(f"built x{f_} in {time.perf_counter() - t0:.1f}s", flush=True)
 
-    from lakehouse_architecture_transaction_spark.operators.dedup import release_persisted
-
     # cold = first run on a fresh (app, sf_dir) key — session-memoized
     # index/signature builds are PART of the measured cost (they are
     # the part that scales); warm = min of the two repeat runs.
@@ -364,28 +338,12 @@ def main() -> None:
     for name in PROBES:
         cold[name], warm[name], shuf[name] = {}, {}, {}
         for f_ in factors:
-            times = []
-            sh0 = shuffle_write_bytes(spark)
-            for _ in range(3):
-                t0 = time.perf_counter()
-                # noop write, NOT .count(): count() lets Catalyst prune
-                # the measured work — a union of ungrouped aggregates
-                # has a row count independent of its aggregate
-                # expressions (catalog_column_stats read 0.0 MB shuffle
-                # under count() vs 8.9 MB real), and a map-only
-                # projection prunes to a parquet row-count pushdown
-                # (docs_token_stats' flat 0.26 s "scan" measured
-                # nothing). The noop sink executes the FULL plan, all
-                # columns, and discards rows executor-side — no driver
-                # transfer to distort big-output shapes.
-                force_full_result(REGISTRY[name].fn(spark, dirs[f_]))
-                times.append(time.perf_counter() - t0)
-                release_persisted()
+            sh0 = ui.shuffle_write_bytes()
+            times = [timed_run(spark, name, dirs[f_]) for _ in range(3)]
             # 3 identical runs → per-run shuffle volume = delta / 3
             # (memoized builds land in run 1's share; fine — cold owns
             # the build in the time columns too)
-            sh1 = shuffle_write_bytes(spark)
-            shuf[name][f_] = (sh1 - sh0) / 3 / 1e6 if sh0 >= 0 and sh1 >= 0 else float("nan")
+            shuf[name][f_] = (ui.shuffle_write_bytes() - sh0) / 3 / 1e6
             cold[name][f_] = times[0]
             warm[name][f_] = min(times[1:])
         row = "  ".join(
@@ -422,7 +380,7 @@ def main() -> None:
         if only:
             _merge_md_rows(lines[2:])
         else:
-            _update_md(table, cpus)
+            _write_block("SCALE-PROBE", f"Measured on local[{cpus}].\n\n{table}")
         print("SCALE.md updated")
 
 
@@ -430,13 +388,11 @@ def _merge_md_rows(rows: list[str]) -> None:
     """Row-level merge of a --only subset run into the existing
     SCALE.md table: rows for already-probed queries are replaced in
     place, new queries append at the table end. Requires the same
-    factor set as the existing table (the header is kept as-is)."""
+    factor set as the existing table (the header and the ``local[N]``
+    line are kept as-is)."""
     path = os.path.join(os.path.dirname(os.path.dirname(os.path.abspath(__file__))), "SCALE.md")
-    txt = open(path).read()
-    assert BEGIN in txt and END in txt, "no existing table to merge into — run a full probe"
-    pre, rest = txt.split(BEGIN, 1)
-    block, post = rest.split(END, 1)
-    out_lines = block.split("\n")
+    _, rest = open(path).read().split("<!-- SCALE-PROBE:BEGIN -->", 1)
+    out_lines = rest.split("<!-- SCALE-PROBE:END -->", 1)[0].strip("\n").split("\n")
     by_name = {r.split("`")[1]: r for r in rows}
     last_row_idx = max(i for i, ln in enumerate(out_lines) if ln.startswith("| `"))
     merged = []
@@ -448,53 +404,7 @@ def _merge_md_rows(rows: list[str]) -> None:
         if i == last_row_idx:
             merged.extend(by_name.values())
             by_name = {}
-    open(path, "w").write(pre + BEGIN + "\n".join(merged) + END + post)
-
-
-BEGIN = "<!-- SCALE-PROBE:BEGIN -->"
-END = "<!-- SCALE-PROBE:END -->"
-
-
-def _update_md(table: str, cpus: int) -> None:
-    path = os.path.join(os.path.dirname(os.path.dirname(os.path.abspath(__file__))), "SCALE.md")
-    block = (
-        f"{BEGIN}\nMeasured on local[{cpus}], data = sf0.1 replicated with shifted key\n"
-        f"spaces (see tools/scale_probe.py header for the replication model).\n"
-        f"cold = first run at that volume (includes session-memoized index/\n"
-        f"signature builds — the part that scales); warm = min of 2 repeats;\n"
-        f"shuffle = per-run shuffle-write MB from the UI REST API. Shuffle\n"
-        f"bytes are the honest scaling signal: wall time can stay flat while\n"
-        f"parallelism absorbs the growth, shuffle volume cannot lie — linear\n"
-        f"shuffle + flat time is exactly the healthy distributed shape, and\n"
-        f"a near-zero shuffle column is a broadcast/scan-agg plan confirmed.\n"
-        f"Every factor, including ×1, is written by the same writer with the\n"
-        f"same file count ({N_FILES}), so per-task row volume — not read\n"
-        f"parallelism — is what grows with the factor.\n"
-        f"Measured action: noop-sink write of the FULL result (r11 fix —\n"
-        f"the earlier .count() action let Catalyst prune ungrouped-\n"
-        f"aggregate unions and map-only projections down to row-count\n"
-        f"shortcuts, so those rows under-measured the real query).\n\n{table}\n{END}"
-    )
-    if os.path.exists(path):
-        txt = open(path).read()
-        if BEGIN in txt and END in txt:
-            pre = txt.split(BEGIN)[0]
-            post = txt.split(END)[1]
-            open(path, "w").write(pre + block + post)
-            return
-    open(path, "w").write(
-        "# SCALE — measured scale-up behavior\n\n"
-        "A fixed-sf bench can't show whether a plan's cost is linear in the\n"
-        "data or hiding a quadratic/skew cliff. This probe replicates the\n"
-        "bench tables with consistent key-space growth (dimensions stay\n"
-        "fixed — 25 nations serve any corpus, as at real scale) and reruns\n"
-        "representative query shapes at ×2/×4/×8 volume.\n\n"
-        "Reading the table: a healthy distributed plan at these tiny\n"
-        "volumes should grow SUB-linearly (per-stage constants amortize);\n"
-        "anything growing FASTER than the data factor is a red flag —\n"
-        "a quadratic candidate stage, a skew hotspot, or a driver-side\n"
-        "bottleneck.\n\n" + block + "\n"
-    )
+    _write_block("SCALE-PROBE", "\n".join(merged))
 
 
 if __name__ == "__main__":

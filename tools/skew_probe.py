@@ -11,25 +11,24 @@ events.user_id, orders.o_custkey, lineitem.l_partkey), dimensions and
 row counts unchanged, then run the window/join shapes on both layouts.
 The report is the skewed/uniform wall-time ratio: ≈1 means the plan's
 parallelism does not depend on the key distribution; >2 flags a
-hot-key funnel.
+hot-key funnel. ``--text-only`` runs the hot-content-key leg instead
+(uniform vs hot_text on TEXT_PROBES).
 
-Usage: python tools/skew_probe.py [--update-md]
+Usage: python tools/skew_probe.py [--text-only] [--update-md]
 """
 
 from __future__ import annotations
 
 import os
 import sys
-import time
 
 sys.path.insert(0, os.path.dirname(os.path.dirname(os.path.abspath(__file__))))
 
 from pyspark.sql import functions as F  # noqa: E402
 
 from lakehouse_architecture_transaction_spark.catalog import TABLES  # noqa: E402
-from lakehouse_architecture_transaction_spark.plans import REGISTRY  # noqa: E402
 from lakehouse_architecture_transaction_spark.session import get_spark  # noqa: E402
-from lakehouse_architecture_transaction_spark.measure import force_full_result  # noqa: E402
+from lakehouse_architecture_transaction_spark.measure import SparkUI, timed_run, warm_up  # noqa: E402
 
 BASE = "/root/testdata/sf0.1"
 OUT = "/tmp/spark_graft_skew"
@@ -172,76 +171,46 @@ def build(spark, variant: str) -> str:
     return out_dir
 
 
-def max_task_ms(spark, seen: set) -> float:
-    """MAX single-task duration (ms) over completed stages not yet in
-    ``seen`` — the honest hot-task ceiling: wall-clock flatness at
-    sf0.1 can hide a straggler absorbed by 32 idle slots, but the
-    longest task cannot hide. Reads the stage list + per-stage
-    taskSummary(quantiles=1.0) from the UI REST API immediately after
-    each run (stage eviction only bites long-lived polls; per-run
-    deltas are fetched while the stages are fresh)."""
-    import json as _json
-    import urllib.request
-
-    base = spark.sparkContext.uiWebUrl
-    app = spark.sparkContext.applicationId
-    mx = 0.0
-    try:
-        with urllib.request.urlopen(f"{base}/api/v1/applications/{app}/stages?status=COMPLETE") as r:
-            stages = _json.load(r)
-        for st in stages:
-            key = (st["stageId"], st["attemptId"])
-            if key in seen:
-                continue
-            seen.add(key)
-            url = f"{base}/api/v1/applications/{app}/stages/{key[0]}/{key[1]}/taskSummary?quantiles=1.0"
-            with urllib.request.urlopen(url) as r:
-                ts = _json.load(r)
-            mx = max(mx, float(ts.get("duration", [0.0])[0]))
-    except Exception:  # noqa: BLE001 — metrics are best-effort
-        return float("nan")
-    return mx
+#: hot variant → its (column label, ratio label) in the SCALE.md table
+LABELS = {"skewed": ("skewed", "skew"), "hot_text": ("hot-text", "hot")}
 
 
-def text_main(spark) -> None:
-    """The hot-CONTENT-key leg (r16, ADVICE r15): uniform vs hot_text
-    on the three window-statistic text operators. Separate from the
-    join/window-key table so its rows stay comparable round to round."""
-    from lakehouse_architecture_transaction_spark.operators.dedup import release_persisted
-    from tools.scale_probe import shuffle_write_bytes
+def probe(spark, names: list[str], hot: str, block: str) -> None:
+    """Run each query of ``names`` min-of-3 on the uniform layout and on
+    the ``hot`` one, print one line per query and the SCALE.md table,
+    and with --update-md write the table into SCALE.md's ``block``.
 
-    dirs = {v: build(spark, v) for v in ("uniform", "hot_text")}
-    seen_stages: set = set()
-    max_task_ms(spark, seen_stages)  # absorb warmup/build stages
+    The max-task column is the MAX single-task duration over a cell's
+    runs — the honest hot-task ceiling: wall-clock flatness at sf0.1
+    can hide a straggler absorbed by 32 idle slots, but the longest
+    task cannot hide."""
+    dirs = {v: build(spark, v) for v in ("uniform", hot)}
+    ui = SparkUI(spark)
+    ui.new_stages()  # absorb warmup/build stages
     rows = []
-    for name in TEXT_PROBES:
+    for name in names:
         t, sh, mt = {}, {}, {}
         for v, d in dirs.items():
-            best = float("inf")
-            s0 = shuffle_write_bytes(spark)
-            for _ in range(3):
-                t0 = time.perf_counter()
-                force_full_result(REGISTRY[name].fn(spark, d))
-                best = min(best, time.perf_counter() - t0)
-                release_persisted()
-            s1 = shuffle_write_bytes(spark)
-            sh[v] = (s1 - s0) / 3 / 1e6 if s0 >= 0 and s1 >= 0 else float("nan")
-            t[v] = best
-            mt[v] = max_task_ms(spark, seen_stages) / 1e3
-        ratio = t["hot_text"] / t["uniform"] if t["uniform"] else float("nan")
-        mratio = mt["hot_text"] / mt["uniform"] if mt["uniform"] else float("nan")
+            s0 = ui.shuffle_write_bytes()
+            t[v] = min(timed_run(spark, name, d) for _ in range(3))
+            sh[v] = (ui.shuffle_write_bytes() - s0) / 3 / 1e6
+            mt[v] = max((ui.max_task_ms(st) for st in ui.new_stages()), default=0.0) / 1e3
+        ratio = t[hot] / t["uniform"] if t["uniform"] else float("nan")
+        mratio = mt[hot] / mt["uniform"] if mt["uniform"] else float("nan")
         rows.append(
-            (name, t["uniform"], t["hot_text"], ratio, sh["uniform"], sh["hot_text"],
-             mt["uniform"], mt["hot_text"], mratio)
+            (name, t["uniform"], t[hot], ratio, sh["uniform"], sh[hot],
+             mt["uniform"], mt[hot], mratio)
         )
         print(
             f"{name:32s} uniform={t['uniform']:.2f}s/{sh['uniform']:.1f}MB "
-            f"hot_text={t['hot_text']:.2f}s/{sh['hot_text']:.1f}MB ratio={ratio:.1f}x "
-            f"maxtask={mt['uniform']:.2f}s->{mt['hot_text']:.2f}s ({mratio:.1f}x)",
+            f"{hot}={t[hot]:.2f}s/{sh[hot]:.1f}MB ratio={ratio:.1f}x "
+            f"maxtask={mt['uniform']:.2f}s->{mt[hot]:.2f}s ({mratio:.1f}x)",
             flush=True,
         )
+    label, short = LABELS[hot]
     lines = [
-        "| query | uniform (s · MB) | hot-text (s · MB) | time hot/uniform | max task (s) u→h | max-task ratio |",
+        f"| query | uniform (s · MB) | {label} (s · MB) | time {short}/uniform "
+        f"| max task (s) u→{hot[0]} | max-task ratio |",
         "|---|---|---|---|---|---|",
     ]
     for name, u, s, r, su, ss, mu, ms, mr in rows:
@@ -252,75 +221,27 @@ def text_main(spark) -> None:
     table = "\n".join(lines)
     print(table)
     if "--update-md" in sys.argv:
-        _write_block("SKEW-PROBE-TEXT", table)
-        print("SCALE.md updated (text block)")
+        _write_block(block, table)
+        print(f"SCALE.md updated ({block})")
 
 
 def main() -> None:
     spark = get_spark("skew-probe", cpus=int(os.environ.get("SPARK_GRAFT_CPUS", "32")), ui=True)
-    REGISTRY["q1_pricing_summary"].fn(spark, BASE).count()  # warmup
+    warm_up(spark, BASE)
     if "--text-only" in sys.argv:
-        text_main(spark)
-        return
-    dirs = {v: build(spark, v) for v in ("uniform", "skewed")}
-
-    from lakehouse_architecture_transaction_spark.operators.dedup import release_persisted
-
-    from tools.scale_probe import shuffle_write_bytes
-
-    seen_stages: set = set()
-    max_task_ms(spark, seen_stages)  # baseline: absorb warmup/build stages
-
-    rows = []
-    for name in PROBES:
-        t, sh, mt = {}, {}, {}
-        for v, d in dirs.items():
-            best = float("inf")
-            s0 = shuffle_write_bytes(spark)
-            for _ in range(3):
-                t0 = time.perf_counter()
-                force_full_result(REGISTRY[name].fn(spark, d))
-                best = min(best, time.perf_counter() - t0)
-                release_persisted()
-            s1 = shuffle_write_bytes(spark)
-            sh[v] = (s1 - s0) / 3 / 1e6 if s0 >= 0 and s1 >= 0 else float("nan")
-            t[v] = best
-            # max over the 3 runs' stages: the per-task ceiling
-            mt[v] = max_task_ms(spark, seen_stages) / 1e3
-        ratio = t["skewed"] / t["uniform"] if t["uniform"] else float("nan")
-        mratio = mt["skewed"] / mt["uniform"] if mt["uniform"] else float("nan")
-        rows.append(
-            (name, t["uniform"], t["skewed"], ratio, sh["uniform"], sh["skewed"],
-             mt["uniform"], mt["skewed"], mratio)
-        )
-        print(
-            f"{name:32s} uniform={t['uniform']:.2f}s/{sh['uniform']:.1f}MB "
-            f"skewed={t['skewed']:.2f}s/{sh['skewed']:.1f}MB ratio={ratio:.1f}x "
-            f"maxtask={mt['uniform']:.2f}s->{mt['skewed']:.2f}s ({mratio:.1f}x)",
-            flush=True,
-        )
-
-    lines = [
-        "| query | uniform (s · MB) | skewed (s · MB) | time skew/uniform | max task (s) u→s | max-task ratio |",
-        "|---|---|---|---|---|---|",
-    ]
-    for name, u, s, r, su, ss, mu, ms, mr in rows:
-        lines.append(
-            f"| `{name}` | {u:.2f} · {su:.1f} | {s:.2f} · {ss:.1f} | {r:.1f}× "
-            f"| {mu:.2f} → {ms:.2f} | {mr:.1f}× |"
-        )
-    table = "\n".join(lines)
-    print(table)
-    if "--update-md" in sys.argv:
-        _write_block("SKEW-PROBE", table)
-        print("SCALE.md updated")
+        probe(spark, TEXT_PROBES, "hot_text", "SKEW-PROBE-TEXT")
+    else:
+        probe(spark, PROBES, "skewed", "SKEW-PROBE")
+    spark.stop()
 
 
 def _write_block(name: str, table: str) -> None:
-    """Replace the table between SCALE.md's ``<!-- {name}:BEGIN -->`` and
-    ``<!-- {name}:END -->`` markers. The markers wrap only the table: the
-    prose that explains it lives once in SCALE.md, outside them, so a
-    hand edit to it survives every rerun."""
+    """Replace the text between SCALE.md's ``<!-- {name}:BEGIN -->`` and
+    ``<!-- {name}:END -->`` markers. The markers wrap only what a run
+    measures (the table, plus scale_probe's ``local[N]`` line): the prose
+    that explains it lives once in SCALE.md, outside them, so a hand
+    edit to it survives every rerun. The one writer of SCALE.md blocks
+    for both probes."""
     path = os.path.join(os.path.dirname(os.path.dirname(os.path.abspath(__file__))), "SCALE.md")
     begin, end = f"<!-- {name}:BEGIN -->", f"<!-- {name}:END -->"
     txt = open(path).read()
